@@ -19,4 +19,10 @@ re-expresses the entire surface Spark-first:
                    materialize with latest-per-key upsert semantics.
 """
 
+from .dist import guard_worker_zip_imports
+
 __version__ = "0.1.0"
+
+# inside a Spark Python worker: stop every task re-reading the worker's
+# zip/jar directories (dist.py); a no-op on the driver
+guard_worker_zip_imports()

@@ -4594,20 +4594,22 @@ def rake_event_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are its own census rows, the odd half's margins are integer sums
     # of its census counts (sums of cell counts == the margin counts,
     # bit-identical BIGINTs). Unfused this scanned events three times
-    # (cells + each margin); the census is |types|x7x2 rows, pinned.
+    # (cells + each margin); the census is |types|x7x3 rows, pinned.
+    # The halves are parity 0 and parity 1, as in the oracle: a negative
+    # odd id has parity -1 and belongs to neither.
     grid = (
         events.groupBy(
             F.col("event_type").alias("r"),
             F.weekday("ts").cast("long").alias("c"),
-            (F.col("event_id") % 2 == 0).alias("in_base"),
+            (F.col("event_id") % 2).alias("parity"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=False)
     )
-    cells = grid.filter(F.col("in_base")).select(
+    cells = grid.filter(F.col("parity") == 0).select(
         "r", "c", (F.col("n") * 1000000).cast("long").alias("w_micro")
     )
-    cur = grid.filter(~F.col("in_base"))
+    cur = grid.filter(F.col("parity") == 1)
     row_t = cur.groupBy("r").agg((F.sum("n") * 1000000).cast("long").alias("t"))
     col_t = cur.groupBy("c").agg((F.sum("n") * 1000000).cast("long").alias("t"))
     out = ipf_rake_2d(cells, row_t, col_t, rounds=6)

@@ -34,6 +34,8 @@ any executor.
 from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
+from functools import reduce
+from operator import xor
 
 # ITU-R M.1371 Table 45 navigation status (spellings per the enum names
 # the pipeline's fixtures/oracles use; index = wire value).
@@ -99,11 +101,20 @@ def val_to_armor_char(v: int) -> str:
     return chr(v + 48) if v < 40 else chr(v + 56)
 
 
+# armor char -> its 6-bit value as two octal digits: ``str.translate``
+# then one ``int(_, 8)`` unarmors a whole payload without a Python call
+# per char. Chars outside the alphabet stay one char wide, so a short
+# result is exactly "some char was not armor".
+_ARMOR_OCTAL = {o: f"{armor_char_to_val(chr(o)):02o}" for o in (*range(48, 88), *range(96, 120))}
+
+
 def payload_to_bits(payload: str, fill_bits: int = 0) -> tuple[int, int]:
     """(value, n_bits) of the unarmored payload, dropping fill bits."""
-    value = 0
-    for c in payload:
-        value = (value << 6) | armor_char_to_val(c)
+    octal = payload.translate(_ARMOR_OCTAL)
+    if len(octal) != 2 * len(payload):
+        for c in payload:
+            armor_char_to_val(c)  # raises ValueError naming the first bad char
+    value = int(octal, 8) if payload else 0
     n = 6 * len(payload) - fill_bits
     return value >> fill_bits if fill_bits else value, n
 
@@ -241,10 +252,12 @@ def decode_payload(payload: str, fill_bits: int = 0) -> dict | None:
 
 
 def nmea_checksum(body: str) -> str:
-    x = 0
-    for c in body:
-        x ^= ord(c)
-    return f"{x:02X}"
+    """XOR of the body's code points as two hex digits."""
+    try:
+        codes = body.encode("latin-1")  # bytes == code points, no per-char call
+    except UnicodeEncodeError:
+        codes = map(ord, body)
+    return f"{reduce(xor, codes, 0):02X}"
 
 
 def parse_sentence(line: str) -> dict | None:

@@ -68,6 +68,17 @@ def _read_range(path: str, start: int, end: int):
                 yield i, raw.decode("utf-8", errors="replace").rstrip("\r\n")
 
 
+def _guard_zip_imports() -> None:
+    """Importing the package inside a Spark worker installs its zip guard
+    (``dist.guard_worker_zip_imports``). This module is pickled by value
+    and imports nothing from the package, so the reader asks for it; an
+    executor without the package shipped just keeps the per-task re-read."""
+    try:
+        import redpanda_ais_demo_spark  # noqa: F401
+    except ImportError:
+        pass
+
+
 def _split(path: str, start: int, end: int, n: int) -> list[_LineRange]:
     total = end - start
     n = max(1, min(n, total)) if total else 1
@@ -99,6 +110,7 @@ class NMEAReplayStreamReader(DataSourceStreamReader):
         return _split(self.path, start["line"], end["line"], self.num_partitions)
 
     def read(self, partition: _LineRange):
+        _guard_zip_imports()
         yield from _read_range(partition.path, partition.start, partition.end)
 
     def commit(self, end):
@@ -114,6 +126,7 @@ class NMEAReplayBatchReader(DataSourceReader):
         return _split(self.path, 0, _count_lines(self.path), self.num_partitions)
 
     def read(self, partition: _LineRange):
+        _guard_zip_imports()
         yield from _read_range(partition.path, partition.start, partition.end)
 
 

@@ -10,18 +10,22 @@ Re-expresses lib/consumer-and-producer-enrich-position-with-weather.py
 
 The reference does one HTTPS round-trip per record, sequentially
 (throughput ceiling 0.28 ev/s, BASELINE.md). Here the lookup is
-vectorized per Arrow batch with an executor-local LRU keyed on rounded
-(lat, lon) — at 0.1° the Norwegian coast collapses to a few hundred keys,
-so nearly all lookups are cache hits; a token-bucket limiter honors the
-1000 req/hr quota per executor (ST7). The fetch function is injectable:
-tests use a deterministic stub; production would use an HTTP session per
-executor (created lazily inside the kernel — never pickled).
+vectorized per Arrow batch with an LRU keyed on rounded (lat, lon) — at
+0.1° the Norwegian coast collapses to a few hundred keys, so nearly all
+lookups are cache hits — and a token-bucket limiter for the 1000 req/hr
+quota (ST7). Both live in the Python worker process and are shared by
+every task and micro-batch of one enrich stage that lands there; an
+executor runs one such process per concurrently running task, so the
+quota applies per worker process. The fetch function is injectable:
+tests use a deterministic stub; production would use an HTTP connection
+per worker process (created lazily inside the kernel — never pickled).
 """
 
 from __future__ import annotations
 
 import json
 import time
+import uuid
 from collections import OrderedDict
 from collections.abc import Callable, Iterator
 
@@ -36,7 +40,7 @@ FetchFn = Callable[[float, float], str]
 # Per-process connection cache for http_weather_fetch: keyed by netloc so
 # every worker process keeps ONE persistent connection per weather host
 # (the reference's module-global requests.Session, lib/weather.py:8-16,
-# re-expressed per executor). Module-level on purpose — the fetch closure
+# re-expressed per worker process). Module-level on purpose — the fetch closure
 # then captures only strings and stays picklable into the kernel.
 _HTTP_CONNS: dict[tuple[str, str], object] = {}
 
@@ -117,7 +121,8 @@ def stub_weather_fetch(lat: float, lon: float) -> str:
 
 
 class _TokenBucket:
-    """Per-executor rate limiter (ST7: 1000 req/hr quota, README.md:50)."""
+    """Rate limiter (ST7: 1000 req/hr quota, README.md:50), one per
+    kernel per worker process."""
 
     def __init__(self, per_hour: int):
         self.capacity = float(per_hour)
@@ -136,6 +141,27 @@ class _TokenBucket:
             time.sleep(min(1.0, (1 - self.tokens) / self.rate))
 
 
+# Kernel state per worker process: kernel token -> (LRU, token bucket).
+# Spark unpickles the kernel closure afresh for every task, so state held
+# in the closure would start empty (and with a full quota) on each one;
+# held here under the token minted when the kernel is built, it spans
+# every task and micro-batch of that kernel in this process. Bounded:
+# the least recently used kernels' state goes first.
+_KERNEL_STATE: OrderedDict[str, tuple[OrderedDict, _TokenBucket | None]] = OrderedDict()
+_KERNEL_STATE_MAX = 16
+
+
+def _kernel_state(token: str, max_per_hour: int | None) -> tuple[OrderedDict, _TokenBucket | None]:
+    state = _KERNEL_STATE.get(token)
+    if state is None:
+        state = _KERNEL_STATE[token] = (OrderedDict(), _TokenBucket(max_per_hour) if max_per_hour else None)
+        if len(_KERNEL_STATE) > _KERNEL_STATE_MAX:
+            _KERNEL_STATE.popitem(last=False)
+    else:
+        _KERNEL_STATE.move_to_end(token)
+    return state
+
+
 def weather_lookup_kernel(
     fetch: FetchFn,
     cache_size: int = 4096,
@@ -144,15 +170,16 @@ def weather_lookup_kernel(
 ):
     """Build the mapInPandas kernel: adds a ``wx_raw`` JSON column.
 
-    The LRU cache and limiter live in the closure — one instance per
-    Python worker process, shared across batches (the executor-local
+    Each build mints a token; every copy of the kernel Spark unpickles
+    in one Python worker process (one per task) looks up the same LRU
+    cache and limiter under it (``_KERNEL_STATE``) — the worker-local
     singleton pattern, replacing the reference's process-global
-    connection singleton at lib/weather.py:8-16).
+    connection singleton at lib/weather.py:8-16.
     """
-    cache: OrderedDict[tuple[float, float], str] = OrderedDict()
-    bucket = _TokenBucket(max_per_hour) if max_per_hour else None
+    token = uuid.uuid4().hex
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache, bucket = _kernel_state(token, max_per_hour)
         for pdf in batches:
             keys = list(
                 zip(

@@ -1700,6 +1700,45 @@ def test_ipf_rake_converges_margins_to_targets(spark):
         ipf_rake_2d(cells, rt, ct, rounds=0)
 
 
+def test_rake_event_weights_excludes_negative_odd_ids_like_oracle(spark, tmp_path):
+    """The rake's odd half is ``event_id % 2 = 1``, which a negative odd
+    id (-1 % 2 = -1) is not: it belongs to neither half, in Spark as in
+    the DuckDB oracle. Negative odd rows here would shift the targets."""
+    import datetime
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from redpanda_ais_demo_spark.plans.registry import REGISTRY, _load_all
+
+    from .oracle_utils import assert_frames_match
+
+    day = datetime.datetime(2024, 5, 6, 12)  # a Monday, noon
+    rows = []
+    for i in range(40):  # ids 0..39: both halves on two types x two days
+        rows.append((i, "view" if i % 3 else "click", day + datetime.timedelta(days=(i // 2) % 2)))
+    for i in range(-1, -40, -2):  # negative odd ids, all (click, Tuesday)
+        rows.append((i, "click", day + datetime.timedelta(days=1)))
+    ids, types, ts = zip(*rows)
+    table = pa.table(
+        {
+            "event_id": pa.array(ids, pa.int64()),
+            "event_type": pa.array(types, pa.string()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+        }
+    )
+    path = os.path.join(tmp_path, "events.parquet")
+    pq.write_table(table, path)
+    _load_all()
+    q = REGISTRY["rake_event_weights"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(q.oracle).df()
+    assert_frames_match(q.fn(spark, str(tmp_path)).toPandas(), want, "rake_event_weights")
+
+
 def test_paa_correlation_pairs_finds_comoving_series(spark):
     import datetime
 

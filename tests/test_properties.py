@@ -8,11 +8,13 @@ max_examples; pure-numpy properties run at full example counts.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from redpanda_ais_demo_spark.operators import dedup
+from redpanda_ais_demo_spark.sources import ais_codec
 from redpanda_ais_demo_spark.streaming.stateful import haversine_km
 
 # --- pure-python properties (fast, many examples) ---------------------------
@@ -33,6 +35,48 @@ def test_haversine_symmetric_and_bounded(lat1, lon1, lat2, lon2):
     b = haversine_km(np.array([lat2]), np.array([lon2]), np.array([lat1]), np.array([lon1]))[0]
     assert a == b >= 0.0
     assert a <= 20038.0  # half the equatorial circumference (antipodal max)
+
+
+# The codec's per-char loops, kept as references for its faster forms
+# (one C-level pass: reduce over bytes, translate + one int(_, 8)).
+
+
+def _xor_checksum(body):
+    x = 0
+    for c in body:
+        x ^= ord(c)
+    return f"{x:02X}"
+
+
+def _unarmor(payload, fill_bits):
+    value = 0
+    for c in payload:
+        value = (value << 6) | ais_codec.armor_char_to_val(c)
+    return value >> fill_bits if fill_bits else value, 6 * len(payload) - fill_bits
+
+
+_ARMOR = "".join(ais_codec.val_to_armor_char(v) for v in range(64))
+# non-armor chars, including those int(_, 8) would accept or skip
+_NOT_ARMOR = "XYZ[\\]^_ +-\t\n\x00\xe9\u20ac"
+
+
+@given(st.text(max_size=100))
+def test_nmea_checksum_matches_per_char_xor(body):
+    assert ais_codec.nmea_checksum(body) == _xor_checksum(body)
+
+
+@given(
+    st.one_of(st.text(alphabet=_ARMOR, max_size=80), st.text(alphabet=_ARMOR + _NOT_ARMOR, max_size=12)),
+    st.integers(min_value=0, max_value=5),
+)
+def test_payload_to_bits_matches_per_char_reference(payload, fill_bits):
+    try:
+        want = _unarmor(payload, fill_bits)
+    except ValueError:
+        with pytest.raises(ValueError, match="invalid AIS armor char"):
+            ais_codec.payload_to_bits(payload, fill_bits)
+    else:
+        assert ais_codec.payload_to_bits(payload, fill_bits) == want
 
 
 # --- Spark-backed properties (few examples, one job each) -------------------

@@ -186,31 +186,53 @@ def test_replayable_pipeline_exactly_once_across_restart(spark, tmp_path):
     assert total == 60
 
 
-def test_weather_cache_hits(spark):
-    """U1 caching: repeated positions at the same rounded coordinates hit
-    the executor-local LRU — the fetch fn fires once per distinct key."""
-    calls = []
+# fetches seen by _counting_fetch; module-level so every unpickled copy of
+# a kernel calls the same function (cloudpickle pickles it by reference)
+_FETCHES: list[tuple[float, float]] = []
 
-    def counting_fetch(lat, lon):
-        calls.append((lat, lon))
-        return enrich.stub_weather_fetch(lat, lon)
 
-    rows = [("1", "X", 1, {"lat": 60.14, "lon": 5.11}, 10, 10)] * 50 + [
-        ("2", "X", 2, {"lat": 61.0, "lon": 6.0}, 11, 20)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "mmsi string, status string, timestamp long, location struct<lat:double,lon:double>, speed int, heading int",
-    ).coalesce(1)
-    out = enrich.enrich_with_weather(df, fetch=counting_fetch)
-    assert out.count() == 51
-    # NB: the kernel runs on an executor; `calls` only observes appends when
-    # the closure executes in-process. With local-mode Python workers the
-    # list is per-worker, so assert via a side channel instead: distinct
-    # rounded keys == 2 means at most 2 fetches were *needed*; the real
-    # assertion is that output rows for identical keys are identical.
-    vals = out.filter(F.col("mmsi") == "1").select("locale", "temp_f").distinct().collect()
-    assert len(vals) == 1
+def _counting_fetch(lat, lon):
+    _FETCHES.append((lat, lon))
+    return enrich.stub_weather_fetch(lat, lon)
+
+
+def test_weather_cache_hits():
+    """U1 caching across tasks: Spark unpickles the kernel afresh for
+    every task, and tasks of one query share a Python worker process.
+    Two unpickled copies in one process (two tasks) must share one LRU —
+    the fetch fires once per distinct rounded key — and one rate limiter."""
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    _FETCHES.clear()
+    before = set(enrich._KERNEL_STATE)
+    blob = cloudpickle.dumps(enrich.weather_lookup_kernel(_counting_fetch, max_per_hour=1000))
+    task1, task2 = cloudpickle.loads(blob), cloudpickle.loads(blob)
+
+    def batch(coords):
+        return pd.DataFrame({"lat": [c[0] for c in coords], "lon": [c[1] for c in coords]})
+
+    out1 = pd.concat(task1(iter([batch([(60.14, 5.11)] * 50 + [(61.0, 6.0)])])))
+    out2 = pd.concat(task2(iter([batch([(60.12, 5.14), (61.0, 6.0), (62.0, 7.0)])])))
+    assert _FETCHES == [(60.1, 5.1), (61.0, 6.0), (62.0, 7.0)]
+    assert out1["wx_raw"].nunique() == 2 and len(out1) == 51
+    assert list(out2["wx_raw"]) == [out1["wx_raw"][0], out1["wx_raw"][50], enrich.stub_weather_fetch(62.0, 7.0)]
+    # one state entry for both copies: one cache, one bucket that paid
+    # for exactly the three fetches (refill adds ~0.28 tokens/s)
+    (token,) = set(enrich._KERNEL_STATE) - before
+    _, bucket = enrich._KERNEL_STATE[token]
+    assert 2.5 < bucket.capacity - bucket.tokens <= 3
+
+
+def test_weather_kernel_state_is_bounded():
+    """Every enrich build mints a kernel; a long-lived worker keeps the
+    state of only the most recently used ones."""
+    import pandas as pd
+
+    for _ in range(enrich._KERNEL_STATE_MAX + 5):
+        kernel = enrich.weather_lookup_kernel(enrich.stub_weather_fetch)
+        list(kernel(iter([pd.DataFrame({"lat": [60.0], "lon": [5.0]})])))
+    assert len(enrich._KERNEL_STATE) == enrich._KERNEL_STATE_MAX
 
 
 def test_http_weather_fetch_against_local_server(spark):

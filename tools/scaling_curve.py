@@ -320,12 +320,12 @@ def main() -> None:
     ]
     # preserve marker-fenced sections other tools/rounds maintain on
     # their own cadence (skew_stress's adversarial-density fixture, the
-    # r11 ntile-strategy comparison): regenerating the main table must
-    # not drop them
+    # r11 ntile-strategy comparison, the Python-hop fixed cost):
+    # regenerating the main table must not drop them
     out = "\n".join(lines)
     if os.path.exists(path):
         old = open(path).read()
-        for tag in ("skew-stress", "ntile-strategy", "paa-output"):
+        for tag in ("skew-stress", "ntile-strategy", "paa-output", "python-hop"):
             b, e = f"<!-- {tag}:begin -->", f"<!-- {tag}:end -->"
             if b in old and e in old:
                 kept = old.split(b)[1].split(e)[0]
