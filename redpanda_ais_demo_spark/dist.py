@@ -34,10 +34,11 @@ _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _PKG_NAME = os.path.basename(_PKG_DIR)
 _MARKER = "_redpanda_ais_demo_spark_shipped"
 
-# archive path -> ((st_ino, st_mtime_ns, st_size) before the read, the
-# directory that read returned); one entry per archive, shared by every
-# zipimporter on it (a package inside a zip gets an importer per subdir)
-_ZIP_READS: dict[str, tuple[tuple[int, int, int] | None, dict]] = {}
+# archive path -> (st_ino, st_mtime_ns, st_size) taken before its last
+# directory read; the read itself stays in zipimport._zip_directory_cache,
+# shared by every zipimporter on the archive (a package inside a zip gets
+# an importer per subdir)
+_ZIP_STAMPS: dict[str, tuple[int, int, int]] = {}
 
 
 def _archive_stamp(path: str) -> tuple[int, int, int] | None:
@@ -48,28 +49,37 @@ def _archive_stamp(path: str) -> tuple[int, int, int] | None:
     return st.st_ino, st.st_mtime_ns, st.st_size
 
 
+def _rereads_eagerly(invalidate_caches) -> bool:
+    """Whether this ``zipimporter.invalidate_caches`` re-reads the whole
+    directory into ``self._files``, as CPython 3.11's does. Later ones
+    (gh-103200) only drop the ``_zip_directory_cache`` entry and read
+    lazily on the next lookup: nothing to skip, and no ``_files``."""
+    return "_files" in invalidate_caches.__code__.co_names
+
+
 def install_zip_guard() -> bool:
     """Make ``zipimporter.invalidate_caches`` skip the central-directory
     re-read when the archive's (inode, mtime, size) is unchanged since
     its last read; a changed, missing or unreadable archive goes through
     the original. Importers on one archive share the read, so an
     importer created before a rewrite picks up the new directory.
-    Written against CPython 3.11's ``zipimport``, whose
-    ``invalidate_caches`` re-reads eagerly into ``self._files``.
+    Installs nothing where the original does not re-read eagerly.
     Idempotent; returns whether this call installed it."""
     cls = zipimport.zipimporter
     original = cls.invalidate_caches
-    if getattr(original, "_skips_unchanged", False):
+    if getattr(original, "_skips_unchanged", False) or not _rereads_eagerly(original):
         return False
 
     def invalidate_caches(self):
         stamp = _archive_stamp(self.archive)
-        last = _ZIP_READS.get(self.archive)
-        if stamp is not None and last is not None and last[0] == stamp:
-            self._files = last[1]
-            return
+        if stamp is not None and _ZIP_STAMPS.get(self.archive) == stamp:
+            files = zipimport._zip_directory_cache.get(self.archive)
+            if files is not None:
+                self._files = files
+                return
         original(self)
-        _ZIP_READS[self.archive] = (stamp, self._files)
+        if stamp is not None:
+            _ZIP_STAMPS[self.archive] = stamp
 
     invalidate_caches._skips_unchanged = True
     cls.invalidate_caches = invalidate_caches

@@ -62,7 +62,6 @@ def decode_nmea(lines: DataFrame) -> DataFrame:
     preserve adjacency within a range).
     """
     import pandas as pd
-    from pyspark.sql import types as T
 
     from ..dist import ensure_shipped
     from ..schemas import AIS_DECODED
@@ -70,13 +69,6 @@ def decode_nmea(lines: DataFrame) -> DataFrame:
     ensure_shipped(lines.sparkSession)
 
     fields = [f.name for f in AIS_DECODED.fields]
-    # native path: one typed array per output column (nullable numbers as
-    # float64 with NaN, the dtype pandas infers from a None-holding column;
-    # Arrow casts it to the schema's int/double with nulls)
-    columns = [
-        (f.name, object if isinstance(f.dataType, T.StringType) else "float64" if f.nullable else "int64")
-        for f in AIS_DECODED.fields
-    ]
     use_pyais = pyais_available()
 
     def kernel(batches):
@@ -108,16 +100,15 @@ def decode_nmea(lines: DataFrame) -> DataFrame:
         else:
             from itertools import islice
 
-            import numpy as np
-
             from . import ais_codec
 
             def all_lines():
                 for pdf in batches:
                     yield from pdf["nmea"]
 
+            # decode_lines yields complete AIS_DECODED dicts: no per-row copy
             msgs = ais_codec.decode_lines(all_lines())
             while chunk := list(islice(msgs, 10_000)):
-                yield pd.DataFrame({f: np.array([m[f] for m in chunk], dtype=dt) for f, dt in columns})
+                yield pd.DataFrame(chunk, columns=fields)
 
     return lines.mapInPandas(kernel, AIS_DECODED)

@@ -16,7 +16,11 @@ lookups are cache hits — and a token-bucket limiter for the 1000 req/hr
 quota (ST7). Both live in the Python worker process and are shared by
 every task and micro-batch of one enrich stage that lands there; an
 executor runs one such process per concurrently running task, so the
-quota applies per worker process. The fetch function is injectable:
+quota applies per worker process. Errors that a retry may not repeat
+(transport failures, 429, 5xx) are kept for one task only, so a passing
+outage does not drop a cell's positions for the rest of the pipeline;
+the API's fixed answers (e.g. 1006 no matching location) are cached
+like any other response. The fetch function is injectable:
 tests use a deterministic stub; production would use an HTTP connection
 per worker process (created lazily inside the kernel — never pickled).
 """
@@ -162,6 +166,19 @@ def _kernel_state(token: str, max_per_hour: int | None) -> tuple[OrderedDict, _T
     return state
 
 
+def _is_transient_error(resp: str) -> bool:
+    """Whether ``resp`` is an error answer a later fetch may not repeat:
+    the transport (-1), rate-limit (429) and server (5xx) codes that
+    ``http_weather_fetch`` reports."""
+    if '"error"' not in resp:
+        return False
+    try:
+        code = json.loads(resp)["error"]["code"]
+    except (ValueError, KeyError, TypeError):
+        return False
+    return isinstance(code, int) and (code in (-1, 429) or 500 <= code < 600)
+
+
 def weather_lookup_kernel(
     fetch: FetchFn,
     cache_size: int = 4096,
@@ -174,12 +191,15 @@ def weather_lookup_kernel(
     in one Python worker process (one per task) looks up the same LRU
     cache and limiter under it (``_KERNEL_STATE``) — the worker-local
     singleton pattern, replacing the reference's process-global
-    connection singleton at lib/weather.py:8-16.
+    connection singleton at lib/weather.py:8-16. A transient error
+    answers its key for the rest of the task only; the next task
+    fetches it again.
     """
     token = uuid.uuid4().hex
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache, bucket = _kernel_state(token, max_per_hour)
+        failed: dict[tuple[float, float], str] = {}
         for pdf in batches:
             keys = list(
                 zip(
@@ -193,12 +213,18 @@ def weather_lookup_kernel(
                     cache.move_to_end(k)
                     out.append(cache[k])
                     continue
+                if k in failed:
+                    out.append(failed[k])
+                    continue
                 if bucket is not None:
                     bucket.acquire()
                 resp = fetch(k[0], k[1])
-                cache[k] = resp
-                if len(cache) > cache_size:
-                    cache.popitem(last=False)
+                if _is_transient_error(resp):
+                    failed[k] = resp
+                else:
+                    cache[k] = resp
+                    if len(cache) > cache_size:
+                        cache.popitem(last=False)
                 out.append(resp)
             yield pdf.assign(wx_raw=out)
 

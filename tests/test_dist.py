@@ -36,7 +36,7 @@ def archive(tmp_path, monkeypatch):
 
     monkeypatch.setattr(zipimport, "_read_directory", counting)
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches)
-    monkeypatch.setattr(dist, "_ZIP_READS", {})
+    monkeypatch.setattr(dist, "_ZIP_STAMPS", {})
     monkeypatch.syspath_prepend(path)
     yield path, reads
     for name in ("zg_first", "zg_second"):
@@ -82,6 +82,34 @@ def test_install_twice_has_no_further_effect(archive):
     assert zipimport.zipimporter.invalidate_caches is guarded
 
 
+def test_install_skips_lazy_invalidate(monkeypatch):
+    """Newer CPython (gh-103200) only drops the cached directory in
+    ``invalidate_caches`` and reads it lazily on the next lookup; such
+    importers hold no ``_files`` for the guard to fill, so it stays out."""
+
+    def invalidate_caches(self):
+        zipimport._zip_directory_cache.pop(self.archive, None)
+
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", invalidate_caches)
+    assert dist.install_zip_guard() is False
+    assert zipimport.zipimporter.invalidate_caches is invalidate_caches
+
+
+def test_guard_falls_back_when_directory_cache_lost(archive):
+    """A skip reuses ``zipimport._zip_directory_cache``; if that entry is
+    gone, the guard reads the archive again rather than leave the
+    importer without a directory."""
+    path, reads = archive
+    import zg_first  # noqa: F401
+
+    dist.install_zip_guard()
+    importlib.invalidate_caches()
+    del reads[:]
+    zipimport._zip_directory_cache.pop(path)
+    importlib.invalidate_caches()
+    assert len(reads) == 1 and "zg_first.py" in zipimport._zip_directory_cache[path]
+
+
 def test_guard_not_installed_on_driver(spark):
     import redpanda_ais_demo_spark  # noqa: F401
 
@@ -89,34 +117,44 @@ def test_guard_not_installed_on_driver(spark):
     assert not _is_guarded()
 
 
-def test_warm_worker_tasks_read_no_zip_directory(spark):
+def test_warm_worker_tasks_read_no_zip_directory(spark, tmp_path):
     """End to end in Spark's Python workers: once a worker has imported
     the package, its later tasks read no zip central directory at all.
     Each task reports the reads its worker made since its previous task
     ended, and whether it is warm: the worker already finished two tasks
     with the guard installed (the first installs it, or the guard came
     from an earlier test; the next pays one read per archive the guard
-    had not yet seen)."""
+    had not yet seen). The read counter stays in the worker between
+    tasks; once the test has removed its ``live`` file, the counter's
+    next call puts the original ``_read_directory`` back."""
     from redpanda_ais_demo_spark.dist import ensure_shipped
 
     ensure_shipped(spark)
+    live = tmp_path / "live"
+    live.touch()
+    live_path = str(live)
 
     def kernel(batches):
+        import os
         import zipimport
 
         import pandas as pd
 
         import redpanda_ais_demo_spark  # noqa: F401  (installs the guard)
 
-        probe = getattr(zipimport, "_test_read_probe", None)
+        probe = getattr(zipimport._read_directory, "probe", None)
         if probe is None:  # [reads since the last task ended, guarded tasks done]
             read_directory = zipimport._read_directory
-            probe = zipimport._test_read_probe = [0, 0]
+            probe = [0, 0]
 
             def counting(path):
-                probe[0] += 1
+                if os.path.exists(live_path):
+                    probe[0] += 1
+                else:
+                    zipimport._read_directory = read_directory
                 return read_directory(path)
 
+            counting.probe = probe
             zipimport._read_directory = counting
         reads, warm = probe[0], probe[1] >= 2
         for _ in batches:
@@ -126,10 +164,46 @@ def test_warm_worker_tasks_read_no_zip_directory(spark):
         yield pd.DataFrame({"reads": [reads], "warm": [warm], "guarded": [guarded]})
 
     rows = []
-    for _ in range(12):
-        rows += spark.range(0, 4, numPartitions=4).mapInPandas(kernel, "reads long, warm boolean, guarded boolean").collect()
+    try:
+        for _ in range(12):
+            rows += spark.range(0, 4, numPartitions=4).mapInPandas(kernel, "reads long, warm boolean, guarded boolean").collect()
+    finally:
+        live.unlink()
     assert all(r.guarded for r in rows)
     warm = [r.reads for r in rows if r.warm]
     assert len(warm) >= 8, rows
     assert sum(warm) == 0, rows
     assert not _is_guarded()  # the driver stays unpatched
+
+
+def test_worker_read_counter_is_removed_after_the_probe(spark, tmp_path):
+    """After the probe above, a worker whose directory read runs again
+    (a zip it has not read, here a fresh one added to its ``sys.path``)
+    is back on the original ``_read_directory``."""
+    from redpanda_ais_demo_spark.dist import ensure_shipped
+
+    ensure_shipped(spark)
+    path = str(tmp_path / "fresh.zip")
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("zg_fresh.py", "VALUE = 3\n")
+
+    def kernel(batches):
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        sys.path.insert(0, path)
+        try:
+            import zg_fresh  # noqa: F401  (reads the fresh zip's directory)
+        finally:
+            sys.path.remove(path)
+            sys.modules.pop("zg_fresh", None)
+            sys.path_importer_cache.pop(path, None)
+        yield pd.DataFrame({"counting": [hasattr(zipimport._read_directory, "probe")]})
+
+    for _ in range(3):
+        rows = spark.range(0, 8, numPartitions=8).mapInPandas(kernel, "counting boolean").collect()
+        assert not any(r.counting for r in rows), rows

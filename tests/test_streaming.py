@@ -224,6 +224,46 @@ def test_weather_cache_hits():
     assert 2.5 < bucket.capacity - bucket.tokens <= 3
 
 
+_FLAKY_FAILS: set[tuple[float, float]] = set()
+
+
+def _flaky_fetch(lat, lon):
+    """Fails once per key with the transport error ``http_weather_fetch``
+    reports, then answers; (0.0, 0.0) is a fixed 1006 answer."""
+    _FETCHES.append((lat, lon))
+    if (lat, lon) == (0.0, 0.0):
+        return json.dumps({"error": {"code": 1006, "message": "No matching location found."}})
+    if (lat, lon) not in _FLAKY_FAILS:
+        _FLAKY_FAILS.add((lat, lon))
+        return json.dumps({"error": {"code": -1, "message": "timed out"}})
+    return enrich.stub_weather_fetch(lat, lon)
+
+
+def test_weather_transient_error_is_refetched_by_next_task():
+    """A transient fetch error answers its key for the rest of one task
+    only: the next task (another unpickled copy in the same process)
+    fetches it again and caches the answer. The API's fixed error answers
+    stay cached across tasks."""
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    _FETCHES.clear()
+    _FLAKY_FAILS.clear()
+    blob = cloudpickle.dumps(enrich.weather_lookup_kernel(_flaky_fetch))
+    task1, task2, task3 = (cloudpickle.loads(blob) for _ in range(3))
+    batch = pd.DataFrame({"lat": [61.0, 61.0, 0.0], "lon": [6.0, 6.0, 0.0]})
+
+    out1 = pd.concat(task1(iter([batch, batch])))
+    assert _FETCHES == [(61.0, 6.0), (0.0, 0.0)]  # once per key within the task
+    assert all(json.loads(r)["error"]["code"] == -1 for r in out1["wx_raw"][out1["lat"] == 61.0])
+    out2 = pd.concat(task2(iter([batch])))
+    assert _FETCHES == [(61.0, 6.0), (0.0, 0.0), (61.0, 6.0)]  # 1006 stays cached
+    assert list(out2["wx_raw"][:2]) == [enrich.stub_weather_fetch(61.0, 6.0)] * 2
+    assert json.loads(out2["wx_raw"][2])["error"]["code"] == 1006
+    out3 = pd.concat(task3(iter([batch])))
+    assert len(_FETCHES) == 3 and list(out3["wx_raw"]) == list(out2["wx_raw"])
+
+
 def test_weather_kernel_state_is_bounded():
     """Every enrich build mints a kernel; a long-lived worker keeps the
     state of only the most recently used ones."""
