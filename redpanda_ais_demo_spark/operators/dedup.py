@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
-from .graph import _maybe_bcast
+from .graph import _maybe_bcast, _node_set, _symmetrize
 
 
 def _parallelize(df: DataFrame) -> DataFrame:
@@ -74,8 +74,8 @@ def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
     # remaining replay is a narrow tokenize→shingle→explode map — a
     # same-JVM interleaved A/B read pin 1.188s vs no-pin 1.154s at
     # sf0.1 (same for containment_pairs), so the pins only added
-    # block-store writes. The substring-anchor A/B (r14, pin_ab.py)
-    # reached the same verdict for this frame shape: recompute narrow
+    # block-store writes. The substring-anchor A/B (r14, COVERAGE.md
+    # §2.64) reached the same verdict for this frame shape: recompute narrow
     # maps, pin only shuffle-bearing multi-ACTION frames.
     hashed = shingles.select("id", F.xxhash64("shingle").alias("sh"))
     sizes = hashed.groupBy("id").agg(F.count("*").alias("sz"))
@@ -497,7 +497,6 @@ def substring_dup_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     hash_anchors: bool = True,
-    pin: bool = False,
 ) -> DataFrame:
     """Maximal CHARACTER spans whose every ``width``-char window repeats
     elsewhere in the corpus, keep-first — the exact-substring member of
@@ -551,18 +550,14 @@ def substring_dup_spans(
     ).select("doc_id", "p", F.col("t").substr(F.col("p"), F.lit(width)).alias("g"))
     key = F.xxhash64("g") if hash_anchors else F.col("g")
     occ = anchors.select("doc_id", "p", key.alias("h"))
-    if pin:
-        # pin the anchor frame so its two consumers (keep-first aggregate
-        # + mark join) share one materialization — at the cost of holding
-        # the frame in executor block storage: 24 B/char logical, a
-        # MEASURED 78 B/char as deserialized block rows (SCALING.md
-        # substring-pin A/B), i.e. ~7.8 PB at 100 TB of text — the same
-        # order as the suffix array this operator replaces. pin=False
-        # recomputes the narrow map-side explode once per consumer: one
-        # extra scan of the doc text, zero pinned storage, measured ~9%
-        # slower at sf1 locally (5.95s vs 5.42s min-of-5, same JVM).
-        # The default follows the 100 TB math, not the 0.5s: False.
-        occ = occ.localCheckpoint(eager=False)
+    # NOT pinned: both consumers (keep-first aggregate + mark join)
+    # recompute the narrow map-side explode — one extra scan of the doc
+    # text, zero pinned storage. Pinning it measured ~9% faster at sf1
+    # locally (5.42s vs 5.95s min-of-5, same JVM) but holds the frame in
+    # executor block storage: 24 B/char logical, a MEASURED 78 B/char as
+    # deserialized block rows (COVERAGE.md §2.64), i.e. ~7.8 PB at
+    # 100 TB of text — the same order as the suffix array this operator
+    # replaces. The choice follows the 100 TB math, not the 0.5s.
     firsts = (
         occ.groupBy("h")
         .agg(
@@ -603,7 +598,6 @@ def substring_dedup_rewrite(
     id_col: str = "doc_id",
     text_col: str = "text",
     hash_anchors: bool = True,
-    pin: bool = False,
 ) -> DataFrame:
     """Rewrite every document with its repeated-substring spans CUT —
     the removal half of Lee et al. 2022's exact substring dedup, one
@@ -621,7 +615,7 @@ def substring_dedup_rewrite(
 
     Output: (doc_id, clean_text, n_spans_cut, chars_cut).
     """
-    spans = substring_dup_spans(docs, width, id_col, text_col, hash_anchors, pin)
+    spans = substring_dup_spans(docs, width, id_col, text_col, hash_anchors)
     per_doc = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("span_start", "span_len"))).alias(
             "spans"
@@ -706,21 +700,11 @@ def connected_components(
     # (for dedup_clusters: the full shingle inverted-index self-join)
     # replays per round — at diameter D that is D redundant passes over
     # pair generation. The two-phase variant pins its input the same way.
-    # Symmetrization is a single-pass inline explode, NOT
-    # edges ∪ edges.swap: a union of two selects over the same frame
-    # evaluates the pair-generation subtree TWICE before the pin (the
-    # r14 plan audit caught exactly that), while inline(array(..)) is
-    # one evaluation with a map-side ×2 fan-out.
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .select(
-            F.expr(
-                "inline(array(struct(src AS src, dst AS dst),"
-                " struct(dst AS src, src AS dst)))"
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
+    # Symmetrization is single-pass (graph._symmetrize), so the
+    # pair-generation subtree evaluates once before the pin.
+    sym = _symmetrize(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")), "src", "dst"
+    ).localCheckpoint(eager=False)
     # Init = one propagation round for free: label(x) = min(x, neighbors(x))
     # straight from the adjacency aggregation (star graphs converge here).
     labels = sym.groupBy(F.col("src").alias("node")).agg(
@@ -800,31 +784,20 @@ def connected_components_two_phase(
     ).localCheckpoint(eager=False)
     # nodes come from the UNFILTERED input: a node appearing only in
     # self-loops must still be labeled (as its own component) to keep
-    # the connected_components contract; explode(array(u, v)) reads the
-    # pinned pairs once instead of union's twice
-    nodes = (
-        raw.select(F.explode(F.array("u", "v")).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # 1-row scalar: every round's min-label side has at most one row per
-    # node, so this single count gates the per-round broadcast for the
-    # whole loop (see graph._maybe_bcast — checkpoint leaves carry no
-    # stats, auto-broadcast never fires on them)
-    n_nodes = nodes.count()
+    # the connected_components contract. Every round's min-label side
+    # has at most one row per node, so the single node count gates the
+    # per-round broadcast for the whole loop (see graph._maybe_bcast —
+    # checkpoint leaves carry no stats, auto-broadcast never fires on them)
+    nodes, n_nodes = _node_set(raw, "u", "v")
     # pinned like every later round's edge set: _large_star consumes its
     # input twice (symmetrize + min-join), which would replay round 1's
     # filter+distinct shuffle
     e = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=False)
 
     def _large_star(e: DataFrame) -> DataFrame:
-        # single-pass symmetrize (inline explode), not e ∪ e.swap — the
-        # union form re-reads the per-round pinned edge blocks twice
-        sym = e.select(
-            F.expr(
-                "inline(array(struct(u AS u, v AS v), struct(v AS u, u AS v)))"
-            )
-        )
+        # single-pass symmetrize, not e ∪ e.swap — the union form
+        # re-reads the per-round pinned edge blocks twice
+        sym = _symmetrize(e, "u", "v")
         m = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
         return (
             sym.join(_maybe_bcast(m, n_nodes), "u")

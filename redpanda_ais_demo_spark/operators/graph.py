@@ -27,38 +27,32 @@ hash-compared across engines at all.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 SCALE = 10**12
 
-
-def _vec_broadcast_limit() -> int:
-    """Row cap under which a per-round node vector is broadcast.
-
-    The iterative loops join an edge-scale pinned frame against an
-    O(|nodes|) vector every round. Both sides are ExistingRDD leaves
-    (localCheckpoint outputs) that carry no stats, so auto-broadcast
-    never fires (the bradley_terry lesson) and even AQE's runtime
-    conversion still pays the edge side's per-round shuffle WRITE
-    before it can switch strategies. An explicit hint removes that
-    write entirely — but only when the vector genuinely fits: the cap
-    is rows COUNTED at runtime (every caller already materializes a
-    1-row node-count scalar), not a guess. Default 1M rows ≈ 16-32 MB
-    serialized — modest executor overhead against two edge-scale
-    exchanges saved per round; at 100 TB node counts the count exceeds
-    the cap and every join falls back to the keyed-pin shuffle shape
-    unchanged. Env ``SPARK_GRAFT_VEC_BROADCAST_ROWS`` overrides (0
-    disables; read per call so a same-JVM A/B can toggle it).
-    """
-    return int(os.environ.get("SPARK_GRAFT_VEC_BROADCAST_ROWS", "1000000"))
+# Row cap under which a per-round node vector is broadcast.
+#
+# The iterative loops join an edge-scale pinned frame against an
+# O(|nodes|) vector every round. Both sides are ExistingRDD leaves
+# (localCheckpoint outputs) that carry no stats, so auto-broadcast
+# never fires (the bradley_terry lesson) and even AQE's runtime
+# conversion still pays the edge side's per-round shuffle WRITE
+# before it can switch strategies. An explicit hint removes that
+# write entirely — but only when the vector genuinely fits: the cap
+# is rows COUNTED at runtime (every caller already materializes a
+# 1-row node-count scalar), not a guess. 1M rows ≈ 16-32 MB
+# serialized — modest executor overhead against two edge-scale
+# exchanges saved per round; at 100 TB node counts the count exceeds
+# the cap and every join falls back to the keyed-pin shuffle shape
+# unchanged. The gate-parity tests patch this constant to 0.
+_VEC_BROADCAST_ROWS = 1_000_000
 
 
 def _maybe_bcast(df: DataFrame, n_rows: int) -> DataFrame:
     """Broadcast-hint ``df`` when its counted row bound fits the cap."""
-    return F.broadcast(df) if n_rows <= _vec_broadcast_limit() else df
+    return F.broadcast(df) if n_rows <= _VEC_BROADCAST_ROWS else df
 
 
 def _pin_on(df: DataFrame, *keys: str) -> DataFrame:
@@ -75,13 +69,13 @@ def _pin_on(df: DataFrame, *keys: str) -> DataFrame:
     list re-shuffles once per iteration — the dominant moved bytes of
     the whole loop. Cost: ONE extra edge-list shuffle at build time —
     measured WITHIN NOISE locally (−7%..+4% min-of-5 across the six
-    graph heavies, same-JVM toggled A/B via tools/prepart_ab.py,
-    COVERAGE.md §2.64). Skew: a pinned RDD's partitioning cannot be
+    graph heavies, same-JVM toggled A/B, COVERAGE.md §2.64). Skew: a
+    pinned RDD's partitioning cannot be
     re-split by AQE's skew-join optimizer (there is no exchange left to
     re-plan), but the hub's weight lands in the JOIN OUTPUT, which
     still flows through a re-balanceable exchange into the per-round
     partial agg — measured on a hub graph carrying 30% of all edges on
-    one key (tools/graph_skew_ab.py: broadcast disabled, AQE on, same
+    one key (broadcast disabled, AQE on, same
     JVM, min-of-4, two runs): keyed 7.22/7.56s vs plain 7.39/7.29s —
     parity within noise, no regression (COVERAGE.md §2.64). Only used
     where the pinned frame is consumed
@@ -91,6 +85,88 @@ def _pin_on(df: DataFrame, *keys: str) -> DataFrame:
     so it keeps plain pins.
     """
     return df.repartition(*[F.col(k) for k in keys]).localCheckpoint(eager=False)
+
+
+def _node_set(edges: DataFrame, a: str, b: str) -> tuple[DataFrame, int]:
+    """Every endpoint of ``edges`` as a pinned one-column ``node`` frame,
+    plus its row count — the 1-row driver scalar that gates every
+    per-round vector broadcast (``_maybe_bcast``). explode(array(a, b))
+    reads the edge list once where a union of the two legs reads it
+    twice; the pin is lazy, so the count is the job that fills it."""
+    nodes = (
+        edges.select(F.explode(F.array(a, b)).alias("node"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    return nodes, nodes.count()
+
+
+def _symmetrize(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Both orientations of every ``(a, b)`` row in ONE pass. A union
+    ``edges ∪ edges.swap`` of two selects over the same frame evaluates
+    the caller's edge-derivation subtree twice before any pin (the r14
+    plan audit caught exactly that); inline(array(..)) is one evaluation
+    with a map-side ×2 fan-out."""
+    return edges.select(
+        F.expr(f"inline(array(struct({a} AS {a}, {b} AS {b}), struct({b} AS {a}, {a} AS {b})))")
+    )
+
+
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Canonical undirected edge set (lo, hi) with lo < hi: orientation
+    and duplicate rows collapse, self-loops drop (a self-loop closes no
+    triangle and joins no two nodes). Pinned, because every caller
+    consumes it more than once — unpinned, the canonicalize+distinct AND
+    the caller's edge-derivation subtree replay per consumer (r14 plan
+    audit: 6 source-table scans in the modularity plan)."""
+    return (
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
+        )
+        .filter(F.col("lo") != F.col("hi"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _rank_walk(
+    e: DataFrame, vec: DataFrame, n: int, k: int, iters: int, damping_pct: int
+) -> DataFrame:
+    """The integer random walk with restart behind :func:`pagerank` and
+    :func:`personalized_pagerank`: ``r' = is_seed·base + (d% · Σ_u
+    r_u // deg_u) // 100`` with ``r0 = SCALE // k`` on each seed.
+    ``e`` is the (src, dst) edge list pinned on src, ``vec`` the pinned
+    (node, is_seed) vector of ``n`` rows and ``k`` its seed count.
+
+    Per round: one edges-vs-ranks hash join on src reusing the degree
+    join's partitioning, a partial-aggregable groupBy(dst) carrying one
+    row per node, a node-vector left join, lazy localCheckpoint lineage
+    pin."""
+    deg = e.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint(eager=False)
+    r0 = SCALE // k
+    base = ((100 - damping_pct) * r0) // 100
+    seed = F.col("is_seed").cast("long")
+    ranks = vec.select("node", (seed * F.lit(r0)).alias("rank"))
+    for _ in range(iters):
+        shares = (
+            e.join(_maybe_bcast(ranks, n), e.src == F.col("node"))
+            .join(_maybe_bcast(deg, n), "src")
+            .select("dst", F.expr("rank div deg").alias("share"))
+        )
+        s = shares.groupBy("dst").agg(F.sum("share").alias("s"))
+        ranks = (
+            vec.join(_maybe_bcast(s, n), vec.node == s.dst, "left")
+            .select(
+                "node",
+                (
+                    seed * F.lit(base)
+                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+                ).cast("long").alias("rank"),
+            )
+            .localCheckpoint(eager=False)
+        )
+    return ranks
 
 
 def pagerank(
@@ -112,7 +188,9 @@ def pagerank(
     sinks from the vector AND the mass routed to them.
 
     ``damping_pct`` is the damping factor in percent (85 = the classic
-    0.85) so the recurrence stays in exact integer arithmetic.
+    0.85) so the recurrence stays in exact integer arithmetic. This is
+    :func:`personalized_pagerank` with every node a seed (k = n); raises
+    on an empty edge list, which has no node to rank.
     """
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
@@ -126,35 +204,10 @@ def pagerank(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
         "src",
     )
-    deg = e.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.explode(F.array("src", "dst")).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = nodes.count()  # 1-row driver scalar, parameterizes the literals
-    r0 = SCALE // n
-    base = ((100 - damping_pct) * r0) // 100
-    ranks = nodes.select("node", F.lit(r0).cast("long").alias("rank"))
-    for _ in range(iters):
-        shares = (
-            e.join(_maybe_bcast(ranks, n), e.src == F.col("node"))
-            .join(_maybe_bcast(deg, n), "src")
-            .select("dst", F.expr("rank div deg").alias("share"))
-        )
-        s = shares.groupBy("dst").agg(F.sum("share").alias("s"))
-        ranks = (
-            nodes.join(_maybe_bcast(s, n), nodes.node == s.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    nodes, n = _node_set(e, "src", "dst")
+    if n == 0:
+        raise ValueError("edges is empty: no nodes to rank")
+    return _rank_walk(e, nodes.withColumn("is_seed", F.lit(1)), n, n, iters, damping_pct)
 
 
 def personalized_pagerank(
@@ -176,11 +229,8 @@ def personalized_pagerank(
 
     Same exact-integer SCALE-unit determinism contract as
     :func:`pagerank` (every update is integer multiply/floor-divide, so
-    Spark and a SQL oracle replay bit-identical BIGINTs), same
-    distributed shape (per round: one edges-vs-ranks hash join on src
-    reusing the degree join's partitioning, a partial-aggregable
-    groupBy(dst) carrying one row per node, a node-vector left join,
-    lazy localCheckpoint lineage pin). The only additions are a single
+    Spark and a SQL oracle replay bit-identical BIGINTs) and the same
+    distributed shape (``_rank_walk``). The only additions are a single
     up-front seed-flag left join folded into the node vector and a
     1-row seed count. Raises on an empty seed set — pmod-by-zero would
     otherwise yield an all-NULL vector silently.
@@ -190,48 +240,24 @@ def personalized_pagerank(
     """
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
-    e = _pin_on(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
-        "src",  # every round's ranks join + the degree join key
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint(eager=False)
-    nodes = e.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
     sd = seeds.select(F.col(seed_col).alias("node")).distinct().localCheckpoint(eager=False)
     k = sd.count()  # 1-row driver scalar, parameterizes the literals
     if k == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
-    r0 = SCALE // k
-    base = ((100 - damping_pct) * r0) // 100
+    e = _pin_on(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        "src",  # every round's ranks join + the degree join key
+    )
+    nodes, n = _node_set(e, "src", "dst")
     # fold the seed flag into the node vector once; every iteration's
-    # left join then reuses this pinned two-column table
-    nodes_f = (
+    # left join then reuses this pinned two-column table (a left join
+    # against the distinct seeds keeps the n node rows)
+    vec = (
         nodes.join(sd.withColumn("is_seed", F.lit(1)), "node", "left")
         .select("node", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
         .localCheckpoint(eager=False)
     )
-    n = nodes_f.count()  # 1-row scalar: vector size, gates the broadcast
-    ranks = nodes_f.select(
-        "node", (F.col("is_seed").cast("long") * F.lit(r0)).alias("rank")
-    )
-    for _ in range(iters):
-        shares = (
-            e.join(_maybe_bcast(ranks, n), e.src == F.col("node"))
-            .join(_maybe_bcast(deg, n), "src")
-            .select("dst", F.expr("rank div deg").alias("share"))
-        )
-        s = shares.groupBy("dst").agg(F.sum("share").alias("s"))
-        ranks = (
-            nodes_f.join(_maybe_bcast(s, n), nodes_f.node == s.dst, "left")
-            .select(
-                "node",
-                (
-                    F.col("is_seed").cast("long") * F.lit(base)
-                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    return _rank_walk(e, vec, n, k, iters, damping_pct)
 
 
 def triangle_count(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
@@ -246,12 +272,11 @@ def triangle_count(edges: DataFrame, src_col: str = "src", dst_col: str = "dst")
     join (at 100 TB, pre-partition the oriented edge list by src and
     broadcast nothing — both joins shuffle linear edge rows, and the
     ordering trick bounds the path fan-out by orienting along degree).
-    Returns a single row (n_triangles) — exact BIGINT.
+    Self-loops drop (a loop (v, v) closes no triangle; kept, it would
+    count one path v<v<c per neighbor c). Returns a single row
+    (n_triangles) — exact BIGINT.
     """
-    e = edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
-    ).distinct().localCheckpoint(eager=False)
+    e = _undirected(edges, src_col, dst_col)
     ab = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     bc = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     ac = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
@@ -363,20 +388,11 @@ def label_propagation(
     ).localCheckpoint(eager=False)
     # every endpoint of the UNFILTERED edge list — keeps self-loop-only
     # nodes in the output (parity with the CC operators, which emit
-    # (node, node) for them)
-    all_nodes = (
-        e.select(F.explode(F.array("a", "b")).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    sym = e.select(
-        F.expr("inline(array(struct(a AS a, b AS b), struct(b AS a, a AS b)))")
-    ).distinct()
+    # (node, node) for them). n bounds the label-vector size (labels ⊆
+    # all_nodes) and gates the per-round broadcast of the vector side
+    all_nodes, n = _node_set(e, "a", "b")
     # pinned partitioned on the per-round join key a — see _pin_on
-    sym = _pin_on(sym.filter(F.col("a") != F.col("b")), "a")
-    # 1-row scalar bounding the label-vector size (labels ⊆ all_nodes),
-    # gates the per-round broadcast of the vector side
-    n = all_nodes.count()
+    sym = _pin_on(_symmetrize(e, "a", "b").distinct().filter(F.col("a") != F.col("b")), "a")
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -440,19 +456,9 @@ def modularity(
     the per-community table is |communities| rows. Output one row:
     (n_communities, m_edges, modularity).
     """
-    # pinned: three consumers (within's pair join, the endpoint-degree
-    # fold, the edge-count scalar) — unpinned, the canonicalize+distinct
-    # AND the caller's edge-derivation subtree replayed three times (r14
-    # plan audit: 6 source-table scans in the modularity plan)
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # three consumers: within's pair join, the endpoint-degree fold,
+    # the edge-count scalar
+    e = _undirected(edges, src_col, dst_col)
     # pinned: three consumers (both within-join sides and the degree
     # fold) — unpinned, the caller's label derivation (a whole LPA run
     # for the declared query) replays per consumer. The count doubles
@@ -465,19 +471,19 @@ def modularity(
     n_lab = lab.count()
     within = (
         e.join(
-            _maybe_bcast(lab.select(F.col("n").alias("a"), F.col("c").alias("ca")), n_lab),
-            "a",
+            _maybe_bcast(lab.select(F.col("n").alias("lo"), F.col("c").alias("ca")), n_lab),
+            "lo",
         )
         .join(
-            _maybe_bcast(lab.select(F.col("n").alias("b"), F.col("c").alias("cb")), n_lab),
-            "b",
+            _maybe_bcast(lab.select(F.col("n").alias("hi"), F.col("c").alias("cb")), n_lab),
+            "hi",
         )
         .filter(F.col("ca") == F.col("cb"))
         .groupBy(F.col("ca").alias("c"))
         .agg(F.count(F.lit(1)).alias("m_c"))
     )
     deg = (
-        e.select(F.explode(F.array("a", "b")).alias("n"))
+        e.select(F.explode(F.array("lo", "hi")).alias("n"))
         .groupBy("n")
         .agg(F.count(F.lit(1)).alias("d"))
         .join(_maybe_bcast(lab, n_lab), "n")
@@ -609,15 +615,7 @@ def local_clustering_coefficient(
 
     Output: (node, degree, n_triangles, lcc), lcc rounded 6 dp.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src_col, dst_col)
     ab = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     bc = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     ac = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
@@ -682,13 +680,8 @@ def k_core(
         raise ValueError(f"k must be >= 1, got {k}")
     if max_rounds < 1:
         raise ValueError("max_rounds must be positive")
-    # single-pass inline symmetrize: e ∪ e.swap would evaluate the
-    # caller's edge-derivation subtree twice before the pin
     alive = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .select(
-            F.expr("inline(array(struct(a AS a, b AS b), struct(b AS a, a AS b)))")
-        )
+        _symmetrize(edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")), "a", "b")
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=False)
@@ -839,12 +832,7 @@ def hits(
     )
     e_dst = _pin_on(e_src, "dst")
     by_key = {"src": e_src, "dst": e_dst}
-    nodes = (
-        e_src.select(F.explode(F.array("src", "dst")).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = nodes.count()  # 1-row driver scalar, parameterizes the seed
+    nodes, n = _node_set(e_src, "src", "dst")  # n also parameterizes the seed
     if n == 0:
         raise ValueError("edges is empty: no nodes to score")
     h = nodes.select("node", F.lit(SCALE // n).cast("long").alias("score"))

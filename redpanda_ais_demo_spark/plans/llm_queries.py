@@ -2840,7 +2840,9 @@ def dedup_exact_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dup_graph_triangles",
     oracle=f"""
         WITH jp AS (SELECT id_a, id_b FROM ({_JACCARD_ORACLE}) j),
-        e AS (SELECT DISTINCT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi FROM jp)
+        e AS (SELECT DISTINCT lo, hi FROM (
+            SELECT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi FROM jp
+        ) o WHERE lo <> hi)
         SELECT CAST(count(*) AS BIGINT) AS n_triangles
         FROM (SELECT lo AS a, hi AS b FROM e) ab
         JOIN (SELECT lo AS b, hi AS c FROM e) bc USING (b)

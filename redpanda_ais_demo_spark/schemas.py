@@ -118,8 +118,9 @@ WEATHER_RESPONSE = T.StructType(
     ]
 )
 
-# Decoded AIS message as produced by the ingest adapter (pyais surface the
-# producer touches: lib/producer-from-ais-api.py:31-95). One row per NMEA
+# Decoded AIS message as produced by the native codec behind decode_nmea
+# (sources/ais_codec.py), mirroring the pyais surface the reference
+# producer touches (lib/producer-from-ais-api.py:31-95). One row per NMEA
 # message; fields not present for a message type are NULL.
 AIS_DECODED = T.StructType(
     [

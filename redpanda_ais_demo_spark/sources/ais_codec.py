@@ -1,15 +1,14 @@
 """Native AIVDM/AIS codec — U2 decode without the pyais dependency.
 
 The reference decodes NMEA with pyais inside the producer process
-(lib/producer-from-ais-api.py:26-27); this container doesn't ship pyais,
-so the decode stage was environment-gated. This module implements the
-subset of ITU-R M.1371 the pipeline consumes — position reports (types
-1/2/3 Class A, 18 Class B), static/voyage data (type 5), Class B static
-(type 24 A/B), and the (msg_type, mmsi) envelope of every other valid
-type (1-27; the P1 router drops them, so both decode paths present the
-same decoded-stage stream) — from the public specification (bit layout
-as documented in ITU-R M.1371-5 and the GPSd AIVDM/AIVDO protocol
-notes):
+(lib/producer-from-ais-api.py:26-27); the engine does not depend on
+pyais. This module implements the subset of ITU-R M.1371 the pipeline
+consumes — position reports (types 1/2/3 Class A, 18 Class B),
+static/voyage data (type 5), Class B static (type 24 A/B), and the
+(msg_type, mmsi) envelope of every other valid type (1-27; the P1
+router drops them, as the reference producer does) — from the public
+specification (bit layout as documented in ITU-R M.1371-5 and the GPSd
+AIVDM/AIVDO protocol notes):
 
 - NMEA sentence parse with XOR checksum validation and the optional
   receiver tag block (``\\c:<epoch>*hh\\`` prefix) the reference's feed
@@ -26,8 +25,8 @@ An ENCODER for the same layouts ships alongside: round-trip property
 tests pin encoder/decoder consistency bit-for-bit, and the encoder
 generates realistic NMEA fixtures for the transport/streaming tests.
 Decoded field names and enum spellings match the ``AIS_DECODED`` schema
-contract (schemas.py) the pyais path produces, so ``decode_nmea`` is
-drop-in either way. Everything here is pure stdlib Python — it runs in
+contract (schemas.py), the fields the reference reads off pyais
+messages. Everything here is pure stdlib Python — it runs in
 any executor.
 """
 
@@ -243,7 +242,7 @@ def decode_payload(payload: str, fill_bits: int = 0) -> dict | None:
     if 1 <= msg_type <= 27:
         # valid envelope of a type this codec doesn't field-decode: emit
         # (msg_type, mmsi) like pyais would — the P1 router drops it, so
-        # both decode paths show the same decoded-stage stream
+        # the decoded-stage stream matches the reference producer's
         return base
     return None
 

@@ -9,9 +9,8 @@ which is also what the file/Kafka ingest paths produce — so everything
 downstream (ingest.route_*) is source-agnostic.
 
 Decode runs as a mapInPandas kernel (one parser per batch, not per
-row). With ``pyais`` installed the kernel uses it for reference parity;
-otherwise the native ITU-R M.1371 codec (``sources/ais_codec.py``)
-decodes types 1/2/3/18/5 with the same AIS_DECODED output contract —
+row) over the native ITU-R M.1371 codec (``sources/ais_codec.py``),
+which decodes types 1/2/3/18/5 into the AIS_DECODED output contract —
 U2 executes in every environment.
 
 The socket source is at-most-once by nature (no offsets). For durable
@@ -23,15 +22,6 @@ exactly-once through restarts.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def pyais_available() -> bool:
-    try:
-        import pyais  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def read_nmea_socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
@@ -49,9 +39,8 @@ def read_nmea_socket_stream(spark: SparkSession, host: str, port: int) -> DataFr
 
 def decode_nmea(lines: DataFrame) -> DataFrame:
     """U2 — NMEA sentences → AIS_DECODED rows as an Arrow-batched
-    kernel. pyais when installed (reference parity, lib/producer-from-
-    ais-api.py:26-27); otherwise the native ITU-R M.1371 codec — same
-    output contract, so downstream routing is decoder-agnostic.
+    kernel over the native ITU-R M.1371 codec (the reference decodes
+    with pyais in its producer, lib/producer-from-ais-api.py:26-27).
 
     Malformed sentences drop (the producer's skip behavior). Multi-
     fragment assembly spans the WHOLE partition (one assembly buffer
@@ -69,46 +58,19 @@ def decode_nmea(lines: DataFrame) -> DataFrame:
     ensure_shipped(lines.sparkSession)
 
     fields = [f.name for f in AIS_DECODED.fields]
-    use_pyais = pyais_available()
 
     def kernel(batches):
-        if use_pyais:
-            import pyais
+        from itertools import islice
 
+        from . import ais_codec
+
+        def all_lines():
             for pdf in batches:
-                rows = []
-                for sentence in pdf["nmea"]:
-                    try:
-                        msg = pyais.decode(sentence.encode()).asdict()
-                    except Exception:
-                        continue  # malformed sentences drop
-                    rec = {f: msg.get(f) for f in fields}
-                    # pyais yields fractional knots; the reference pipes
-                    # that float into an Avro "int" field, and the Avro
-                    # writer's int cast TRUNCATES (producer-from-ais-api
-                    # .py:67 + schemas/ship-position-event.avsc "speed":
-                    # "int"). The native codec floors the raw tenths
-                    # (sog // 10) — the same value for every sentence,
-                    # since sog/10.0's float error (~1e-16) never crosses
-                    # an integer boundary. Truncate here too so both
-                    # decode paths and the reference agree exactly
-                    # (test_ais_codec.py::test_sog_rule_cross_path_parity).
-                    if rec.get("speed") is not None:
-                        rec["speed"] = int(rec["speed"])
-                    rows.append(rec)
-                yield pd.DataFrame(rows, columns=fields)
-        else:
-            from itertools import islice
+                yield from pdf["nmea"]
 
-            from . import ais_codec
-
-            def all_lines():
-                for pdf in batches:
-                    yield from pdf["nmea"]
-
-            # decode_lines yields complete AIS_DECODED dicts: no per-row copy
-            msgs = ais_codec.decode_lines(all_lines())
-            while chunk := list(islice(msgs, 10_000)):
-                yield pd.DataFrame(chunk, columns=fields)
+        # decode_lines yields complete AIS_DECODED dicts: no per-row copy
+        msgs = ais_codec.decode_lines(all_lines())
+        while chunk := list(islice(msgs, 10_000)):
+            yield pd.DataFrame(chunk, columns=fields)
 
     return lines.mapInPandas(kernel, AIS_DECODED)

@@ -126,7 +126,8 @@ def stub_weather_fetch(lat: float, lon: float) -> str:
 
 class _TokenBucket:
     """Rate limiter (ST7: 1000 req/hr quota, README.md:50), one per
-    kernel per worker process."""
+    kernel per worker process; ``enrich_with_weather`` gives each the
+    quota's share of one task slot."""
 
     def __init__(self, per_hour: int):
         self.capacity = float(per_hour)
@@ -240,10 +241,18 @@ def enrich_with_weather(
 
     Input: SHIP_POSITION-shaped DataFrame (batch or streaming).
     Output: SHIP_POSITION_WITH_WEATHER-shaped DataFrame.
+
+    ``max_per_hour`` is the quota of the whole pipeline: every Python
+    worker process holds its own bucket and an executor runs one worker
+    per concurrent task, so each bucket gets
+    ``max(1, max_per_hour // defaultParallelism)``.
     """
     from ..dist import ensure_shipped
 
     ensure_shipped(positions.sparkSession)  # kernel closure references this module
+    if max_per_hour:
+        slots = positions.sparkSession.sparkContext.defaultParallelism
+        max_per_hour = max(1, max_per_hour // slots)
     flat = positions.select(
         "mmsi",
         "status",

@@ -139,15 +139,14 @@ def test_unfielded_valid_types_emit_envelope_only():
 
 
 def test_sog_rule_cross_path_parity():
-    """The two decode paths must emit the SAME integer speed for every raw
-    SOG value, fractional knots included — and that value is the
-    reference's: pyais hands fractional knots (raw/10) to an Avro "int"
-    field, whose writer cast TRUNCATES (producer-from-ais-api.py:67 +
-    schemas/ship-position-event.avsc). Native codec: sog // 10. pyais
-    kernel (ais_feed.decode_nmea): int(knots). Feeds every fractional-
-    knot raw value through a crafted type-1 sentence (the encoder only
-    emits whole knots, so the payload is built raw here) and the
-    simulated pyais leg."""
+    """The native codec must emit the reference's integer speed for every
+    raw SOG value, fractional knots included: pyais hands fractional
+    knots (raw/10) to an Avro "int" field, whose writer cast TRUNCATES
+    (producer-from-ais-api.py:67 + schemas/ship-position-event.avsc).
+    Native codec: sog // 10. Feeds every fractional-knot raw value
+    through a crafted type-1 sentence (the encoder only emits whole
+    knots, so the payload is built raw here) and the simulated
+    reference leg."""
     n = 168
     for raw in range(0, 1023):  # 1023 = not-available sentinel, excluded
         bits = 0
@@ -165,10 +164,10 @@ def test_sog_rule_cross_path_parity():
         put(128, 9, 90)
         payload, fill = C.bits_to_payload(bits, n)
         native = C.decode_payload(payload, fill)["speed"]
-        # pyais leg: fractional knots -> the kernel's truncation rule
+        # reference leg: pyais's fractional knots -> the Avro int cast
         pyais_knots = raw / 10.0
-        kernel = int(pyais_knots)
-        assert native == kernel == raw // 10, (raw, native, kernel)
+        reference = int(pyais_knots)
+        assert native == reference == raw // 10, (raw, native, reference)
 
 
 def test_reference_sentence_matches_published_decode():

@@ -1095,7 +1095,7 @@ def test_pq_recall_and_distortion(spark):
 
 def test_triangle_count_on_known_graphs(spark):
     """K4 has exactly 4 triangles; a chain has none; duplicate/reversed
-    edge rows must not inflate the count."""
+    edge rows and self-loops must not inflate the count."""
     from redpanda_ais_demo_spark.operators.graph import triangle_count
     from itertools import combinations
 
@@ -1105,6 +1105,18 @@ def test_triangle_count_on_known_graphs(spark):
     assert triangle_count(df).collect()[0].n_triangles == 4
     chain = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
     assert triangle_count(chain).collect()[0].n_triangles == 0
+    # a loop (v, v) is an edge of no triangle
+    looped = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (1, 1)], "src long, dst long")
+    assert triangle_count(looped).collect()[0].n_triangles == 1
+    # the DuckDB oracle of dup_graph_triangles, fed the same pairs
+    import duckdb
+
+    from redpanda_ais_demo_spark.plans import get_oracles
+    from redpanda_ais_demo_spark.plans.llm_queries import _JACCARD_ORACLE
+
+    pairs = "SELECT * FROM (VALUES (1, 2), (2, 3), (3, 1), (1, 1)) t(id_a, id_b)"
+    sql = get_oracles()["dup_graph_triangles"].replace(_JACCARD_ORACLE, pairs)
+    assert duckdb.connect().execute(sql).fetchone()[0] == 1
 
 
 def test_bigram_logprob_detects_scrambled_order(spark):

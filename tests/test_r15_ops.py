@@ -84,20 +84,20 @@ def test_semdedup_kernel_rounding_parity_at_threshold_boundary(spark):
     assert len(kept) >= 3
 
 
+# two bridged triangles + a sink + a self-loop-only node
+HUB_SINK_LOOP_EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (6, 7), (8, 8)]
+
+
 def test_graph_vector_broadcast_gate_is_output_neutral(spark, monkeypatch):
     """The iterative graph loops broadcast their per-round node vector
-    when the counted node set fits SPARK_GRAFT_VEC_BROADCAST_ROWS (and
+    when the counted node set fits graph._VEC_BROADCAST_ROWS (and
     fall back to the keyed-pin shuffle joins above it). The gate is a
     pure join-strategy hint: both modes must produce bit-identical
     integer vectors / labels on a graph with hubs, ties, sinks and a
     self-loop-only node."""
     from redpanda_ais_demo_spark.operators import graph
 
-    edges = spark.createDataFrame(
-        # two bridged triangles + a sink + a self-loop-only node
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (6, 7), (8, 8)],
-        "src long, dst long",
-    )
+    edges = spark.createDataFrame(HUB_SINK_LOOP_EDGES, "src long, dst long")
 
     def run_all():
         lpa = sorted(map(tuple, graph.label_propagation(edges, iters=3).collect()))
@@ -117,10 +117,9 @@ def test_graph_vector_broadcast_gate_is_output_neutral(spark, monkeypatch):
         )
         return lpa, pr, ppr, ht, mod
 
-    monkeypatch.setenv("SPARK_GRAFT_VEC_BROADCAST_ROWS", "0")
-    shuffled = run_all()
-    monkeypatch.setenv("SPARK_GRAFT_VEC_BROADCAST_ROWS", "1000000")
     broadcast = run_all()
+    monkeypatch.setattr(graph, "_VEC_BROADCAST_ROWS", 0)
+    shuffled = run_all()
     assert shuffled == broadcast
 
 
@@ -130,7 +129,7 @@ def test_cc_vector_broadcast_gate_is_output_neutral(spark, monkeypatch):
     hint must not change any (node, component) assignment — exercised
     on a long chain (diameter stress), a star, a self-loop-only node
     and duplicate/reversed pairs."""
-    from redpanda_ais_demo_spark.operators import dedup
+    from redpanda_ais_demo_spark.operators import dedup, graph
 
     pairs = [(i, i + 1) for i in range(1, 9)]  # chain 1..9
     pairs += [(20, 21), (20, 22), (22, 20), (23, 23)]  # star, dup, loop
@@ -143,12 +142,54 @@ def test_cc_vector_broadcast_gate_is_output_neutral(spark, monkeypatch):
         )
         return cc, cc2
 
-    monkeypatch.setenv("SPARK_GRAFT_VEC_BROADCAST_ROWS", "0")
-    shuffled = run_both()
-    monkeypatch.setenv("SPARK_GRAFT_VEC_BROADCAST_ROWS", "1000000")
     broadcast = run_both()
+    monkeypatch.setattr(graph, "_VEC_BROADCAST_ROWS", 0)
+    shuffled = run_both()
     assert shuffled == broadcast
     assert shuffled[0] == shuffled[1]  # both closures agree
+
+
+def test_pagerank_is_personalized_pagerank_seeded_everywhere(spark):
+    """pagerank is the personalized walk with every node a seed: with
+    k = n and is_seed = 1 both integer recurrences give the same rank
+    to every node, sinks and self-loop-only nodes included."""
+    from redpanda_ais_demo_spark.operators import graph
+
+    edges = spark.createDataFrame(HUB_SINK_LOOP_EDGES, "src long, dst long")
+    nodes = edges.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
+    pr = sorted(map(tuple, graph.pagerank(edges, iters=4).collect()))
+    ppr = sorted(
+        map(tuple, graph.personalized_pagerank(edges, nodes, iters=4).collect())
+    )
+    assert pr == ppr
+    assert len(pr) == 8
+
+
+def test_pagerank_rejects_empty_edge_list(spark):
+    """An empty edge list has no node to rank: ValueError, as hits
+    raises, not a ZeroDivisionError from SCALE // n."""
+    import pytest
+
+    from redpanda_ais_demo_spark.operators import graph
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    with pytest.raises(ValueError, match="no nodes"):
+        graph.pagerank(edges)
+
+
+def test_no_module_reads_the_removed_broadcast_env_knob():
+    """The vector broadcast cap is the module constant
+    graph._VEC_BROADCAST_ROWS; no package source reads an environment
+    override for it any more."""
+    import pathlib
+
+    import redpanda_ais_demo_spark
+
+    root = pathlib.Path(redpanda_ais_demo_spark.__file__).parent
+    readers = [
+        p.name for p in root.rglob("*.py") if "SPARK_GRAFT_VEC_BROADCAST_ROWS" in p.read_text()
+    ]
+    assert not readers
 
 
 def test_frontier_loop_broadcast_gate_is_output_neutral(spark, monkeypatch):
@@ -185,10 +226,9 @@ def test_frontier_loop_broadcast_gate_is_output_neutral(spark, monkeypatch):
         )
         return kh, kc, ss, aa
 
-    monkeypatch.setenv("SPARK_GRAFT_VEC_BROADCAST_ROWS", "0")
-    shuffled = run_all()
-    monkeypatch.setenv("SPARK_GRAFT_VEC_BROADCAST_ROWS", "1000000")
     broadcast = run_all()
+    monkeypatch.setattr(graph, "_VEC_BROADCAST_ROWS", 0)
+    shuffled = run_all()
     assert shuffled == broadcast
 
 

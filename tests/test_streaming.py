@@ -264,6 +264,36 @@ def test_weather_transient_error_is_refetched_by_next_task():
     assert len(_FETCHES) == 3 and list(out3["wx_raw"]) == list(out2["wx_raw"])
 
 
+def test_enrich_splits_weather_quota_across_task_slots(spark, monkeypatch):
+    """Each Python worker process holds its own token bucket, one worker
+    per concurrent task: the kernel enrich_with_weather builds on this
+    session gives each process the quota's share of one task slot, so
+    the pipeline as a whole stays within max_per_hour."""
+    import pandas as pd
+
+    kernels = []
+    real = enrich.weather_lookup_kernel
+
+    def spy(fetch, **kw):
+        kernels.append((kw["max_per_hour"], real(fetch, **kw)))
+        return kernels[-1][1]
+
+    monkeypatch.setattr(enrich, "weather_lookup_kernel", spy)
+    positions = spark.createDataFrame(
+        [("257000000", "UnderWayUsingEngine", 1, (60.0, 5.0), 10, 90)],
+        "mmsi string, status string, timestamp long, "
+        "location struct<lat: double, lon: double>, speed int, heading int",
+    )
+    for quota in (1000, 1, None):
+        enrich.enrich_with_weather(positions, max_per_hour=quota)
+    per_slot = max(1, 1000 // spark.sparkContext.defaultParallelism)
+    assert [q for q, _ in kernels] == [per_slot, 1, None]
+    before = set(enrich._KERNEL_STATE)
+    list(kernels[0][1](iter([pd.DataFrame({"lat": [60.0], "lon": [5.0]})])))
+    (token,) = set(enrich._KERNEL_STATE) - before
+    assert enrich._KERNEL_STATE[token][1].capacity == per_slot
+
+
 def test_weather_kernel_state_is_bounded():
     """Every enrich build mints a kernel; a long-lived worker keeps the
     state of only the most recently used ones."""
