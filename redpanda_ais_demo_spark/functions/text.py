@@ -58,33 +58,27 @@ def word_shingles(token_array: Column, k: int = 3) -> Column:
 
 
 def top_token_count(token_array: Column) -> Column:
-    """Occurrence count of the most frequent token — the Gopher-style
-    "most common word fraction" numerator, computed entirely inside the
-    array (no explode/shuffle): sort the tokens, then one fold tracking
-    the longest equal-run. O(n log n) per doc vs the previous nested
-    count-each-token lambda's O(n²) — same value for every input (the
-    max run length of the sorted array IS the max multiplicity), NULL
-    on an empty array like the array_max it replaces. Still beats an
-    explode + groupBy + max re-join, which would shuffle the corpus
-    twice.
+    """Occurrence count of the most frequent non-NULL token — the
+    Gopher-style "most common word fraction" numerator, computed entirely
+    inside the array (no explode/shuffle): sort the non-NULL tokens, then
+    one fold tracking the longest equal-run. O(n log n) per doc vs the
+    naive count-each-token lambda's O(n²) — same value for every input
+    (the max run length of the sorted array IS the max multiplicity;
+    NULL tokens count 0, as ``x = tok`` never holds for them), NULL on an
+    empty array like the array_max it replaces. Works for any orderable
+    element type. Still beats an explode + groupBy + max re-join, which
+    would shuffle the corpus twice.
     """
-    s = F.array_sort(token_array)
+    s = F.array_sort(F.filter(token_array, lambda x: x.isNotNull()))
+    run = lambda acc, x: F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))  # noqa: E731
     run_best = F.aggregate(
         s,
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-        ),
+        # get() answers NULL out of bounds: a NULL of the element type
+        F.struct(F.get(s, -1).alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")),
         lambda acc, x: F.struct(
             x.alias("prev"),
-            F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1)
-            .otherwise(F.lit(1))
-            .alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
+            run(acc, x).alias("run"),
+            F.greatest(acc["best"], run(acc, x)).alias("best"),
         ),
         lambda acc: acc["best"],
     )

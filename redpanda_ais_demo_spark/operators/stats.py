@@ -1213,15 +1213,16 @@ def ipf_rake_2d(
     """
     if rounds < 1:
         raise ValueError("rounds must be positive")
-    # fold the CONSTANT targets onto the cell frame once — the loop's
-    # previous per-round target joins re-ran their broadcast job every
-    # round (2 extra jobs x rounds) for values that never change. The
-    # inner-join semantics are unchanged: cells missing a row/column
-    # target drop here exactly as they dropped per round before.
+    # fold the CONSTANT targets onto the cell frame once — per-round
+    # target joins would re-run their broadcast job every round (2 extra
+    # jobs x rounds) for values that never change. A cell without a row
+    # target drops here, as it would at round 1's row step. A cell
+    # without a column target still counts in round 1's row margin (left
+    # join, NULL __ct) and drops at the first column step.
     w = (
         cells.select("r", "c", F.col("w_micro").cast("long").alias("w_micro"))
         .join(F.broadcast(row_targets.select(F.col("r"), F.col("t").alias("__rt"))), "r")
-        .join(F.broadcast(col_targets.select(F.col("c"), F.col("t").alias("__ct"))), "c")
+        .join(F.broadcast(col_targets.select(F.col("c"), F.col("t").alias("__ct"))), "c", "left")
         .localCheckpoint(eager=False)
     )
     for _ in range(rounds):
@@ -1237,6 +1238,7 @@ def ipf_rake_2d(
             )
             .drop("__rm")
         )
+        w = w.filter(F.col("__ct").isNotNull())
         cm = w.groupBy("c").agg(F.sum("w_micro").alias("__cm"))
         w = (
             w.join(F.broadcast(cm), "c")

@@ -55,4 +55,16 @@ def get_spark(
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Unpersisting a DataFrame's localCheckpoint RDD (the iterative
+    # operators pin each round; a runner frees them after each query)
+    # logs a "... was locally checkpointed" WARN per RDD. Spark names an
+    # RDD's logger after its runtime class, so the logger to quiet is
+    # MapPartitionsRDD's, not RDD's; at ERROR the log keeps its signal.
+    try:
+        jvm = spark._jvm
+        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+            "org.apache.spark.rdd.MapPartitionsRDD", jvm.org.apache.logging.log4j.Level.ERROR
+        )
+    except Exception:
+        pass  # log4j internals moved — the WARNs return, the session still works
     return spark

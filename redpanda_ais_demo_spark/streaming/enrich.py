@@ -8,6 +8,11 @@ Re-expresses lib/consumer-and-producer-enrich-position-with-weather.py
       → error gate                                (P6)
       → flatten + widen projection                (P5)
 
+optionally over only the rows a boolean flag column marks
+(``with_weather``); the rest pass through unlooked-up, which lets one
+streaming query carry ship-info rows alongside the positions
+(``materialize.run_pipeline``).
+
 The reference does one HTTPS round-trip per record, sequentially
 (throughput ceiling 0.28 ev/s, BASELINE.md). Here the lookup is
 vectorized per Arrow batch with an LRU keyed on rounded (lat, lon) — at
@@ -32,12 +37,14 @@ import time
 import uuid
 from collections import OrderedDict
 from collections.abc import Callable, Iterator
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from ..schemas import WEATHER_RESPONSE
+from ..schemas import SHIP_POSITION_WITH_WEATHER, WEATHER_RESPONSE
 
 FetchFn = Callable[[float, float], str]
 
@@ -127,11 +134,12 @@ def stub_weather_fetch(lat: float, lon: float) -> str:
 class _TokenBucket:
     """Rate limiter (ST7: 1000 req/hr quota, README.md:50), one per
     kernel per worker process; ``enrich_with_weather`` gives each the
-    quota's share of one task slot."""
+    quota's share of one task slot. A share below one request per hour
+    still refills at its true rate, with room for one request."""
 
-    def __init__(self, per_hour: int):
-        self.capacity = float(per_hour)
-        self.tokens = float(per_hour)
+    def __init__(self, per_hour: float):
+        self.capacity = max(1.0, float(per_hour))
+        self.tokens = self.capacity
         self.rate = per_hour / 3600.0
         self.last = time.monotonic()
 
@@ -156,7 +164,7 @@ _KERNEL_STATE: OrderedDict[str, tuple[OrderedDict, _TokenBucket | None]] = Order
 _KERNEL_STATE_MAX = 16
 
 
-def _kernel_state(token: str, max_per_hour: int | None) -> tuple[OrderedDict, _TokenBucket | None]:
+def _kernel_state(token: str, max_per_hour: float | None) -> tuple[OrderedDict, _TokenBucket | None]:
     state = _KERNEL_STATE.get(token)
     if state is None:
         state = _KERNEL_STATE[token] = (OrderedDict(), _TokenBucket(max_per_hour) if max_per_hour else None)
@@ -184,9 +192,12 @@ def weather_lookup_kernel(
     fetch: FetchFn,
     cache_size: int = 4096,
     cache_decimals: int = 1,
-    max_per_hour: int | None = None,
+    max_per_hour: float | None = None,
+    flag: str | None = None,
 ):
-    """Build the mapInPandas kernel: adds a ``wx_raw`` JSON column.
+    """Build the mapInPandas kernel: adds a ``wx_raw`` JSON column. With
+    ``flag`` given, only rows whose ``flag`` column is true are looked
+    up; the others get a NULL ``wx_raw`` and cost no fetch.
 
     Each build mints a token; every copy of the kernel Spark unpickles
     in one Python worker process (one per task) looks up the same LRU
@@ -202,14 +213,16 @@ def weather_lookup_kernel(
         cache, bucket = _kernel_state(token, max_per_hour)
         failed: dict[tuple[float, float], str] = {}
         for pdf in batches:
-            keys = list(
-                zip(
-                    pdf["lat"].round(cache_decimals).tolist(),
-                    pdf["lon"].round(cache_decimals).tolist(),
-                )
+            keys = zip(
+                pdf["lat"].round(cache_decimals).tolist(),
+                pdf["lon"].round(cache_decimals).tolist(),
             )
+            looks = pdf[flag].tolist() if flag else repeat(True)
             out = []
-            for k in keys:
+            for k, look in zip(keys, looks):
+                if not look:
+                    out.append(None)
+                    continue
                 if k in cache:
                     cache.move_to_end(k)
                     out.append(cache[k])
@@ -232,27 +245,65 @@ def weather_lookup_kernel(
     return kernel
 
 
+# P5 — the flattened weather columns (consumer...py:72-87)
+WEATHER_COLUMNS = {
+    "locale": "wx.location.name",
+    "region": "wx.location.region",
+    "country": "wx.location.country",
+    "condition": "wx.current.condition.text",
+    "temp_f": "wx.current.temp_f",
+    "wind_mph": "wx.current.wind_mph",
+    "wind_dir": "wx.current.wind_dir",
+}
+
+
+def with_weather(
+    flat: DataFrame,
+    fetch: FetchFn = stub_weather_fetch,
+    max_per_hour: int | None = None,
+    flag: str | None = None,
+) -> DataFrame:
+    """U1: lookup → parse (F6) → gate (P6) → flatten (P5). ``flat``
+    needs ``lat`` and ``lon`` columns; the result keeps all of its
+    columns and adds ``WEATHER_COLUMNS``. With ``flag`` (a boolean
+    column) given, only the rows it marks are looked up and gated; the
+    others pass with NULL weather.
+
+    ``max_per_hour`` is the quota of the whole pipeline: every Python
+    worker process holds its own bucket and an executor runs one worker
+    per concurrent task, so each bucket refills at
+    ``max_per_hour / defaultParallelism`` per hour.
+    """
+    from ..dist import ensure_shipped
+
+    spark = flat.sparkSession
+    ensure_shipped(spark)  # kernel closure references this module
+    if max_per_hour:
+        max_per_hour = max_per_hour / spark.sparkContext.defaultParallelism
+    lookup_schema = StructType(
+        [StructField(f.name, f.dataType) for f in flat.schema] + [StructField("wx_raw", StringType())]
+    )
+    with_raw = flat.mapInPandas(
+        weather_lookup_kernel(fetch, max_per_hour=max_per_hour, flag=flag), lookup_schema
+    )
+    parsed = with_raw.withColumn("wx", F.from_json(F.col("wx_raw"), WEATHER_RESPONSE))
+    # P6 — drop API errors and responses missing required keys
+    # (consumer-and-producer-enrich-position-with-weather.py:42-50)
+    keep = F.col("wx.error").isNull() & F.col("wx.location").isNotNull() & F.col("wx.current").isNotNull()
+    gated = parsed.filter(keep if flag is None else ~F.col(flag) | keep)
+    return gated.select(*flat.columns, *(F.col(path).alias(name) for name, path in WEATHER_COLUMNS.items()))
+
+
 def enrich_with_weather(
     positions: DataFrame,
     fetch: FetchFn = stub_weather_fetch,
     max_per_hour: int | None = None,
 ) -> DataFrame:
-    """U1 end-to-end: lookup → parse (F6) → gate (P6) → flatten (P5).
+    """U1 end-to-end on every row (``with_weather`` without a flag).
 
     Input: SHIP_POSITION-shaped DataFrame (batch or streaming).
     Output: SHIP_POSITION_WITH_WEATHER-shaped DataFrame.
-
-    ``max_per_hour`` is the quota of the whole pipeline: every Python
-    worker process holds its own bucket and an executor runs one worker
-    per concurrent task, so each bucket gets
-    ``max(1, max_per_hour // defaultParallelism)``.
     """
-    from ..dist import ensure_shipped
-
-    ensure_shipped(positions.sparkSession)  # kernel closure references this module
-    if max_per_hour:
-        slots = positions.sparkSession.sparkContext.defaultParallelism
-        max_per_hour = max(1, max_per_hour // slots)
     flat = positions.select(
         "mmsi",
         "status",
@@ -262,41 +313,4 @@ def enrich_with_weather(
         "speed",
         "heading",
     )
-    lookup_schema = ", ".join(
-        [
-            "mmsi string",
-            "status string",
-            "timestamp long",
-            "lat double",
-            "lon double",
-            "speed int",
-            "heading int",
-            "wx_raw string",
-        ]
-    )
-    with_raw = flat.mapInPandas(weather_lookup_kernel(fetch, max_per_hour=max_per_hour), lookup_schema)
-    parsed = with_raw.withColumn("wx", F.from_json(F.col("wx_raw"), WEATHER_RESPONSE))
-    # P6 — drop API errors and responses missing required keys
-    # (consumer-and-producer-enrich-position-with-weather.py:42-50)
-    gated = parsed.filter(
-        F.col("wx.error").isNull()
-        & F.col("wx.location").isNotNull()
-        & F.col("wx.current").isNotNull()
-    )
-    # P5 — flatten + widen (consumer...py:72-87)
-    return gated.select(
-        "mmsi",
-        "status",
-        "speed",
-        "heading",
-        "timestamp",
-        "lat",
-        "lon",
-        F.col("wx.location.name").alias("locale"),
-        F.col("wx.location.region").alias("region"),
-        F.col("wx.location.country").alias("country"),
-        F.col("wx.current.condition.text").alias("condition"),
-        F.col("wx.current.temp_f").alias("temp_f"),
-        F.col("wx.current.wind_mph").alias("wind_mph"),
-        F.col("wx.current.wind_dir").alias("wind_dir"),
-    )
+    return with_weather(flat, fetch, max_per_hour).select(*SHIP_POSITION_WITH_WEATHER.fieldNames())

@@ -8,6 +8,10 @@ Re-expresses the ClickHouse Kafka-engine → Memory-MV layer
   S7) — including the property that the "table" is the full stream
   history and latest-per-key is resolved at query time (the reference's
   join tolerates info-row multiplication; our console dedups, W1).
+  ``run_pipeline`` runs ONE streaming query into one memory sink, and
+  the two MVs are views over it split on the routing flag: each line is
+  read and decoded once, and both MVs commit at the same source offset,
+  so a dashboard never joins positions against older ship info.
 - parquet MVs are the durable variant the reference lacks (its Memory
   MVs grow unboundedly in RAM, BASELINE.md): checkpointed exactly-once
   file sink, partitioned for scale.
@@ -23,13 +27,16 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .enrich import FetchFn, enrich_with_weather, stub_weather_fetch
-from .ingest import route_positions, route_ship_info
+from ..schemas import SHIP_POSITION_WITH_WEATHER
+from .enrich import FetchFn, stub_weather_fetch, with_weather
+from .ingest import IS_POSITION, route_events, ship_info_columns
 
 POS_MV = "ship_pos_and_wx_mv"
 INFO_MV = "ship_info_and_destination_mv"
+EVENTS_SINK = "ais_events_sink"  # the one memory sink both MVs are views over
 
 
 def start_memory_mv(df: DataFrame, name: str, checkpoint_dir: str) -> StreamingQuery:
@@ -57,19 +64,26 @@ def start_parquet_mv(df: DataFrame, path: str, checkpoint_dir: str, name: str) -
 
 @dataclass
 class Pipeline:
-    """Handles to the running dataflow (both MVs share one logical source,
-    mirroring the producer's one-stream→two-topic split, §3.1)."""
+    """Handles to the running dataflow: one streaming query keeps both
+    views current (the producer's one-stream→two-topic split, §3.1), so
+    ``position_query`` and ``info_query`` are the same query."""
 
     spark: SparkSession
     position_query: StreamingQuery
     info_query: StreamingQuery
 
+    def _queries(self) -> list[StreamingQuery]:
+        qs = [self.position_query]
+        if self.info_query is not self.position_query:
+            qs.append(self.info_query)
+        return qs
+
     def process_all(self) -> None:
-        self.position_query.processAllAvailable()
-        self.info_query.processAllAvailable()
+        for q in self._queries():
+            q.processAllAvailable()
 
     def stop(self) -> None:
-        for q in (self.position_query, self.info_query):
+        for q in self._queries():
             if q.isActive:
                 q.stop()
 
@@ -88,15 +102,26 @@ def run_pipeline(
     max_per_hour: int | None = None,
 ) -> Pipeline:
     """Wire the full reference dataflow: decoded AIS stream → route →
-    enrich → two memory MVs. ``decoded_stream`` is any streaming
-    DataFrame with the AIS_DECODED schema (file/rate/kafka source)."""
-    enriched = enrich_with_weather(route_positions(decoded_stream), fetch, max_per_hour)
-    info = route_ship_info(decoded_stream)
-    return Pipeline(
-        spark=spark,
-        position_query=start_memory_mv(enriched, POS_MV, checkpoint_dir),
-        info_query=start_memory_mv(info, INFO_MV, checkpoint_dir),
-    )
+    enrich → one memory sink, read through the two MV views.
+    ``decoded_stream`` is any streaming DataFrame with the AIS_DECODED
+    schema (file/rate/kafka source).
+
+    One query reads and decodes each line once: ``route_events`` keeps
+    positions and ship info in one pass, ``with_weather`` looks up only
+    the positions, and both views commit at the same source offset."""
+    enriched = with_weather(route_events(decoded_stream), fetch, max_per_hour, IS_POSITION)
+    query = start_memory_mv(enriched, EVENTS_SINK, checkpoint_dir)
+    sink = spark.table(EVENTS_SINK)
+    # Every view column is aliased: a memory sink's plan is not
+    # multi-instance, so the analyzer cannot give the two views' scans of
+    # it distinct attributes, and the dashboard's positions x info join
+    # of two unaliased views fails with [INTERNAL_ERROR]. An alias mints
+    # attributes per view.
+    sink.filter(F.col(IS_POSITION)).select(
+        *(F.col(c).alias(c) for c in SHIP_POSITION_WITH_WEATHER.fieldNames())
+    ).createOrReplaceTempView(POS_MV)
+    sink.filter(~F.col(IS_POSITION)).select(*ship_info_columns()).createOrReplaceTempView(INFO_MV)
+    return Pipeline(spark=spark, position_query=query, info_query=query)
 
 
 def start_rollup_mv(

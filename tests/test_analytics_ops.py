@@ -1739,6 +1739,53 @@ def test_rake_event_weights_excludes_negative_odd_ids_like_oracle(spark, tmp_pat
     assert_frames_match(q.fn(spark, str(tmp_path)).toPandas(), want, "rake_event_weights")
 
 
+def test_rake_cells_without_column_target_count_in_first_row_margin(spark, tmp_path):
+    """A cell whose column has no target still counts in round 1's row
+    margin and drops at the first column step, as in the DuckDB oracle:
+    here the even half has Wednesday cells and the odd half (the
+    targets) has no Wednesday."""
+    import datetime
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from redpanda_ais_demo_spark.plans.registry import REGISTRY, _load_all
+
+    from .oracle_utils import assert_frames_match
+
+    monday = datetime.datetime(2024, 5, 6, 12)
+    # (type, days after Monday) -> events in the even half (the cells)
+    # and the odd half (the targets); the cells interact strongly, so the
+    # rows' different Wednesday shares still show after six rounds
+    even = {("click", 0): 1, ("click", 1): 9, ("click", 2): 1, ("view", 0): 9, ("view", 1): 1, ("view", 2): 20}
+    odd = {("click", 0): 5, ("click", 1): 5, ("view", 0): 5, ("view", 1): 5}
+    rows = []
+    for parity, census in ((0, even), (1, odd)):
+        for (kind, day), n in census.items():
+            for _ in range(n):
+                rows.append((2 * len(rows) + parity, kind, monday + datetime.timedelta(days=day)))
+    ids, types, ts = zip(*rows)
+    table = pa.table(
+        {
+            "event_id": pa.array(ids, pa.int64()),
+            "event_type": pa.array(types, pa.string()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+        }
+    )
+    path = os.path.join(tmp_path, "events.parquet")
+    pq.write_table(table, path)
+    _load_all()
+    q = REGISTRY["rake_event_weights"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(q.oracle).df()
+    got = q.fn(spark, str(tmp_path)).toPandas()
+    assert set(got["dow"]) == {0, 1} and len(want) == len(got) > 0
+    assert_frames_match(got, want, "rake_event_weights")
+
+
 def test_paa_correlation_pairs_finds_comoving_series(spark):
     import datetime
 

@@ -256,3 +256,28 @@ def test_top_token_count_sort_fold_matches_naive(spark):
     ).collect()
     for r in out:
         assert r.fold == r.naive, f"fold {r.fold} != naive {r.naive}"
+
+
+def test_top_token_count_ignores_null_tokens(spark):
+    """NULL tokens are not counted, as in the naive form and the DuckDB
+    oracle (``x = tok`` is never true for NULL): a run of NULLs is no
+    most-common token, and an all-NULL array counts 0."""
+    from redpanda_ais_demo_spark.functions import text as TXT
+
+    df = spark.createDataFrame(
+        [([None, None, None, "a"],), ([None, "b", None, "b"],), ([None, None],)], "w array<string>"
+    )
+    naive = F.array_max(
+        F.transform(F.col("w"), lambda t: F.size(F.filter(F.col("w"), lambda x: x == t)))
+    )
+    out = df.select(TXT.top_token_count(F.col("w")).alias("fold"), naive.alias("naive")).collect()
+    assert [r.fold for r in out] == [r.naive for r in out] == [1, 2, 0]
+
+
+def test_top_token_count_is_element_type_generic(spark):
+    """The fold works on any orderable element type, not only strings."""
+    from redpanda_ais_demo_spark.functions import text as TXT
+
+    df = spark.createDataFrame([([3, 1, 3, 2, 3, 1],), ([7],), ([],)], "w array<int>")
+    out = df.select(TXT.top_token_count(F.col("w")).alias("n")).collect()
+    assert [r.n for r in out] == [3, 1, None]

@@ -73,6 +73,99 @@ def test_pipeline_incremental_arrival(spark, decoded_dir, tmp_path):
         pipe.stop()
 
 
+def test_route_events_agrees_with_both_routers(spark):
+    """route_events keeps exactly the rows of the two routers, told apart
+    by its flag, and the rows match the reference's two-filter branches
+    (the S2 gate, then P1 + F1 + P2 per branch) written out here."""
+    from redpanda_ais_demo_spark.functions.scalar import with_default
+
+    decoded = decoded_messages(spark)
+    events = ingest.route_events(decoded)
+    pos = events.filter(F.col(ingest.IS_POSITION)).select(
+        "mmsi", "status", "timestamp", F.struct("lat", "lon").alias("location"), "speed", "heading"
+    )
+    info = events.filter(~F.col(ingest.IS_POSITION)).select(*ingest.ship_info_columns())
+    assert sorted(pos.collect()) == sorted(ingest.route_positions(decoded).collect())
+    assert sorted(info.collect()) == sorted(ingest.route_ship_info(decoded).collect())
+    assert events.count() == pos.count() + info.count() > 0
+
+    gated = ingest.with_receiver_timestamp(decoded)
+    want_pos = (
+        gated.filter(F.col("msg_type").isin(1, 3, 18))
+        .withColumn("status", with_default(F.col("status"), "NotReported"))
+        .filter(ingest.validity_filter())
+        .select(
+            F.col("mmsi").cast("string"), "status", "timestamp",
+            F.struct("lat", "lon").alias("location"), "speed", "heading",
+        )
+    )
+    want_info = gated.filter(F.col("msg_type") == 5).select(
+        F.col("mmsi").cast("string"), F.col("timestamp").cast("int"), "shipname", "callsign",
+        with_default(F.col("ship_type"), "NotReported"), "destination",
+    )
+    assert sorted(pos.collect()) == sorted(want_pos.collect())
+    assert sorted(info.collect()) == sorted(want_info.collect())
+
+
+def _nmea_log(tmp_path):
+    """A small wire-format log: moving, slow and untagged positions plus
+    two-fragment static messages, one of them updating a ship's info."""
+    from redpanda_ais_demo_spark.sources import ais_codec as C
+
+    lines = []
+    for i in range(30):
+        lines.append(
+            C.encode_position(
+                257200000 + i % 12, 60.0 + i * 0.03, 5.0 + i * 0.02, 1 + 3 * i % 40, (i * 13) % 359,
+                status=0, receiver_ts=1_700_000_000 + i if i % 10 else None,
+            )
+        )
+        if i % 6 == 0:
+            lines += C.encode_static(
+                257200000 + i % 12, f"SHIP {i}", "LAXA", 84, f"PORT {i}", receiver_ts=1_700_000_000 + i
+            )
+    log = tmp_path / "one_query.nmea"
+    log.write_text("\n".join(lines) + "\n")
+    return str(log), len(lines)
+
+
+def test_pipeline_is_one_query_reading_each_line_once(spark, tmp_path):
+    """run_pipeline starts ONE streaming query for both views: it reads
+    every line of an nmea_replay log once, its views give the batch
+    path's dashboard grid, and stopping it twice is harmless."""
+    from redpanda_ais_demo_spark.sources import nmea_datasource
+    from redpanda_ais_demo_spark.sources.ais_feed import decode_nmea
+
+    log, n_lines = _nmea_log(tmp_path)
+    nmea_datasource.register(spark)
+
+    def read(reader):
+        # one partition: fragment pairs stay adjacent (decode_nmea)
+        return decode_nmea(reader.format("nmea_replay").option("path", log).option("numpartitions", "1").load())
+
+    before = {q.id for q in spark.streams.active}
+    pipe = materialize.run_pipeline(spark, read(spark.readStream), checkpoint_dir=str(tmp_path / "ckpt"))
+    try:
+        started = [q for q in spark.streams.active if q.id not in before]
+        assert len(started) == 1
+        assert pipe.position_query.id == pipe.info_query.id == started[0].id
+        pipe.process_all()
+        assert sum(p["numInputRows"] for p in pipe.position_query.recentProgress) == n_lines
+
+        decoded = read(spark.read)
+        batch_grid = console.dashboard_grid(
+            enrich.enrich_with_weather(ingest.route_positions(decoded)), ingest.route_ship_info(decoded)
+        )
+        got = console.dashboard_grid(pipe.positions(), pipe.ship_info()).collect()
+        assert len(got) > 0
+        assert sorted(got) == sorted(batch_grid.collect())
+    finally:
+        pipe.stop()
+    pipe.stop()
+    assert not pipe.position_query.isActive
+    assert started[0].id not in {q.id for q in spark.streams.active}
+
+
 def test_checkpoint_exactly_once_recovery(spark, decoded_dir, tmp_path):
     """ST2/ST3: stop the durable (parquet) MV, add data, restart from the
     same checkpoint → old rows exactly once, new rows picked up."""
@@ -286,12 +379,52 @@ def test_enrich_splits_weather_quota_across_task_slots(spark, monkeypatch):
     )
     for quota in (1000, 1, None):
         enrich.enrich_with_weather(positions, max_per_hour=quota)
-    per_slot = max(1, 1000 // spark.sparkContext.defaultParallelism)
-    assert [q for q, _ in kernels] == [per_slot, 1, None]
+    slots = spark.sparkContext.defaultParallelism
+    assert [q for q, _ in kernels] == [1000 / slots, 1 / slots, None]
     before = set(enrich._KERNEL_STATE)
     list(kernels[0][1](iter([pd.DataFrame({"lat": [60.0], "lon": [5.0]})])))
     (token,) = set(enrich._KERNEL_STATE) - before
-    assert enrich._KERNEL_STATE[token][1].capacity == per_slot
+    assert enrich._KERNEL_STATE[token][1].capacity == max(1, 1000 / slots)
+
+
+def test_weather_quota_below_slot_count_holds_its_rate(spark, monkeypatch):
+    """A quota below the slot count still splits into true shares: each
+    worker process's bucket refills at max_per_hour / defaultParallelism
+    per hour, so all the slots together fetch at the quota in the long
+    run (a share rounded up to 1/hour would let every slot fetch hourly)."""
+    import types
+
+    import pandas as pd
+
+    class Clock:
+        t = 0.0
+
+        def sleep(self, s):
+            self.t += max(s, 1e-3)  # a real sleep always takes some time
+
+    clock = Clock()
+    monkeypatch.setattr(enrich, "time", types.SimpleNamespace(monotonic=lambda: clock.t, sleep=clock.sleep))
+    kernels = []
+    real = enrich.weather_lookup_kernel
+
+    def spy(fetch, **kw):
+        kernels.append(real(fetch, **kw))
+        return kernels[-1]
+
+    monkeypatch.setattr(enrich, "weather_lookup_kernel", spy)
+    positions = spark.createDataFrame(
+        [("257000000", "UnderWayUsingEngine", 1, (60.0, 5.0), 10, 90)],
+        "mmsi string, status string, timestamp long, "
+        "location struct<lat: double, lon: double>, speed int, heading int",
+    )
+    slots = spark.sparkContext.defaultParallelism
+    quota = 1
+    enrich.enrich_with_weather(positions, max_per_hour=quota)
+    fetches = 6
+    pdf = pd.DataFrame({"lat": [60.0 + i for i in range(fetches)], "lon": [5.0] * fetches})
+    assert len(list(kernels[0](iter([pdf])))[0]) == fetches
+    # one request up front, then one every slots / quota hours
+    assert clock.t / 3600 == pytest.approx((fetches - 1) * slots / quota, abs=0.01)
 
 
 def test_weather_kernel_state_is_bounded():

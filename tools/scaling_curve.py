@@ -320,12 +320,13 @@ def main() -> None:
     ]
     # preserve marker-fenced sections other tools/rounds maintain on
     # their own cadence (skew_stress's adversarial-density fixture, the
-    # r11 ntile-strategy comparison, the Python-hop fixed cost):
+    # r11 ntile-strategy comparison, the Python-hop fixed cost, the
+    # one-query pipeline):
     # regenerating the main table must not drop them
     out = "\n".join(lines)
     if os.path.exists(path):
         old = open(path).read()
-        for tag in ("skew-stress", "ntile-strategy", "paa-output", "python-hop"):
+        for tag in ("skew-stress", "ntile-strategy", "paa-output", "python-hop", "one-read"):
             b, e = f"<!-- {tag}:begin -->", f"<!-- {tag}:end -->"
             if b in old and e in old:
                 kept = old.split(b)[1].split(e)[0]
