@@ -1,24 +1,28 @@
-"""Generalized linear model fitting as AGGREGATION — logistic
-regression by IRLS where each Newton step is one partial-aggregable
-pass forming the 2×2 normal equations, the d×d solve happens on the
-driver (d = 2 scalars, never data), and the new coefficients ride back
-into the next pass as literals. The 100 TB GLM shape: the data is
-touched ``iters`` times by narrow map-side projections + one
-partial agg each; nothing data-sized ever sorts, collects, or
-single-partitions. On top of the fitted propensity sit the two causal/
-ML consumers: inverse-propensity-weighted ATE and split-conformal
+"""Generalized linear model fitting as AGGREGATION — logistic and
+Poisson regression by IRLS on ONE driver (``_irls``): each Newton step
+is one partial-aggregable pass forming the 2×2 normal equations, the
+solve happens on the driver (``_solve_2x2``: d = 2 scalars, never
+data), and the new coefficients ride back into the next pass as
+literals through one linear predictor (``_eta``). A GLM family is only
+its link — the per-row (weight, gradient) pair — and its starting
+intercept; Huber regression reuses the same 2×2 solve for its weighted
+least squares. The 100 TB GLM shape: the data is touched ``iters``
+times by narrow map-side projections + one partial agg each; nothing
+data-sized ever sorts, collects, or single-partitions. On top of the
+fitted propensity sit the causal/ML consumers: inverse-propensity-
+weighted and doubly-robust ATE, covariate balance, and split-conformal
 prediction intervals.
 
 Determinism engineering (registry rules): the ONLY transcendental per
-row is one sigmoid; its output immediately quantizes to integer
-micro-units (``round(1e6·σ)``), every downstream weight/working-
-response term is integer arithmetic on those micro-units, and the
-per-pass sums accumulate in BIGINT/DECIMAL(38,0) — so partial-
-aggregation order can never change a coefficient. The driver-side 2×2
-solve is a fixed-order double chain on exact integer sums, re-quantized
-to micro-unit coefficients before broadcasting — both engines replay
-the identical integer trajectory (the DuckDB oracle unrolls the same
-``iters`` rounds as CTEs).
+row is one inverse link (sigmoid or exp); its output immediately
+quantizes to integer micro-units (``round(1e6·σ)``), every downstream
+weight/working-response term is integer arithmetic on those
+micro-units, and the per-pass sums accumulate in DECIMAL(38,0) — so
+partial-aggregation order can never change a coefficient. The
+driver-side 2×2 solve is a fixed-order double chain on exact integer
+sums, re-quantized to micro-unit coefficients before broadcasting —
+both engines replay the identical integer trajectory (the DuckDB
+oracle unrolls the same ``iters`` rounds as CTEs).
 
 Reference parity note: the reference system (redpanda-ais-demo) has no
 model-fitting surface; this module is part of the mandated
@@ -26,6 +30,9 @@ training-data-pipeline extension alongside operators/stats.py.
 """
 
 from __future__ import annotations
+
+import math
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,8 +54,6 @@ def _round_away(x: float) -> int:
     """Half-away-from-zero integer rounding — Spark's round() and
     DuckDB's round(), NOT Python's banker's round(); driver-side math
     must use this so both engines replay the identical trajectory."""
-    import math
-
     return int(math.copysign(math.floor(abs(x) + 0.5), x))
 
 
@@ -67,17 +72,53 @@ def _sigmoid_micro(z: Column) -> Column:
     return F.round(F.lit(float(M)) / (F.lit(1.0) + F.exp(-zc))).cast("long")
 
 
-def _standardize(df: DataFrame, x_col: str) -> tuple[DataFrame, float, float]:
+def _exp_mu_micro(z: Column) -> Column:
+    """round(1e6 · exp(z)) as BIGINT with z clamped to [-10, 10] — the
+    Poisson family's per-row transcendental (the log-link inverse).
+    The clamp keeps micro-μ inside BIGINT (e¹⁰ ≈ 22026 → 2.2e10 micro)
+    and is irrelevant near any real fit: with the log-mean init,
+    fitted linear predictors live within a few units of 0."""
+    zc = F.greatest(F.lit(-10.0), F.least(F.lit(10.0), z))
+    return F.round(F.lit(float(M)) * F.exp(zc)).cast("long")
+
+
+def _eta(b0: float, b1: float) -> Column:
+    """The fitted linear predictor (b0 + b1·x)/M over the
+    micro-standardized ``__xq``, for micro-unit coefficients — the one
+    double chain every round and every scorer evaluates (the oracle
+    spells the same op order)."""
+    return (
+        F.lit(float(b0)) + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
+    ) / F.lit(float(M))
+
+
+def _logit_wg(z: Column) -> tuple[Column, Column]:
+    """Logistic link: p = σ(z) micro, w = p·(M−p)//M, g = M·y − p."""
+    p = _sigmoid_micro(z)
+    return _idiv(p * (F.lit(M) - p), M), F.lit(M) * F.col("__y") - p
+
+
+def _log_wg(z: Column) -> tuple[Column, Column]:
+    """Log link (Poisson): μ = exp(z) micro, w = μ, g = M·y − μ."""
+    mu = _exp_mu_micro(z)
+    return mu, F.lit(M) * F.col("__y") - mu
+
+
+def _standardize(
+    df: DataFrame, x_col: str, y_col: str
+) -> tuple[DataFrame, int, int]:
     """Center/scale x from exact integer sums (x must already be
     integer-quantized per the registry discipline). Returns the frame
-    with ``__xs`` plus (mean, scale) — the fixed-order double pair both
-    engines derive from the same BIGINT/DECIMAL sums."""
+    with ``__xs`` (the fixed-order double mean/scale both engines derive
+    from the same BIGINT/DECIMAL sums) plus n and Σy from the same
+    pass."""
     s = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col(x_col).cast("long")).alias("sx"),
         F.sum(
             F.col(x_col).cast(_DEC) * F.col(x_col).cast(_DEC)
         ).alias("sxx"),
+        F.sum(F.col(y_col).cast("long")).alias("sy"),
     ).first()
     n, sx, sxx = s["n"], int(s["sx"]), int(s["sxx"])
     if n < 2:
@@ -89,16 +130,80 @@ def _standardize(df: DataFrame, x_col: str) -> tuple[DataFrame, float, float]:
     var = float(n * sxx - sx * sx) / float(n * n)
     if var <= 0:
         raise ValueError(f"{x_col} is constant: logistic fit is undefined")
-    import math
-
     scale = math.sqrt(var)
-    return (
-        df.withColumn(
-            "__xs", (F.col(x_col).cast("double") - F.lit(mean)) / F.lit(scale)
-        ),
-        mean,
-        scale,
+    dfs = df.withColumn(
+        "__xs", (F.col(x_col).cast("double") - F.lit(mean)) / F.lit(scale)
     )
+    return dfs, n, int(s["sy"])
+
+
+def _solve_2x2(
+    a11: float, a12: float, a22: float, r1: float, r2: float
+) -> tuple[float, float] | None:
+    """Solve [a11 a12; a12 a22]·x = [r1; r2] by Cramer's rule in one
+    fixed double op order (the oracle replays it); None when the
+    system is degenerate (det <= 0)."""
+    det = a11 * a22 - a12 * a12
+    if det <= 0:
+        return None
+    return (r1 * a22 - r2 * a12) / det, (r2 * a11 - r1 * a12) / det
+
+
+def _irls_sums(w: Column, g: Column) -> list[Column]:
+    """One IRLS round's five exact Newton sums over ``__xq``: Σw, Σw·x,
+    Σw·x², Σg, Σg·x, each DECIMAL(38,0)."""
+    xq = F.col("__xq")
+    return [
+        F.sum(w.cast(_DEC)).alias("sw"),
+        F.sum(w.cast(_DEC) * xq).alias("swx"),
+        F.sum(w.cast(_DEC) * xq * xq).alias("swxx"),
+        F.sum(g.cast(_DEC)).alias("sg"),
+        F.sum(g.cast(_DEC) * xq).alias("sgx"),
+    ]
+
+
+def _irls(
+    df: DataFrame,
+    x_col: str,
+    y_col: str,
+    iters: int,
+    wg: Callable[[Column], tuple[Column, Column]],
+    b0_start: Callable[[float], int],
+) -> tuple[float, float, DataFrame]:
+    """The one IRLS driver: a family is its link ``wg`` (linear
+    predictor → per-row micro (w, g) columns) and ``b0_start`` (ȳ →
+    starting micro intercept). Returns (b0_micro, b1_micro, quantized
+    pinned frame)."""
+    if iters < 1:
+        raise ValueError("iters must be >= 1")
+    dfs, n, sy = _standardize(df, x_col, y_col)
+    # pin the quantized frame once: every IRLS round (and the caller's
+    # scoring pass) re-reads this, and without the pin each of the
+    # ``iters``+1 aggregations would replay the ENTIRE upstream plan
+    # (joins, groupBys) — measured 6.3s -> ~1s on the IPW query
+    dfq = (
+        dfs.withColumn("__xq", F.round(F.col("__xs") * M).cast("long"))
+        .withColumn("__y", F.col(y_col).cast("long"))
+        .localCheckpoint(eager=False)
+    )
+    b0, b1 = b0_start(float(sy) / float(n)), 0  # integer micro-units
+    for _ in range(iters):
+        row = dfq.agg(*_irls_sums(*wg(_eta(b0, b1)))).first()
+        # units: sw micro, swx micro², swxx micro³, sg micro, sgx micro².
+        # Engine-replayable normalization: double-convert each exact sum
+        # FIRST (the oracle CASTs then divides), one fixed op order.
+        step = _solve_2x2(
+            float(int(row["sw"])) / M,
+            float(int(row["swx"])) / M / M,
+            float(int(row["swxx"])) / M / M / M,
+            float(int(row["sg"])) / M,
+            float(int(row["sgx"])) / M / M,
+        )
+        if step is None:
+            break  # degenerate (e.g. all-0/all-1 labels); keep current fit
+        b0 = b0 + _round_away(step[0] * M)
+        b1 = b1 + _round_away(step[1] * M)
+    return float(b0), float(b1), dfq
 
 
 def logistic_irls(
@@ -123,55 +228,24 @@ def logistic_irls(
     at 100 TB fit on a deterministic sample (split_assign) and score
     everything — the scan count is the knob, the shape stays.
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    dfs, _, _ = _standardize(df, x_col)
-    xq = F.round(F.col("__xs") * M).cast("long")  # micro-standardized x
-    # pin the quantized frame once: every IRLS round (and the caller's
-    # scoring pass) re-reads this, and without the pin each of the
-    # ``iters``+1 aggregations would replay the ENTIRE upstream plan
-    # (joins, groupBys) — measured 6.3s -> ~1s on the IPW query
-    dfq = (
-        dfs.withColumn("__xq", xq)
-        .withColumn("__y", F.col(y_col).cast("long"))
-        .localCheckpoint(eager=False)
+    return _irls(df, x_col, y_col, iters, _logit_wg, lambda ybar: 0)
+
+
+def _ipw_weights(
+    df: DataFrame, x_col: str, treat_col: str, iters: int, clip_micro: int
+) -> tuple[DataFrame, Column, Column]:
+    """Fit the logistic propensity e(x) = P(T=1|x) and return the
+    quantized frame (``__y`` = T) with the clipped propensity's exact
+    pico-scale inverse weights: wt = 10¹²//e, wc = 10¹²//(M−e), e
+    clipped to [clip_micro, M−clip_micro] micro-units (the overlap
+    guard keeps both weights integral and <= 1e8)."""
+    b0, b1, dfq = logistic_irls(df, x_col, treat_col, iters)
+    e = F.greatest(
+        F.lit(clip_micro),
+        F.least(F.lit(M - clip_micro), _sigmoid_micro(_eta(b0, b1))),
     )
-    b0, b1 = 0, 0  # integer micro-units
-    for _ in range(iters):
-        z = (
-            F.lit(float(b0))
-            + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
-        ) / F.lit(float(M))
-        p = _sigmoid_micro(z)
-        w = _idiv(p * (F.lit(M) - p), M)  # micro weight, exact
-        g = F.lit(M) * F.col("__y") - p  # micro gradient
-        row = dfq.agg(
-            F.sum(w).alias("sw"),
-            F.sum((w * F.col("__xq")).cast(_DEC)).alias("swx"),
-            F.sum(
-                (w.cast(_DEC) * F.col("__xq") * F.col("__xq"))
-            ).alias("swxx"),
-            F.sum(g).alias("sg"),
-            F.sum((g * F.col("__xq")).cast(_DEC)).alias("sgx"),
-        ).first()
-        sw, swx, swxx = int(row["sw"]), int(row["swx"]), int(row["swxx"])
-        sg, sgx = int(row["sg"]), int(row["sgx"])
-        # units: sw micro, swx micro², swxx micro³, sg micro, sgx micro².
-        # Engine-replayable normalization: double-convert each exact sum
-        # FIRST (the oracle CASTs then divides), one fixed op order.
-        a11 = float(sw) / M
-        a12 = float(swx) / M / M
-        a22 = float(swxx) / M / M / M
-        r1 = float(sg) / M
-        r2 = float(sgx) / M / M
-        det = a11 * a22 - a12 * a12
-        if det <= 0:
-            break  # degenerate (all-0/all-1 labels); keep current fit
-        d0 = (r1 * a22 - r2 * a12) / det
-        d1 = (r2 * a11 - r1 * a12) / det
-        b0 = b0 + _round_away(d0 * M)
-        b1 = b1 + _round_away(d1 * M)
-    return float(b0), float(b1), dfq
+    P = M * M
+    return dfq, _idiv(F.lit(P), e), _idiv(F.lit(P), F.lit(M) - e)
 
 
 def logistic_fit_summary(
@@ -185,10 +259,7 @@ def logistic_fit_summary(
     base rate, and accuracy of the 0.5-threshold classifier — each from
     one exact-integer pass."""
     b0, b1, dfq = logistic_irls(df, x_col, y_col, iters)
-    z = (
-        F.lit(float(b0)) + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
-    ) / F.lit(float(M))
-    p = _sigmoid_micro(z)
+    p = _sigmoid_micro(_eta(b0, b1))
     hit = (
         ((p >= F.lit(M // 2)).cast("long") == F.col("__y")).cast("long")
     )
@@ -235,19 +306,9 @@ def ipw_ate(
 
     Output: one row — n, n_treated, mean_treated, mean_control, ate.
     """
-    b0, b1, dfq = logistic_irls(df, x_col, treat_col, iters)
-    z = (
-        F.lit(float(b0)) + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
-    ) / F.lit(float(M))
-    e = F.greatest(
-        F.lit(clip_micro),
-        F.least(F.lit(M - clip_micro), _sigmoid_micro(z)),
-    )
+    dfq, wt, wc = _ipw_weights(df, x_col, treat_col, iters, clip_micro)
     t = F.col("__y")  # treat_col, cast long by logistic_irls
     y = F.col(outcome_col).cast("long")
-    P = M * M  # pico scale: weights 10¹²//e stay integral and bounded
-    wt = _idiv(F.lit(P), e)  # <= 1e8 (clip guarantees e >= clip_micro)
-    wc = _idiv(F.lit(P), F.lit(M) - e)
     zero = F.lit(0).cast(_DEC)
     agg = dfq.agg(
         F.count(F.lit(1)).alias("n"),
@@ -306,21 +367,13 @@ def aipw_ate(
 
     Output: one row — n, n_treated, mean_treated, mean_control, ate.
     """
-    b0, b1, dfq = logistic_irls(df, x_col, treat_col, iters)
-    z = (
-        F.lit(float(b0)) + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
-    ) / F.lit(float(M))
-    e = F.greatest(
-        F.lit(clip_micro),
-        F.least(F.lit(M - clip_micro), _sigmoid_micro(z)),
-    )
-    P = M * M
+    dfq, wt, wc = _ipw_weights(df, x_col, treat_col, iters, clip_micro)
     base = dfq.select(
         F.col("__y").alias("__t"),
         F.col(outcome_col).cast("long").alias("__yo"),
         "__xq",
-        _idiv(F.lit(P), e).alias("__wt"),
-        _idiv(F.lit(P), F.lit(M) - e).alias("__wc"),
+        wt.alias("__wt"),
+        wc.alias("__wc"),
     ).localCheckpoint(eager=False)
 
     zero = F.lit(0).cast(_DEC)
@@ -448,8 +501,6 @@ def msprt_two_sample(
     rho = var * (1.0 / nc + 1.0 / nt)  # 2σ²/Δ in the paper's notation
     if rho <= 0:
         raise ValueError("degenerate variance: all values identical")
-    import math
-
     log_lam = 0.5 * math.log(rho / (rho + tau)) + (
         theta * theta * tau / (2.0 * rho * (rho + tau))
     )
@@ -531,16 +582,6 @@ def conformal_interval(
     )
 
 
-def _exp_mu_micro(z: Column) -> Column:
-    """round(1e6 · exp(z)) as BIGINT with z clamped to [-10, 10] — the
-    Poisson family's per-row transcendental (the log-link inverse).
-    The clamp keeps micro-μ inside BIGINT (e¹⁰ ≈ 22026 → 2.2e10 micro)
-    and is irrelevant near any real fit: with the log-mean init below,
-    fitted linear predictors live within a few units of 0."""
-    zc = F.greatest(F.lit(-10.0), F.least(F.lit(10.0), z))
-    return F.round(F.lit(float(M)) * F.exp(zc)).cast("long")
-
-
 def poisson_irls(
     df: DataFrame,
     x_col: str,
@@ -563,53 +604,10 @@ def poisson_irls(
 
     Returns (b0_micro, b1_micro, quantized frame) like logistic_irls.
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    import math
-
-    dfs, _, _ = _standardize(df, x_col)
-    xq = F.round(F.col("__xs") * M).cast("long")
-    dfq = (
-        dfs.withColumn("__xq", xq)
-        .withColumn("__y", F.col(y_col).cast("long"))
-        .localCheckpoint(eager=False)
+    return _irls(
+        df, x_col, y_col, iters, _log_wg,
+        lambda ybar: _round_away(math.log(max(ybar, 1e-6)) * M),
     )
-    head = dfq.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("__y").alias("sy")
-    ).first()
-    n, sy = int(head["n"]), int(head["sy"])
-    mean = float(sy) / float(n)
-    b0 = _round_away(math.log(max(mean, 1e-6)) * M)
-    b1 = 0
-    for _ in range(iters):
-        z = (
-            F.lit(float(b0))
-            + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
-        ) / F.lit(float(M))
-        mu = _exp_mu_micro(z)
-        g = F.lit(M) * F.col("__y") - mu
-        row = dfq.agg(
-            F.sum(mu.cast(_DEC)).alias("sw"),
-            F.sum(mu.cast(_DEC) * F.col("__xq")).alias("swx"),
-            F.sum(mu.cast(_DEC) * F.col("__xq") * F.col("__xq")).alias("swxx"),
-            F.sum(g.cast(_DEC)).alias("sg"),
-            F.sum(g.cast(_DEC) * F.col("__xq")).alias("sgx"),
-        ).first()
-        sw, swx, swxx = int(row["sw"]), int(row["swx"]), int(row["swxx"])
-        sg, sgx = int(row["sg"]), int(row["sgx"])
-        a11 = float(sw) / M
-        a12 = float(swx) / M / M
-        a22 = float(swxx) / M / M / M
-        r1 = float(sg) / M
-        r2 = float(sgx) / M / M
-        det = a11 * a22 - a12 * a12
-        if det <= 0:
-            break
-        d0 = (r1 * a22 - r2 * a12) / det
-        d1 = (r2 * a11 - r1 * a12) / det
-        b0 = b0 + _round_away(d0 * M)
-        b1 = b1 + _round_away(d1 * M)
-    return float(b0), float(b1), dfq
 
 
 def poisson_fit_summary(
@@ -622,8 +620,6 @@ def poisson_fit_summary(
     the standardized feature, n, total counts, the empirical mean rate
     and the fitted rate at the feature mean (= exp(b0)) — b1's sign IS
     the elasticity direction of the count in the feature."""
-    import math
-
     b0, b1, dfq = poisson_irls(df, x_col, y_col, iters)
     agg = dfq.agg(
         F.count(F.lit(1)).alias("n"), F.sum("__y").alias("sy")
@@ -718,8 +714,7 @@ def ridge_kfold_cv(
         .select("*", F.explode(lam).alias("l"))
         .select("fold", "n", "sx", "sy", "sxx", "sxy", F.col("l.lam").alias("lam"))
     )
-    # degenerate guard (mirrors the det<=0 break in poisson_irls /
-    # logistic_irls): with lam=0 and a constant-x training fold the
+    # degenerate guard (mirrors the det<=0 break of the IRLS solve): with lam=0 and a constant-x training fold the
     # closed-form denominator n*Sxx - Sx^2 + lam*n^2 is 0 — an
     # unguarded division yields Inf/NaN residuals whose round/cast
     # diverges cross-engine; emit NULL b1 instead so the fold's
@@ -819,11 +814,7 @@ def poisson_dispersion(
     Output: one row — n, chi2_pearson, dof, dispersion, overdispersed.
     """
     b0, b1, dfq = poisson_irls(df, x_col, y_col, iters)
-    z = (
-        F.lit(float(b0)) + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
-    ) / F.lit(float(M))
-    mu = _exp_mu_micro(z)
-    g = F.lit(M) * F.col("__y") - mu
+    mu, g = _log_wg(_eta(b0, b1))
     term = F.round(
         F.lit(1000.0)
         * g.cast("double")
@@ -868,19 +859,9 @@ def ipw_balance(
 
     Output: one row — n_treated, n_control, smd_before, smd_after.
     """
-    b0, b1, dfq = logistic_irls(df, x_col, treat_col, iters)
-    z = (
-        F.lit(float(b0)) + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
-    ) / F.lit(float(M))
-    e = F.greatest(
-        F.lit(clip_micro),
-        F.least(F.lit(M - clip_micro), _sigmoid_micro(z)),
-    )
+    dfq, wt, wc = _ipw_weights(df, x_col, treat_col, iters, clip_micro)
     t = F.col("__y")
     x = F.col(x_col).cast("long")
-    P = M * M
-    wt = _idiv(F.lit(P), e)
-    wc = _idiv(F.lit(P), F.lit(M) - e)
     w = F.when(t == 1, wt).otherwise(wc)
     zero = F.lit(0).cast(_DEC)
     agg = dfq.agg(
@@ -1022,7 +1003,6 @@ def huber_irls(
     d_ = lambda c: c.cast(_DEC)  # noqa: E731
     dM2 = int(delta) * M * M
     b0, b1 = 0, 0  # micro-unit integers
-    n_rows = None
     for i in range(iters + 1):
         if i == 0:
             w = F.lit(M).cast("long")
@@ -1041,26 +1021,19 @@ def huber_irls(
                 F.col("__au") <= F.lit(int(delta) * M), F.lit(M).cast("long")
             ).otherwise(F.expr(f"{dM2}L div __au"))
         row = cur.agg(
-            F.count(F.lit(1)).alias("n"),
             F.sum(w).alias("sw"),
             F.sum(d_(w) * F.col("x")).alias("swx"),
             F.sum(d_(w) * F.col("x") * F.col("x")).alias("swxx"),
             F.sum(d_(w) * F.col("y")).alias("swy"),
             F.sum(d_(w) * F.col("x") * F.col("y")).alias("swxy"),
         ).first()
-        n_rows = int(row["n"])
-        a11 = float(int(row["sw"])) / M
-        a12 = float(int(row["swx"])) / M
-        a22 = float(int(row["swxx"])) / M
-        r1 = float(int(row["swy"])) / M
-        r2 = float(int(row["swxy"])) / M
-        det = a11 * a22 - a12 * a12
-        if det <= 0:
+        fit = _solve_2x2(
+            *(float(int(row[k])) / M for k in ("sw", "swx", "swxx", "swy", "swxy"))
+        )
+        if fit is None:
             break  # degenerate design; keep the previous fit
-        nb0 = (r1 * a22 - r2 * a12) / det
-        nb1 = (r2 * a11 - r1 * a12) / det
-        b0 = _round_away(nb0 * M)
-        b1 = _round_away(nb1 * M)
+        b0 = _round_away(fit[0] * M)
+        b1 = _round_away(fit[1] * M)
     r_fin = F.col("y") * F.lit(M) - F.lit(b0) - F.lit(b1) * F.col("x")
     out = base.agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -1226,32 +1226,27 @@ def ipf_rake_2d(
         .localCheckpoint(eager=False)
     )
     for _ in range(rounds):
-        rm = w.groupBy("r").agg(F.sum("w_micro").alias("__rm"))
-        w = (
-            w.join(F.broadcast(rm), "r")
-            .withColumn(
-                "w_micro",
-                F.when(F.col("__rm") > 0,
-                       F.round(F.col("w_micro") * (F.col("__rt") / F.col("__rm")))
-                       .cast("long"))
-                .otherwise(F.lit(0).cast("long")),
-            )
-            .drop("__rm")
-        )
-        w = w.filter(F.col("__ct").isNotNull())
-        cm = w.groupBy("c").agg(F.sum("w_micro").alias("__cm"))
-        w = (
-            w.join(F.broadcast(cm), "c")
-            .withColumn(
-                "w_micro",
-                F.when(F.col("__cm") > 0,
-                       F.round(F.col("w_micro") * (F.col("__ct") / F.col("__cm")))
-                       .cast("long"))
-                .otherwise(F.lit(0).cast("long")),
-            )
-            .drop("__cm")
-        ).localCheckpoint(eager=False)
+        w = _rake_half_round(w, "r", "__rt").filter(F.col("__ct").isNotNull())
+        w = _rake_half_round(w, "c", "__ct").localCheckpoint(eager=False)
     return w.select("r", "c", "w_micro")
+
+
+def _rake_half_round(w: DataFrame, key: str, target: str) -> DataFrame:
+    """One raking half-round of ``ipf_rake_2d``: rescale each cell so
+    its ``key`` margin sums to the ``target`` column (a zero margin
+    leaves its cells at 0)."""
+    m = w.groupBy(key).agg(F.sum("w_micro").alias("__m"))
+    return (
+        w.join(F.broadcast(m), key)
+        .withColumn(
+            "w_micro",
+            F.when(F.col("__m") > 0,
+                   F.round(F.col("w_micro") * (F.col(target) / F.col("__m")))
+                   .cast("long"))
+            .otherwise(F.lit(0).cast("long")),
+        )
+        .drop("__m")
+    )
 
 
 def mann_whitney_u(

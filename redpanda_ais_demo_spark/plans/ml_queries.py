@@ -2258,7 +2258,7 @@ def _brier_oracle() -> str:
     "below it (operators/glm.py:logistic_irls).",
 )
 def brier_en_vs_length(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.glm import M, _sigmoid_micro, logistic_irls
+    from ..operators.glm import M, _eta, _sigmoid_micro, logistic_irls
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.filter(F.col("n_chars").isNotNull()).select(
@@ -2266,11 +2266,7 @@ def brier_en_vs_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("lang") == "en").cast("long").alias("y"),
     )
     b0, b1, dfq = logistic_irls(d, "x", "y", iters=_IRLS_ITERS)
-    z = (
-        F.lit(float(b0)) + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))
-    ) / F.lit(float(M))
-    p = _sigmoid_micro(z)
-    e = p - F.lit(M) * F.col("__y")
+    e = _sigmoid_micro(_eta(b0, b1)) - F.lit(M) * F.col("__y")
     agg = dfq.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("__y").cast("long").alias("n_pos"),

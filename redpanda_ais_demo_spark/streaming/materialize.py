@@ -64,28 +64,27 @@ def start_parquet_mv(df: DataFrame, path: str, checkpoint_dir: str, name: str) -
 
 @dataclass
 class Pipeline:
-    """Handles to the running dataflow: one streaming query keeps both
-    views current (the producer's one-stream→two-topic split, §3.1), so
-    ``position_query`` and ``info_query`` are the same query."""
+    """Handle to the running dataflow: one streaming query keeps both
+    views current (the producer's one-stream→two-topic split, §3.1);
+    ``position_query`` and ``info_query`` both name it."""
 
     spark: SparkSession
-    position_query: StreamingQuery
-    info_query: StreamingQuery
+    query: StreamingQuery
 
-    def _queries(self) -> list[StreamingQuery]:
-        qs = [self.position_query]
-        if self.info_query is not self.position_query:
-            qs.append(self.info_query)
-        return qs
+    @property
+    def position_query(self) -> StreamingQuery:
+        return self.query
+
+    @property
+    def info_query(self) -> StreamingQuery:
+        return self.query
 
     def process_all(self) -> None:
-        for q in self._queries():
-            q.processAllAvailable()
+        self.query.processAllAvailable()
 
     def stop(self) -> None:
-        for q in self._queries():
-            if q.isActive:
-                q.stop()
+        if self.query.isActive:
+            self.query.stop()
 
     def positions(self) -> DataFrame:
         return self.spark.table(POS_MV)
@@ -121,7 +120,7 @@ def run_pipeline(
         *(F.col(c).alias(c) for c in SHIP_POSITION_WITH_WEATHER.fieldNames())
     ).createOrReplaceTempView(POS_MV)
     sink.filter(~F.col(IS_POSITION)).select(*ship_info_columns()).createOrReplaceTempView(INFO_MV)
-    return Pipeline(spark=spark, position_query=query, info_query=query)
+    return Pipeline(spark=spark, query=query)
 
 
 def start_rollup_mv(

@@ -122,23 +122,17 @@ def test_conformal_interval_exact_quantile(spark):
 
 def test_irls_aggregation_plan_has_no_data_sized_shuffle(spark):
     # each IRLS pass must be a narrow projection + partial agg: no
-    # window, no sort, no join in the per-iteration aggregate
-    df = _sep_frame(spark)
-    from redpanda_ais_demo_spark.operators.glm import (
-        M,
-        _idiv,
-        _sigmoid_micro,
-    )
+    # window, no sort, no join in the per-iteration aggregate. Built
+    # from the driver's own round: its sum list over its pinned frame,
+    # for both links.
+    from redpanda_ais_demo_spark.operators import glm
 
-    z = (F.lit(0.0) + F.lit(0.5) * (F.col("x").cast("long") / F.lit(float(M)))) / F.lit(
-        float(M)
-    )
-    p = _sigmoid_micro(z)
-    w = _idiv(p * (F.lit(M) - p), M)
-    agg = df.agg(F.sum(w).alias("sw"))
-    plan = agg._jdf.queryExecution().executedPlan().toString().lower()
-    assert "sort" not in plan and "window" not in plan and "join" not in plan
-    assert plan.count("exchange") <= 1  # the single-partition final agg
+    _, _, dfq = glm.logistic_irls(_sep_frame(spark), "x", "y", iters=1)
+    for link in (glm._logit_wg, glm._log_wg):
+        agg = dfq.agg(*glm._irls_sums(*link(glm._eta(250_000, 1_400_000))))
+        plan = agg._jdf.queryExecution().executedPlan().toString().lower()
+        assert "sort" not in plan and "window" not in plan and "join" not in plan
+        assert plan.count("exchange") <= 1  # the single-partition final agg
 
 
 def test_aipw_zero_residual_outcome_model_recovers_gap(spark):
@@ -334,6 +328,7 @@ def test_brier_bounds_and_perfect_model(spark):
     from pyspark.sql import functions as F
     from redpanda_ais_demo_spark.operators.glm import (
         M,
+        _eta,
         _sigmoid_micro,
         logistic_irls,
     )
@@ -344,9 +339,7 @@ def test_brier_bounds_and_perfect_model(spark):
     rows = [(x, 0) for x in range(100)] + [(x, 1) for x in range(200, 300)]
     df = spark.createDataFrame(rows, "x long, y long")
     b0, b1, dfq = logistic_irls(df, "x", "y", iters=8)
-    z = (F.lit(float(b0)) + F.lit(float(b1)) * (F.col("__xq") / F.lit(float(M)))) / F.lit(float(M))
-    p = _sigmoid_micro(z)
-    e = p - F.lit(M) * F.col("__y")
+    e = _sigmoid_micro(_eta(b0, b1)) - F.lit(M) * F.col("__y")
     r = dfq.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(e.cast("decimal(38,0)") * e).alias("se"),
@@ -372,3 +365,55 @@ def test_ridge_cv_constant_x_fold_lambda_zero_is_null(spark):
     assert out[0].cv_mse is None
     assert out[1].cv_mse is not None
     assert out[1].is_best
+
+
+def test_irls_trajectories_are_pinned_and_poisson_runs_one_scalar_pass(spark):
+    """Golden micro-unit coefficients for the IRLS family on small
+    fixed fixtures (any change to the link, the start, the sums or the
+    2×2 solve moves them), and the job count of a Poisson fit: the
+    standardize pass also yields Σy, so the log-mean start needs no
+    scalar pass of its own."""
+    from redpanda_ais_demo_spark.operators.glm import (
+        huber_irls,
+        logistic_irls,
+        poisson_irls,
+    )
+
+    assert logistic_irls(_sep_frame(spark), "x", "y", iters=6)[:2] == (0.0, 1402609.0)
+    xs = list(range(-50, 51))
+    sd = math.sqrt(sum(x * x for x in xs) / len(xs))
+    # counts around e^2: Newton from b0 = 0 would overshoot, so this
+    # trajectory runs from the log-mean start
+    planted = spark.createDataFrame(
+        [(x, round(math.exp(2.0 + x / sd))) for x in xs], "x long, y long"
+    )
+    assert poisson_irls(planted, "x", "y", iters=8)[:2] == (1996769.0, 1001239.0)
+    rare = spark.createDataFrame(
+        [(x, 1 if x % 7 == 0 and x > 0 else 0) for x in xs], "x long, y long"
+    )
+    assert poisson_irls(rare, "x", "y", iters=8)[:2] == (-3319841.0, 1213310.0)
+    assert logistic_irls(rare, "x", "y", iters=8)[:2] == (-3273123.0, 1336280.0)
+
+    # one gross outlier: |r| > delta at the fit, so rounds >= 1 take
+    # the delta·M² div |r| branch
+    whale = spark.createDataFrame(
+        [(i, 10 * i) for i in range(1, 41)] + [(50, 100000)], "x long, y long"
+    )
+    h = huber_irls(whale, "x", "y", delta=50, iters=8).first()
+    assert (h.b0, h.b1, h.n_downweighted) == (-4.418148, 10.276427, 1)
+    noisy = spark.createDataFrame(
+        [(i, 3 * i + 7 + (i * 37) % 11 - 5) for i in range(60)], "x long, y long"
+    )
+    h = huber_irls(noisy, "x", "y", delta=3, iters=6).first()
+    assert (h.b0, h.b1, h.n_downweighted) == (6.789988, 3.002835, 28)
+
+    # each pass is one aggregation, two jobs under AQE (shuffle-map
+    # stage + result): standardize + 8 rounds = 18. A separate Σy pass
+    # for the start made it 20.
+    sc = spark.sparkContext
+    sc.setJobGroup("poisson_fit_jobs", "poisson_irls job count")
+    try:
+        poisson_irls(planted, "x", "y", iters=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("poisson_fit_jobs")) == 18
