@@ -169,11 +169,11 @@ def _irls(
     iters: int,
     wg: Callable[[Column], tuple[Column, Column]],
     b0_start: Callable[[float], int],
-) -> tuple[float, float, DataFrame]:
+) -> tuple[float, float, DataFrame, int, int]:
     """The one IRLS driver: a family is its link ``wg`` (linear
     predictor → per-row micro (w, g) columns) and ``b0_start`` (ȳ →
     starting micro intercept). Returns (b0_micro, b1_micro, quantized
-    pinned frame)."""
+    pinned frame, n, Σy) — n and Σy come from the standardize pass."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
     dfs, n, sy = _standardize(df, x_col, y_col)
@@ -203,7 +203,7 @@ def _irls(
             break  # degenerate (e.g. all-0/all-1 labels); keep current fit
         b0 = b0 + _round_away(step[0] * M)
         b1 = b1 + _round_away(step[1] * M)
-    return float(b0), float(b1), dfq
+    return float(b0), float(b1), dfq, n, sy
 
 
 def logistic_irls(
@@ -228,7 +228,7 @@ def logistic_irls(
     at 100 TB fit on a deterministic sample (split_assign) and score
     everything — the scan count is the knob, the shape stays.
     """
-    return _irls(df, x_col, y_col, iters, _logit_wg, lambda ybar: 0)
+    return _irls(df, x_col, y_col, iters, _logit_wg, lambda ybar: 0)[:3]
 
 
 def _ipw_weights(
@@ -604,6 +604,13 @@ def poisson_irls(
 
     Returns (b0_micro, b1_micro, quantized frame) like logistic_irls.
     """
+    return _poisson_fit(df, x_col, y_col, iters)[:3]
+
+
+def _poisson_fit(
+    df: DataFrame, x_col: str, y_col: str, iters: int
+) -> tuple[float, float, DataFrame, int, int]:
+    """``poisson_irls`` plus the fit's n and Σy."""
     return _irls(
         df, x_col, y_col, iters, _log_wg,
         lambda ybar: _round_away(math.log(max(ybar, 1e-6)) * M),
@@ -620,11 +627,7 @@ def poisson_fit_summary(
     the standardized feature, n, total counts, the empirical mean rate
     and the fitted rate at the feature mean (= exp(b0)) — b1's sign IS
     the elasticity direction of the count in the feature."""
-    b0, b1, dfq = poisson_irls(df, x_col, y_col, iters)
-    agg = dfq.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("__y").alias("sy")
-    ).first()
-    n, sy = int(agg["n"]), int(agg["sy"])
+    b0, b1, _, n, sy = _poisson_fit(df, x_col, y_col, iters)
     spark = df.sparkSession
     out = [
         (

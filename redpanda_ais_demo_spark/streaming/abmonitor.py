@@ -20,38 +20,41 @@ positive rate (the whole reason ``msprt_purchase_by_variant`` exists);
 ship decisions on the mSPRT, watch this monitor for plumbing sanity
 and effect direction.
 
-Replay/state discipline is shared with the other trackers: a batch
-derives only from the newest ``state_dir/__batch_id=<id>`` strictly
-below its own id, via the Hadoop-FS helpers (hdfs:// and s3a:// state
-resumes instead of silently resetting).
+The live monitor runs on the state-partition loop of
+``streaming/tracker.py`` (which states the replay rule); its snapshot
+projection is the one ``monitor_trajectory_batch`` replays.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .trending import _latest_state_below, _list_state_ids, _prune_state_partitions
+from .tracker import start_tracker
 
 _STATE_SCHEMA = "n_c long, c_c long, n_t long, c_t long"
+
+
+def _arm_sums(
+    variant_col: str, converted_col: str, control: str, treatment: str
+) -> list[F.Column]:
+    """Exact-integer (n_c, c_c, n_t, c_t) aggregate columns: trials and
+    conversions per arm."""
+    pick = lambda g, e: F.coalesce(  # noqa: E731
+        F.sum(F.when(F.col(variant_col) == g, e)), F.lit(0)
+    ).cast("long")
+    conv = F.col(converted_col).cast("long")
+    one = F.lit(1)
+    return [pick(control, one), pick(control, conv), pick(treatment, one), pick(treatment, conv)]
 
 
 def batch_arm_counts(
     df: DataFrame, variant_col: str, converted_col: str, control: str, treatment: str
 ) -> DataFrame:
     """One-row exact-integer (n, conversions) per arm for a micro-batch."""
-    pick = lambda g, e: F.coalesce(  # noqa: E731
-        F.sum(F.when(F.col(variant_col) == g, e)), F.lit(0)
-    ).cast("long")
-    one = F.lit(1)
-    conv = F.col(converted_col).cast("long")
-    return df.agg(
-        pick(control, one).alias("bn_c"),
-        pick(control, conv).alias("bc_c"),
-        pick(treatment, one).alias("bn_t"),
-        pick(treatment, conv).alias("bc_t"),
-    )
+    sums = _arm_sums(variant_col, converted_col, control, treatment)
+    return df.agg(*[c.alias(a) for c, a in zip(sums, ("bn_c", "bc_c", "bn_t", "bc_t"))])
 
 
 def fold_counts(state: DataFrame | None, batch: DataFrame) -> DataFrame:
@@ -80,6 +83,26 @@ def _z_expr() -> F.Column:
     return F.when(ok & (se > 0), (pt - pc) / se)
 
 
+def _readout(z_threshold: float) -> list:
+    """The snapshot projection over the cumulative count columns —
+    counts, round-6 rates, z and the |z| > threshold flag — shared by
+    the live monitor and its batch replay, so their rows agree by
+    construction."""
+    if z_threshold <= 0:
+        raise ValueError(f"z_threshold must be positive, got {z_threshold}")
+    z = _z_expr()
+    rate = lambda c, n: F.round(  # noqa: E731
+        F.when(F.col(n) > 0, F.col(c).cast("double") / F.col(n).cast("double")), 6
+    )
+    return [
+        "n_c", "c_c", "n_t", "c_t",
+        rate("c_c", "n_c").alias("rate_control"),
+        rate("c_t", "n_t").alias("rate_treatment"),
+        F.round(z, 6).alias("z_score"),
+        F.when(z.isNotNull(), F.abs(z) > F.lit(float(z_threshold))).alias("flagged"),
+    ]
+
+
 def monitor_trajectory_batch(
     subjects: DataFrame,
     batch_ts_col: str,
@@ -92,8 +115,8 @@ def monitor_trajectory_batch(
     """Batch replay of the streaming monitor's snapshot trajectory: one
     row per distinct ``batch_ts_col`` value (the micro-batch analogue —
     e.g. the subject's entry day), with the CUMULATIVE per-arm counts
-    and the identical snapshot arithmetic (``_z_expr``, round-6 rates,
-    |z| > threshold flag). Feeding the same subjects to
+    and the live monitor's own snapshot projection (``_readout``).
+    Feeding the same subjects to
     ``start_ab_monitor`` in ``batch_ts`` order produces byte-identical
     snapshot rows — the drift-tracker batch-parity contract, which is
     what lets a DuckDB oracle hash-check the streaming fold.
@@ -104,20 +127,12 @@ def monitor_trajectory_batch(
     single-partition window holds a constant-bounded row count at any
     input volume (same argument as the bounded-domain ntile).
     """
-    if z_threshold <= 0:
-        raise ValueError(f"z_threshold must be positive, got {z_threshold}")
+    readout = _readout(z_threshold)
     from pyspark.sql import Window
 
-    arm = lambda g, e: F.coalesce(  # noqa: E731
-        F.sum(F.when(F.col(variant_col) == g, e)), F.lit(0)
-    ).cast("long")
-    one = F.lit(1)
-    conv = F.col(converted_col).cast("long")
+    sums = _arm_sums(variant_col, converted_col, control, treatment)
     per = subjects.groupBy(F.col(batch_ts_col).alias("batch_ts")).agg(
-        arm(control, one).alias("dn_c"),
-        arm(control, conv).alias("dc_c"),
-        arm(treatment, one).alias("dn_t"),
-        arm(treatment, conv).alias("dc_t"),
+        *[c.alias(a) for c, a in zip(sums, ("dn_c", "dc_c", "dn_t", "dc_t"))]
     )
     w = Window.orderBy("batch_ts").rowsBetween(Window.unboundedPreceding, 0)
     cum = per.select(
@@ -127,18 +142,7 @@ def monitor_trajectory_batch(
         F.sum("dn_t").over(w).cast("long").alias("n_t"),
         F.sum("dc_t").over(w).cast("long").alias("c_t"),
     )
-    z = _z_expr()
-    rate = lambda c, n: F.round(  # noqa: E731
-        F.when(F.col(n) > 0, F.col(c).cast("double") / F.col(n).cast("double")), 6
-    )
-    return cum.select(
-        "batch_ts",
-        "n_c", "c_c", "n_t", "c_t",
-        rate("c_c", "n_c").alias("rate_control"),
-        rate("c_t", "n_t").alias("rate_treatment"),
-        F.round(z, 6).alias("z_score"),
-        F.when(z.isNotNull(), F.abs(z) > F.lit(float(z_threshold))).alias("flagged"),
-    )
+    return cum.select("batch_ts", *readout)
 
 
 def start_ab_monitor(
@@ -156,43 +160,14 @@ def start_ab_monitor(
     """Start the monitor. Each micro-batch replaces the one-row count
     state and appends one snapshot partition (batch_id, per-arm
     cumulative counts and rates, z, flagged)."""
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
-    if z_threshold <= 0:
-        raise ValueError(f"z_threshold must be positive, got {z_threshold}")
-    spark = stream.sparkSession
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _latest_state_below(spark, state_dir, batch_id)
-        if prior is not None:
-            prior = prior.select("n_c", "c_c", "n_t", "c_t")
-        folded = fold_counts(
-            prior, batch_arm_counts(batch_df, variant_col, converted_col, control, treatment)
-        ).localCheckpoint()
-        folded.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        z = _z_expr()
-        rate = lambda c, n: F.round(  # noqa: E731
-            F.when(F.col(n) > 0, F.col(c).cast("double") / F.col(n).cast("double")), 6
-        )
-        snap = folded.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            "n_c", "c_c", "n_t", "c_t",
-            rate("c_c", "n_c").alias("rate_control"),
-            rate("c_t", "n_t").alias("rate_treatment"),
-            F.round(z, 6).alias("z_score"),
-            F.when(z.isNotNull(), F.abs(z) > F.lit(float(z_threshold))).alias("flagged"),
-        )
-        snap.write.mode("overwrite").parquet(
-            snapshots_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        _prune_state_partitions(spark, state_dir, batch_id - retain + 1)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    readout = _readout(z_threshold)
+    return start_tracker(
+        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        ("n_c", "c_c", "n_t", "c_t"),
+        lambda b, prior: fold_counts(
+            prior, batch_arm_counts(b, variant_col, converted_col, control, treatment)
+        ),
+        lambda state: state.select(*readout),
     )
 
 
@@ -201,5 +176,4 @@ __all__ = [
     "fold_counts",
     "monitor_trajectory_batch",
     "start_ab_monitor",
-    "_list_state_ids",
 ]

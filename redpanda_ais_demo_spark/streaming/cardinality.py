@@ -2,23 +2,15 @@
 stream EVER seen" over an unbounded feed, in constant state — the
 streaming form of the HLL rollups in ``operators/sketches.py``.
 
-Shape per micro-batch (foreachBatch):
+Per micro-batch, on the state-partition loop of ``streaming/tracker.py``
+(which states the replay rule):
 1. sketch the batch (one ``hll_sketch_agg`` — a partial-aggregable
    JVM aggregate; the shuffle carries sketches, never raw keys),
 2. union with the persisted cumulative sketch (``hll_union_agg`` over
    two rows — HLL union is SET-mergeable: any arrival order covers the
    same key set; the ESTIMATE can wobble by a count or two with merge
    representation, but a same-order replay is byte-identical),
-3. write the new sketch state to ``state_dir/__batch_id=<id>`` and an
-   estimate snapshot row to ``snapshots_dir/__batch_id=<id>``.
-
-Replay idempotency (the trending-tracker doctrine): a batch derives
-ONLY from the newest state partition with id strictly below its own,
-so a crash-after-write replay rereads the same predecessor and
-overwrites its own partitions with identical bytes. State discovery
-and pruning go through the Hadoop FileSystem helpers shared with
-``streaming/trending.py`` — hdfs:// and s3a:// state dirs resume
-instead of silently resetting.
+3. snapshot the estimate.
 
 At 100 TB: state is ONE sketch (kilobytes) regardless of stream
 volume; per batch the only data-sized pass is the partial-aggregated
@@ -28,11 +20,11 @@ lgK=12).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .trending import _latest_state_below, _list_state_ids, _prune_state_partitions
+from .tracker import start_tracker
 
 
 def batch_sketch(df: DataFrame, key_col: str, lg_k: int = 12) -> DataFrame:
@@ -61,32 +53,15 @@ def start_distinct_tracker(
     """Start the tracker. Each micro-batch replaces the cumulative
     sketch under ``state_dir`` and appends one snapshot partition under
     ``snapshots_dir`` (columns: batch_id, n_estimate)."""
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
-    spark = stream.sparkSession
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _latest_state_below(spark, state_dir, batch_id)
-        merged = merge_sketches(prior, batch_sketch(batch_df, key_col, lg_k))
-        merged = merged.localCheckpoint()
-        merged.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        snap = merged.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
+    return start_tracker(
+        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        ("sketch",),
+        lambda b, prior: merge_sketches(prior, batch_sketch(b, key_col, lg_k)),
+        lambda state: state.select(
             F.round(F.hll_sketch_estimate(F.col("sketch"))).cast("long").alias(
                 "n_estimate"
-            ),
-        )
-        snap.write.mode("overwrite").parquet(
-            snapshots_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        _prune_state_partitions(spark, state_dir, batch_id - retain + 1)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+            )
+        ),
     )
 
 
@@ -94,5 +69,4 @@ __all__ = [
     "batch_sketch",
     "merge_sketches",
     "start_distinct_tracker",
-    "_list_state_ids",
 ]

@@ -19,28 +19,23 @@ the KLL tracker's ε-identical contracts). Alarm when g exceeds ``h``
 the per-observation tabular CUSUM, documented contract: sensitivity is
 in units of cents×observations, so pick h ≈ h_per_obs × typical-n).
 
-Shape per micro-batch (foreachBatch):
+Per micro-batch, on the state-partition loop of ``streaming/tracker.py``
+(which states the replay rule):
 1. ONE partial-aggregable aggregate (n, Σcents) — the only data-sized
    pass; the shuffle carries two longs, never raw rows,
-2. fold into the persisted (g⁺, g⁻, n_total) state row read from the
-   newest ``state_dir/__batch_id=<id>`` strictly below this batch
-   (the trending-tracker replay doctrine: a crash-after-write replay
-   rereads the same predecessor and overwrites identical bytes),
-3. write new state + one snapshot row (batch mean, g values, alarms).
+2. fold into the persisted (g⁺, g⁻, n_total) state row,
+3. snapshot the batch mean, g values and alarms.
 
-State is ONE row of three longs at any stream volume. State discovery
-and pruning ride the Hadoop FileSystem helpers shared with
-``streaming/trending.py`` — hdfs:// and s3a:// dirs resume instead of
-silently resetting.
+State is ONE row of three longs at any stream volume.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .trending import _latest_state_below, _list_state_ids, _prune_state_partitions
+from .tracker import start_tracker
 
 _STATE_SCHEMA = "g_pos long, g_neg long, n_total long"
 
@@ -99,28 +94,17 @@ def start_cusum_tracker(
     state under ``state_dir`` and appends one snapshot partition under
     ``snapshots_dir`` (batch_id, batch_n, batch_mean, g_pos, g_neg,
     alarm_up, alarm_down)."""
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
     if h <= 0:
         raise ValueError(f"decision threshold h must be positive, got {h}")
     if k < 0:
         # negative slack makes on-target batches feed BOTH bands —
         # guaranteed false alarms that look like plausible snapshots
         raise ValueError(f"slack k must be >= 0, got {k}")
-    spark = stream.sparkSession
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _latest_state_below(spark, state_dir, batch_id)
-        if prior is not None:
-            prior = prior.select("g_pos", "g_neg", "n_total")
-        folded = fold_cusum(
-            prior, batch_moments(batch_df, value_col), mu0, k
-        ).localCheckpoint()
-        folded.select("g_pos", "g_neg", "n_total").write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        snap = folded.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
+    return start_tracker(
+        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        ("g_pos", "g_neg", "n_total"),
+        lambda b, prior: fold_cusum(prior, batch_moments(b, value_col), mu0, k),
+        lambda state: state.select(
             F.col("batch_n").cast("long").alias("batch_n"),
             F.round(
                 F.when(
@@ -133,16 +117,7 @@ def start_cusum_tracker(
             "g_neg",
             (F.col("g_pos") > F.lit(int(h))).alias("alarm_up"),
             (F.col("g_neg") > F.lit(int(h))).alias("alarm_down"),
-        )
-        snap.write.mode("overwrite").parquet(
-            snapshots_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        _prune_state_partitions(spark, state_dir, batch_id - retain + 1)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        ),
     )
 
 
@@ -150,5 +125,4 @@ __all__ = [
     "batch_moments",
     "fold_cusum",
     "start_cusum_tracker",
-    "_list_state_ids",
 ]

@@ -33,21 +33,22 @@ accepted more than N batches ago is accepted again — the right contract
 for time-local duplication (news bursts, crawl re-fetch windows); for
 global history keep retention unset and bucket-partition the index
 instead. Deletion is idempotent (removing an absent partition is a
-no-op), so replay semantics are unchanged; the accepted ROWS in
+no-op), so replay semantics are unchanged. Index discovery and pruning
+go through the Hadoop FileSystem helpers of ``streaming/tracker.py``,
+so a file://, hdfs:// or s3a:// index is probed and pruned like a
+plain path. The accepted ROWS in
 ``out_dir`` are never pruned — the index is operational probe state,
 not the archive.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import dedup
+from .tracker import list_state_ids, prune_state_partitions
 
 
 def _verified_matches(
@@ -220,23 +221,6 @@ def replay_verdicts(
     return out
 
 
-def _prune_index_partitions(index_dir: str, lo: int) -> None:
-    """Delete index partitions with ``__batch_id < lo``. Idempotent: an
-    already-pruned (or never-written) partition is a no-op, so crash
-    between write and prune, or replayed prune, changes nothing."""
-    if not os.path.isdir(index_dir):
-        return
-    for name in os.listdir(index_dir):
-        if not name.startswith("__batch_id="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid < lo:
-            shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
-
-
 def start_near_dup_filter(
     docs_stream: DataFrame,
     out_dir: str,
@@ -261,10 +245,7 @@ def start_near_dup_filter(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         index = None
-        if os.path.isdir(index_dir) and any(
-            name.endswith(".parquet") or name.startswith("__batch_id=")
-            for name in os.listdir(index_dir)
-        ):
+        if list_state_ids(spark, index_dir):
             index = spark.read.parquet(index_dir)
             if index_retention_batches is not None:
                 # partition-pruned probe: only the retention window is read.
@@ -289,7 +270,7 @@ def start_near_dup_filter(
         write(profiles, index_dir)
         write(rejections, reject_dir)
         if index_retention_batches is not None:
-            _prune_index_partitions(index_dir, batch_id - index_retention_batches)
+            prune_state_partitions(spark, index_dir, batch_id - index_retention_batches)
 
     return (
         docs_stream.writeStream.foreachBatch(process)

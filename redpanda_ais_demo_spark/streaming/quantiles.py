@@ -5,7 +5,8 @@ the quantile member of the streaming sketch family beside the HLL
 distinct tracker (``streaming/cardinality.py``) and the MG trending
 tokens (``streaming/trending.py``).
 
-Shape per micro-batch (foreachBatch):
+Per micro-batch, on the state-partition loop of ``streaming/tracker.py``
+(which states the replay rule):
 1. sketch the batch (one ``kll_sketch_agg_double`` — partial-
    aggregable JVM aggregate; the shuffle carries sketches, never raw
    values),
@@ -14,20 +15,13 @@ Shape per micro-batch (foreachBatch):
    (no merge aggregate), so the two-row union folds via
    ``F.aggregate`` over ``collect_list`` exactly like
    ``kll_rollup_quantiles``,
-3. write the new sketch to ``state_dir/__batch_id=<id>`` and one
-   snapshot row (batch_id + one column per tracked quantile) to
-   ``snapshots_dir/__batch_id=<id>``.
+3. snapshot one column per tracked quantile.
 
-Replay semantics (the trending-tracker doctrine, with one honest
-weakening): a batch derives ONLY from the newest state partition with
-id strictly below its own, so a crash-after-write replay rereads the
-same predecessor and overwrites its own partitions — but KLL
-compaction is RANDOMIZED, so the replayed sketch (and snapshot) is
+One honest weakening of the replay rule: KLL compaction is
+RANDOMIZED, so a replayed batch's sketch (and snapshot) is
 epsilon-identical within the sketch's rank error, not byte-identical
 like the HLL tracker. Downstream readers see exactly one version per
-batch id either way. State discovery and pruning go through the
-shared Hadoop FileSystem helpers — hdfs:// and s3a:// state dirs
-resume instead of silently resetting.
+batch id either way.
 
 At 100 TB: state is ONE sketch (k·log(n/k) doubles — kilobytes at any
 volume); per batch the only data-sized pass is the partial-aggregated
@@ -37,11 +31,11 @@ are always real data points (KLL keeps samples, not interpolations).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .trending import _latest_state_below, _prune_state_partitions
+from .tracker import start_tracker
 
 
 def batch_kll(df: DataFrame, value_col: str, k: int = 200) -> DataFrame:
@@ -83,6 +77,17 @@ def _quantile_col_name(q: float) -> str:
     return "q" + ("%g" % (q * 100)).replace(".", "_").replace("-", "m")
 
 
+def _quantile_names(quantiles: tuple[float, ...]) -> list[str]:
+    """Validated snapshot column names, one per tracked quantile — the
+    naming the live tracker and its batch replay share."""
+    if not quantiles or not all(0 < q <= 1 for q in quantiles):
+        raise ValueError("quantiles must be in (0, 1]")
+    names = [_quantile_col_name(q) for q in quantiles]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate quantile column names: {names}")
+    return names
+
+
 def start_quantile_tracker(
     stream: DataFrame,
     value_col: str,
@@ -99,41 +104,20 @@ def start_quantile_tracker(
     per tracked quantile, named q<100·p> with any fractional percent
     kept as an underscore suffix, e.g. 0.995 -> q99_5, so quantiles
     that round to the same integer percent can't collide)."""
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
-    if not quantiles or not all(0 < q <= 1 for q in quantiles):
-        raise ValueError("quantiles must be in (0, 1]")
-    names = [_quantile_col_name(q) for q in quantiles]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate quantile column names: {names}")
-    spark = stream.sparkSession
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _latest_state_below(spark, state_dir, batch_id)
-        merged = merge_kll(prior, batch_kll(batch_df, value_col, k))
-        merged = merged.localCheckpoint()
-        merged.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        snap = merged.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
+    names = _quantile_names(quantiles)
+    return start_tracker(
+        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        ("kll",),
+        lambda b, prior: merge_kll(prior, batch_kll(b, value_col, k)),
+        lambda state: state.select(
             *[
                 F.when(
                     F.col("kll").isNotNull(),
                     F.kll_sketch_get_quantile_double(F.col("kll"), F.lit(q)),
                 ).alias(name)
                 for q, name in zip(quantiles, names)
-            ],
-        )
-        snap.write.mode("overwrite").parquet(
-            snapshots_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        _prune_state_partitions(spark, state_dir, batch_id - retain + 1)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+            ]
+        ),
     )
 
 
@@ -165,11 +149,7 @@ def quantile_trajectory_batch(
     batch. Output: batch_ts, n, q<percent> columns (same naming as the
     live snapshots), values in natural units (cents/100).
     """
-    if not quantiles or not all(0 < q <= 1 for q in quantiles):
-        raise ValueError("quantiles must be in (0, 1]")
-    names = [_quantile_col_name(q) for q in quantiles]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate quantile column names: {names}")
+    names = _quantile_names(quantiles)
     from pyspark.sql import Window
 
     cents = F.round(F.col(value_col) * 100).cast("long")

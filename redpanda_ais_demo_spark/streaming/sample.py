@@ -14,17 +14,15 @@ exactly: folding any batch split of a stream through this tracker ends
 in the SAME k rows a batch kmv_sketch of the union would pick
 (pytest-pinned), because "k smallest of a union" is a semilattice fold.
 
-Shape per micro-batch (foreachBatch, the trending-tracker doctrine):
+Per micro-batch, on the state-partition loop of ``streaming/tracker.py``
+(which states the replay rule; integer state replays BYTE-identically,
+the HLL contract, not the KLL epsilon one):
 1. collapse the batch to its own bottom-k (distinct keys, portable
    md5-prefix 60-bit hash, per-key payload kept by the deterministic
    (h, key) order),
 2. union with the persisted k-row state and keep the union's bottom-k
    — a 2k-row sort, constant work at any stream volume,
-3. overwrite ``state_dir/__batch_id=<id>`` and a snapshot row count
-   under ``snapshots_dir`` — a batch derives ONLY from the newest
-   state partition strictly below its own id, so crash-after-write
-   replays rewrite identical bytes (integer state: BYTE-identical, the
-   HLL contract, not the KLL epsilon one).
+3. snapshot the sample size and the k-th smallest hash.
 
 At 100 TB: state is k rows regardless of volume; the only data-sized
 work per batch is one distinct + partial top-k.
@@ -32,11 +30,11 @@ work per batch is one distinct + partial top-k.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .trending import _latest_state_below, _prune_state_partitions
+from .tracker import start_tracker
 
 
 def _hash60(key) -> F.Column:
@@ -90,31 +88,14 @@ def start_sample_tracker(
     ``snapshots_dir``."""
     if k < 2:
         raise ValueError("k must be >= 2")
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
-    spark = stream.sparkSession
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _latest_state_below(spark, state_dir, batch_id)
-        merged = merge_bottom_k(
-            prior, batch_bottom_k(batch_df, key_col, payload_col, k), k
-        )
-        merged = merged.localCheckpoint()
-        merged.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        snap = merged.agg(
-            F.lit(batch_id).cast("long").alias("batch_id"),
+    return start_tracker(
+        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        ("h", "key", "payload"),
+        lambda b, prior: merge_bottom_k(
+            prior, batch_bottom_k(b, key_col, payload_col, k), k
+        ),
+        lambda state: state.agg(
             F.count(F.lit(1)).cast("long").alias("sample_size"),
             F.max("h").alias("tau"),
-        )
-        snap.write.mode("overwrite").parquet(
-            snapshots_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        _prune_state_partitions(spark, state_dir, batch_id - retain + 1)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        ),
     )

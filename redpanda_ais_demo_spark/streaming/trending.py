@@ -4,25 +4,16 @@ streaming form of the Misra-Gries heavy hitters in
 ``operators/sketches.py`` (same counter semantics, same undercount
 bound, state persisted across micro-batches instead of per-partition).
 
-Shape per micro-batch (foreachBatch):
+Per micro-batch, on the state-partition loop of ``streaming/tracker.py``
+(which states the replay rule):
 1. tokenize + count the batch (one partial-aggregable groupBy — the
    only batch-sized pass),
 2. merge with the persisted counter state: outer-join summed counts
    (MG counters are mergeable: errors add), then the MG batch
    decrement — subtract the (capacity+1)-th largest count from every
    counter and drop the non-positives — so state never exceeds
-   ``capacity`` rows,
-3. write the new state snapshot to ``state_dir/__batch_id=<id>`` and
-   the ranked top-k to ``snapshots_dir/__batch_id=<id>``, both with
-   dynamic partition overwrite.
-
-Replay idempotency: a batch's snapshot derives ONLY from the LATEST
-state partition with ``__batch_id`` strictly below its own plus the
-batch's rows, so a replayed batch rereads the same predecessor and
-overwrites its own partitions with identical bytes — effective
-exactly-once, no streaming state store involved. Old state partitions
-beyond the newest ``retain`` are deleted (idempotent no-op when absent)
-so state storage is O(capacity · retain) forever.
+   ``capacity`` rows and its storage is O(capacity · retain),
+3. snapshot the ranked top-k.
 
 Guarantee carried by every snapshot row: ``est <= true count`` and
 ``true - total_tokens/capacity <= est`` — any token whose true share
@@ -36,33 +27,11 @@ and it carries distinct batch tokens, never raw occurrences.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the JVM Hadoop API — works
-    for any configured scheme (file://, hdfs://, s3a://), not just the
-    driver-local disk."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
-
-
-def _list_state_ids(spark: SparkSession, state_dir: str) -> list[int]:
-    """Batch ids of all persisted state partitions under ``state_dir``
-    (empty when the directory does not exist yet)."""
-    fs, jpath = _hadoop_fs(spark, state_dir)
-    if not fs.exists(jpath):
-        return []
-    ids = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if name.startswith("__batch_id="):
-            ids.append(int(name.split("=", 1)[1]))
-    return ids
+from .tracker import start_tracker
 
 
 def batch_token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -124,37 +93,6 @@ def trend_merge(
     return pruned
 
 
-def _latest_state_below(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame | None:
-    """Read the newest persisted state partition with id < batch_id —
-    the replay-stable predecessor. Resolved through the Hadoop
-    FileSystem API so non-local state dirs (hdfs://, s3a://) discover
-    prior state instead of silently resetting the counters."""
-    prior = [i for i in _list_state_ids(spark, state_dir) if i < batch_id]
-    if not prior:
-        return None
-    return spark.read.parquet(
-        state_dir.rstrip("/") + f"/__batch_id={max(prior)}"
-    )
-
-
-def _prune_state_partitions(
-    spark: SparkSession, state_dir: str, keep_from: int
-) -> None:
-    """Delete state partitions older than ``keep_from`` (idempotent)."""
-    fs, _ = _hadoop_fs(spark, state_dir)
-    jvm = spark._jvm
-    for i in _list_state_ids(spark, state_dir):
-        if i < keep_from:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    state_dir.rstrip("/") + f"/__batch_id={i}"
-                ),
-                True,
-            )
-
-
 def start_trending_tokens(
     docs_stream: DataFrame,
     state_dir: str,
@@ -169,35 +107,22 @@ def start_trending_tokens(
     top-``k`` snapshot partition under ``snapshots_dir`` (columns:
     batch_id, rank, token, est) and replaces the counter state under
     ``state_dir``."""
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
-    spark = docs_stream.sparkSession
+    wtop = Window.orderBy(F.col("cnt").desc(), F.col("token").asc())
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        counts = batch_token_counts(batch_df, text_col)
-        prior = _latest_state_below(spark, state_dir, batch_id)
-        new_state = trend_merge(prior, counts, capacity).localCheckpoint()
-        new_state.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        wtop = Window.orderBy(F.col("cnt").desc(), F.col("token").asc())
-        top = (
-            new_state.withColumn("rank", F.row_number().over(wtop))
+    def top_k(state: DataFrame) -> DataFrame:
+        return (
+            state.withColumn("rank", F.row_number().over(wtop))
             .filter(F.col("rank") <= k)
             .select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
                 F.col("rank").cast("long").alias("rank"),
                 "token",
                 F.col("cnt").alias("est"),
             )
         )
-        top.write.mode("overwrite").parquet(
-            snapshots_dir.rstrip("/") + f"/__batch_id={batch_id}"
-        )
-        _prune_state_partitions(spark, state_dir, batch_id - retain + 1)
 
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_tracker(
+        docs_stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        ("token", "cnt"),
+        lambda b, prior: trend_merge(prior, batch_token_counts(b, text_col), capacity),
+        top_k,
     )

@@ -376,6 +376,7 @@ def test_irls_trajectories_are_pinned_and_poisson_runs_one_scalar_pass(spark):
     from redpanda_ais_demo_spark.operators.glm import (
         huber_irls,
         logistic_irls,
+        poisson_fit_summary,
         poisson_irls,
     )
 
@@ -409,11 +410,16 @@ def test_irls_trajectories_are_pinned_and_poisson_runs_one_scalar_pass(spark):
 
     # each pass is one aggregation, two jobs under AQE (shuffle-map
     # stage + result): standardize + 8 rounds = 18. A separate Σy pass
-    # for the start made it 20.
+    # for the start made it 20. The summary reads n and Σy from the
+    # same standardize pass; its own count/Σy pass made it 20.
     sc = spark.sparkContext
-    sc.setJobGroup("poisson_fit_jobs", "poisson_irls job count")
-    try:
-        poisson_irls(planted, "x", "y", iters=8)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("poisson_fit_jobs")) == 18
+    for group, fit in (
+        ("poisson_fit_jobs", poisson_irls),
+        ("poisson_summary_jobs", poisson_fit_summary),
+    ):
+        sc.setJobGroup(group, f"{fit.__name__} job count")
+        try:
+            fit(planted, "x", "y", iters=8)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 18, group

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 
-from redpanda_ais_demo_spark.streaming import abmonitor
+from redpanda_ais_demo_spark.streaming import abmonitor, tracker
 
 SCHEMA = "variant string, converted long"
 
@@ -66,7 +66,7 @@ def test_ab_monitor_flags_planted_lift_not_null(spark, tmp_path):
     assert round(batch_z, 6) == last.z_score
 
     # state bounded by retention
-    assert len(abmonitor._list_state_ids(spark, state)) <= 2
+    assert len(tracker.list_state_ids(spark, state)) <= 2
 
 
 def test_ab_monitor_replay_is_byte_identical(spark, tmp_path):
@@ -86,7 +86,7 @@ def test_ab_monitor_replay_is_byte_identical(spark, tmp_path):
 
     last = max(_snaps(spark, snaps))
     state_before = spark.read.parquet(state + f"/__batch_id={last}").collect()[0]
-    prior = abmonitor._latest_state_below(spark, state, last)
+    prior = tracker.latest_state_below(spark, state, last)
     batch = spark.createDataFrame(
         _trials("A", 20, 200) + _trials("B", 40, 200), SCHEMA
     )

@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from redpanda_ais_demo_spark.streaming import cardinality
+from redpanda_ais_demo_spark.streaming import cardinality, tracker
 
 SCHEMA = "user_id long"
 
@@ -52,12 +52,12 @@ def test_distinct_tracker_e2e_and_replay(spark, tmp_path):
     assert ordered == sorted(ordered)
 
     # state bounded by retention
-    assert len(cardinality._list_state_ids(spark, state)) <= 2
+    assert len(tracker.list_state_ids(spark, state)) <= 2
 
     # crash-after-write replay of the last batch: same predecessor ->
     # byte-identical snapshot
     last = max(got)
-    prior = cardinality._latest_state_below(spark, state, last)
+    prior = tracker.latest_state_below(spark, state, last)
     batch3 = spark.createDataFrame(_users(1000, 1500), SCHEMA)
     redo = cardinality.merge_sketches(
         prior, cardinality.batch_sketch(batch3, "user_id")

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import os
 
-from redpanda_ais_demo_spark.streaming import drift
+from redpanda_ais_demo_spark.streaming import drift, tracker
 
 SCHEMA = "cents long"
 
@@ -62,7 +62,7 @@ def test_cusum_tracker_alarms_on_planted_shift(spark, tmp_path):
     assert ordered[-1].alarm_up and not ordered[-1].alarm_down
     assert ordered[-1].batch_mean == 1050.0
     # state bounded by retention
-    assert len(drift._list_state_ids(spark, state)) <= 2
+    assert len(tracker.list_state_ids(spark, state)) <= 2
 
 
 def test_cusum_replay_is_byte_identical(spark, tmp_path):
@@ -92,7 +92,7 @@ def test_cusum_replay_is_byte_identical(spark, tmp_path):
 
     # crash-after-write replay: refold the last batch from the same
     # predecessor -> identical integers
-    prior = drift._latest_state_below(spark, state, last)
+    prior = tracker.latest_state_below(spark, state, last)
     batch = spark.createDataFrame(_rows(1100, 100), SCHEMA)
     refolded = drift.fold_cusum(
         prior.select("g_pos", "g_neg", "n_total"),

@@ -6,9 +6,10 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from redpanda_ais_demo_spark.streaming import neardup
+from redpanda_ais_demo_spark.streaming import neardup, tracker
 
 SCHEMA = "doc_id long, text string"
 
@@ -81,10 +82,13 @@ def test_batch_core_and_streaming_filter(spark, tmp_path):
         q.stop()
 
 
-def test_bounded_index_retention(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_bounded_index_retention(spark, tmp_path, scheme):
     """index_retention_batches=1: in-window duplicates are still rejected
     with unchanged decisions, out-of-window duplicates are re-accepted,
-    and the on-disk index stays bounded (old partitions pruned)."""
+    and the on-disk index stays bounded (old partitions pruned). A
+    file:// index (the shape of any hdfs:// or s3a:// one) must be
+    found and pruned through the Hadoop FileSystem API too."""
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     idx = str(tmp_path / "index")
@@ -94,7 +98,9 @@ def test_bounded_index_retention(spark, tmp_path):
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     _write_batch(spark, src, B1, "b1")
-    q = neardup.start_near_dup_filter(stream, out, idx, rej, ckpt, index_retention_batches=1)
+    q = neardup.start_near_dup_filter(
+        stream, *(scheme + d for d in (out, idx, rej, ckpt)), index_retention_batches=1
+    )
     try:
         q.processAllAvailable()  # batch 0: accepts 1,2,3; rejects 6
         assert _ids(spark, out) == {1, 2, 3}
@@ -121,15 +127,16 @@ def test_bounded_index_retention(spark, tmp_path):
         q.stop()
 
 
-def test_prune_index_partitions_idempotent(tmp_path):
+def test_prune_index_partitions_idempotent(spark, tmp_path):
+    """The index prunes through the shared state-partition helper."""
     idx = tmp_path / "index"
     for bid in (0, 1, 2):
         (idx / f"__batch_id={bid}").mkdir(parents=True)
-    neardup._prune_index_partitions(str(idx), 2)
+    tracker.prune_state_partitions(spark, str(idx), 2)
     assert sorted(p.name for p in idx.iterdir()) == ["__batch_id=2"]
-    neardup._prune_index_partitions(str(idx), 2)  # replayed prune: no-op
+    tracker.prune_state_partitions(spark, str(idx), 2)  # replayed prune: no-op
     assert sorted(p.name for p in idx.iterdir()) == ["__batch_id=2"]
-    neardup._prune_index_partitions(str(tmp_path / "absent"), 5)  # missing dir: no-op
+    tracker.prune_state_partitions(spark, str(tmp_path / "absent"), 5)  # missing dir: no-op
 
 
 def test_replayed_batch_is_idempotent(spark, tmp_path):
@@ -219,7 +226,6 @@ def test_replay_verdicts_bounded_horizon_guard(spark):
         [(b, 100 + b, f"w{b} x{b} y{b} z{b} a b c d") for b in range(4)],
         "b long, doc_id long, text string",
     )
-    import pytest
 
     with pytest.raises(ValueError, match="bounded-horizon"):
         neardup.replay_verdicts(docs, "b", max_batches=3)

@@ -7,9 +7,9 @@ from __future__ import annotations
 import os
 
 from redpanda_ais_demo_spark.streaming import quantiles
-from redpanda_ais_demo_spark.streaming.trending import (
-    _latest_state_below,
-    _list_state_ids,
+from redpanda_ais_demo_spark.streaming.tracker import (
+    latest_state_below,
+    list_state_ids,
 )
 
 SCHEMA = "value double"
@@ -52,14 +52,14 @@ def test_quantile_tracker_e2e_accuracy_and_replay(spark, tmp_path):
     for est, true in zip(last, (5000, 9500, 9900)):
         assert abs(est - true) / 10000 < 0.02, (est, true)
     # state bounded by retention
-    assert len(_list_state_ids(spark, state)) <= 2
+    assert len(list_state_ids(spark, state)) <= 2
 
     # crash-after-write replay: same predecessor state + same rows.
     # KLL compaction is randomized, so a replay is epsilon-identical
     # (within rank error), NOT byte-identical like the HLL tracker —
     # assert the documented tolerance, not equality
     last_id = max(got)
-    prior = _latest_state_below(spark, state, last_id)
+    prior = latest_state_below(spark, state, last_id)
     import pyspark.sql.functions as F
 
     batch2 = spark.createDataFrame(_vals(4000, 10000), SCHEMA)

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import os
 
-from redpanda_ais_demo_spark.streaming import sample
+from redpanda_ais_demo_spark.streaming import sample, tracker
 
 SCHEMA = "user_id long, event_type string"
 
@@ -44,7 +44,7 @@ def test_sample_tracker_matches_batch_kmv_and_replays(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    ids = sample._latest_state_below(spark, state, 10**9)
+    ids = tracker.latest_state_below(spark, state, 10**9)
     final = {(r.h, r.key, r.payload) for r in ids.collect()}
     assert len(final) == k
 
@@ -65,7 +65,7 @@ def test_sample_tracker_matches_batch_kmv_and_replays(spark, tmp_path):
 
     # crash-after-write replay of the last batch: identical rows
     last = max(got)
-    prior = sample._latest_state_below(spark, state, last)
+    prior = tracker.latest_state_below(spark, state, last)
     redo = sample.merge_bottom_k(
         prior,
         sample.batch_bottom_k(

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 
-from redpanda_ais_demo_spark.streaming import trending
+from redpanda_ais_demo_spark.streaming import tracker, trending
 
 SCHEMA = "doc_id long, text string"
 
@@ -103,7 +103,7 @@ def test_trending_replayed_batch_is_idempotent(spark, tmp_path):
     counts2 = trending.batch_token_counts(spark.createDataFrame(B2, SCHEMA))
 
     def run_batch_1():
-        prior = trending._latest_state_below(spark, state, 1)
+        prior = tracker.latest_state_below(spark, state, 1)
         s = trending.trend_merge(prior, counts2, capacity=100).localCheckpoint()
         s.write.mode("overwrite").parquet(os.path.join(state, "__batch_id=1"))
         return {r.token: r.cnt for r in
@@ -124,16 +124,16 @@ def test_trending_state_paths_resolve_via_hadoop_fs(spark, tmp_path):
     s1 = trending.trend_merge(None, counts1, capacity=100)
     s1.write.mode("overwrite").parquet(state + "/__batch_id=0")
 
-    prior = trending._latest_state_below(spark, state, 1)
+    prior = tracker.latest_state_below(spark, state, 1)
     assert prior is not None
     assert {r.token: r.cnt for r in prior.collect()} == _exact_counts(B1)
 
     # prune through the same API: partition 0 removed, idempotent re-run
     s1.write.mode("overwrite").parquet(state + "/__batch_id=5")
-    trending._prune_state_partitions(spark, state, keep_from=5)
-    assert trending._list_state_ids(spark, state) == [5]
-    trending._prune_state_partitions(spark, state, keep_from=5)
-    assert trending._list_state_ids(spark, state) == [5]
+    tracker.prune_state_partitions(spark, state, keep_from=5)
+    assert tracker.list_state_ids(spark, state) == [5]
+    tracker.prune_state_partitions(spark, state, keep_from=5)
+    assert tracker.list_state_ids(spark, state) == [5]
 
 
 def test_trend_merge_plan_has_no_vocabulary_sized_window(spark):
