@@ -155,14 +155,13 @@ def start_ab_monitor(
     control: str = "A",
     treatment: str = "B",
     z_threshold: float = 3.0,
-    retain: int = 2,
 ) -> StreamingQuery:
     """Start the monitor. Each micro-batch replaces the one-row count
     state and appends one snapshot partition (batch_id, per-arm
     cumulative counts and rates, z, flagged)."""
     readout = _readout(z_threshold)
     return start_tracker(
-        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        stream, state_dir, snapshots_dir, checkpoint_dir,
         ("n_c", "c_c", "n_t", "c_t"),
         lambda b, prior: fold_counts(
             prior, batch_arm_counts(b, variant_col, converted_col, control, treatment)

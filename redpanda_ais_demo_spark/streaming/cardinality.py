@@ -48,13 +48,12 @@ def start_distinct_tracker(
     snapshots_dir: str,
     checkpoint_dir: str,
     lg_k: int = 12,
-    retain: int = 2,
 ) -> StreamingQuery:
     """Start the tracker. Each micro-batch replaces the cumulative
     sketch under ``state_dir`` and appends one snapshot partition under
     ``snapshots_dir`` (columns: batch_id, n_estimate)."""
     return start_tracker(
-        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        stream, state_dir, snapshots_dir, checkpoint_dir,
         ("sketch",),
         lambda b, prior: merge_sketches(prior, batch_sketch(b, key_col, lg_k)),
         lambda state: state.select(

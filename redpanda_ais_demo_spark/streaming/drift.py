@@ -88,7 +88,6 @@ def start_cusum_tracker(
     mu0: int,
     k: int,
     h: int,
-    retain: int = 2,
 ) -> StreamingQuery:
     """Start the tracker. Each micro-batch replaces the one-row CUSUM
     state under ``state_dir`` and appends one snapshot partition under
@@ -101,7 +100,7 @@ def start_cusum_tracker(
         # guaranteed false alarms that look like plausible snapshots
         raise ValueError(f"slack k must be >= 0, got {k}")
     return start_tracker(
-        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        stream, state_dir, snapshots_dir, checkpoint_dir,
         ("g_pos", "g_neg", "n_total"),
         lambda b, prior: fold_cusum(prior, batch_moments(b, value_col), mu0, k),
         lambda state: state.select(

@@ -14,14 +14,15 @@ Per micro-batch (foreachBatch):
 2. run the IDENTICAL ``pit_join`` the backfill uses — same union +
    struct-carry ``last(ignorenulls)`` mechanism, so NULL-attributed
    versions supersede their predecessors here too,
-3. append the enriched rows (plus the batch id for replay audits).
+3. write the enriched rows as the batch's own ``batch_id=<id>``
+   partition (dynamic partition overwrite, ``streaming/tracker.py``),
+   so a batch replayed after a crash replaces its rows, never adds to
+   them.
 
 Parity contract (pytest-pinned): streaming the probes in ANY batch
 split against a FIXED dim equals the batch ``pit_join`` over the
 probes' union, row for row — enrichment is per-row pure given the dim,
-so batch boundaries cannot change results; a crash-replayed batch
-appends duplicate-but-identical rows, dedupable on the probe key
-downstream (the idempotent-sink doctrine in streaming/idempotent.py).
+so batch boundaries cannot change results.
 
 Scale: everything inside the batch is the batch operator's own plan
 (one shuffle of probes+versions on the key, no inequality blow-up);
@@ -34,10 +35,10 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.joins import pit_join
+from .tracker import _overwrite_partition
 
 
 def start_pit_enrich(
@@ -53,7 +54,8 @@ def start_pit_enrich(
     dim_tiebreak_col: str | None = None,
 ) -> StreamingQuery:
     """Start the enrichment stream; output rows are ``probe_cols`` +
-    ``attr_col`` + ``batch_id``, appended under ``out_dir``."""
+    ``attr_col`` + ``batch_id``, partitioned by ``batch_id`` under
+    ``out_dir``."""
     if not probe_cols:
         raise ValueError("probe_cols must be non-empty")
 
@@ -68,8 +70,8 @@ def start_pit_enrich(
             attr_col,
             probe_cols,
             dim_tiebreak_col=dim_tiebreak_col,
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        enriched.write.mode("append").parquet(out_dir)
+        )
+        _overwrite_partition(enriched, out_dir, batch_id, "batch_id")
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -16,9 +16,10 @@ Re-expresses the ClickHouse Kafka-engine → Memory-MV layer
   MVs grow unboundedly in RAM, BASELINE.md): checkpointed exactly-once
   file sink, partitioned for scale.
 
-Checkpoints give at-least-once → exactly-once (file sink) delivery — a
-strict upgrade over the reference's commit-before-publish at-most-once
-hop (ST3, consumer...py:67 vs :88), documented rather than reproduced.
+Checkpoints give at-least-once → exactly-once delivery (the file sink;
+the rollup MV's replay-idempotent state partitions) — a strict upgrade
+over the reference's commit-before-publish at-most-once hop (ST3,
+consumer...py:67 vs :88), documented rather than reproduced.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..schemas import SHIP_POSITION_WITH_WEATHER
 from .enrich import FetchFn, stub_weather_fetch, with_weather
 from .ingest import IS_POSITION, route_events, ship_info_columns
+from .tracker import start_tracker
 
 POS_MV = "ship_pos_and_wx_mv"
 INFO_MV = "ship_info_and_destination_mv"
@@ -139,47 +141,25 @@ def start_rollup_mv(
     pays only a delta partial-agg + outer merge per batch, the shape
     that survives an unbounded stream).
 
-    Exactly-once across restarts: a manifest records the last folded
-    ``batch_id``; Structured Streaming replays the last uncommitted
-    batch after a crash, and the replay is SKIPPED if the manifest
-    shows it already folded (the same idempotent-sink trick as the
-    JSONL manifest sink). State swaps via write-new-then-rename; a
-    production deployment would put a transactional table format under
-    this for reader-atomic swaps — the fold logic is unchanged.
+    Exactly-once across restarts: the rollup is one more sink on the
+    state-partition loop of ``streaming/tracker.py`` (state columns
+    ``keys + measures``, no snapshot), so a replayed batch refolds onto
+    the same predecessor and rewrites its own partition. ``path`` is
+    the state dir (``checkpoint_dir/name`` the checkpoint) and holds
+    the two newest partitions: read the rollup with
+    ``tracker.latest_state_below(spark, path, sys.maxsize)``, not
+    ``spark.read.parquet(path)``, which unions both.
     """
-    import json
-    import shutil
-
+    # Imported here: every Python worker running the weather kernel loads
+    # this module (via ``streaming/__init__``), and ``operators/__init__``
+    # would import dedup and similarity into each of them.
     from ..operators.ivm import agg_state, merge_agg
 
-    manifest = path + ".manifest.json"
+    def fold(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
+        if prior is None:
+            return agg_state(batch_df, keys, measures)
+        return merge_agg(prior, batch_df, keys, measures)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = -1
-        if os.path.exists(manifest):
-            with open(manifest) as f:
-                last = json.load(f)["last_batch_id"]
-        if batch_id <= last:
-            return  # replayed batch already folded — idempotent skip
-        if os.path.exists(path):
-            new = merge_agg(spark.read.parquet(path), batch_df, keys, measures)
-        else:
-            new = agg_state(batch_df, keys, measures)
-        staging = f"{path}.staging-{batch_id}"
-        new.write.mode("overwrite").parquet(staging)
-        old = f"{path}.old-{batch_id}"
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(staging, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        with open(manifest, "w") as f:
-            json.dump({"last_batch_id": batch_id}, f)
-
-    return (
-        df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, name))
-        .queryName(name)
-        .start()
+    return start_tracker(
+        df, path, None, os.path.join(checkpoint_dir, name), [*keys, *measures], fold
     )

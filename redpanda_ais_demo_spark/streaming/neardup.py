@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import dedup
-from .tracker import list_state_ids, prune_state_partitions
+from .tracker import _overwrite_partition, list_state_ids, prune_state_partitions
 
 
 def _verified_matches(
@@ -256,19 +256,9 @@ def start_near_dup_filter(
         accepted, profiles, rejections = dedup_batch_against_index(
             batch_df, index, id_col, text_col, k, num_hashes, bands, threshold
         )
-
-        def write(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(path)
-            )
-
-        write(accepted, out_dir)
-        write(profiles, index_dir)
-        write(rejections, reject_dir)
+        _overwrite_partition(accepted, out_dir, batch_id)
+        _overwrite_partition(profiles, index_dir, batch_id)
+        _overwrite_partition(rejections, reject_dir, batch_id)
         if index_retention_batches is not None:
             prune_state_partitions(spark, index_dir, batch_id - index_retention_batches)
 

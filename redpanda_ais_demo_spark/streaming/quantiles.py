@@ -96,7 +96,6 @@ def start_quantile_tracker(
     checkpoint_dir: str,
     quantiles: tuple[float, ...] = (0.5, 0.95, 0.99),
     k: int = 200,
-    retain: int = 2,
 ) -> StreamingQuery:
     """Start the tracker. Each micro-batch replaces the cumulative
     sketch under ``state_dir`` and appends one snapshot partition under
@@ -106,7 +105,7 @@ def start_quantile_tracker(
     that round to the same integer percent can't collide)."""
     names = _quantile_names(quantiles)
     return start_tracker(
-        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        stream, state_dir, snapshots_dir, checkpoint_dir,
         ("kll",),
         lambda b, prior: merge_kll(prior, batch_kll(b, value_col, k)),
         lambda state: state.select(

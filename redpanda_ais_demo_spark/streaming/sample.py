@@ -79,7 +79,6 @@ def start_sample_tracker(
     snapshots_dir: str,
     checkpoint_dir: str,
     k: int = 256,
-    retain: int = 2,
 ) -> StreamingQuery:
     """Start the tracker. Each micro-batch replaces the cumulative
     k-row sample under ``state_dir`` and appends one snapshot row
@@ -89,7 +88,7 @@ def start_sample_tracker(
     if k < 2:
         raise ValueError("k must be >= 2")
     return start_tracker(
-        stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        stream, state_dir, snapshots_dir, checkpoint_dir,
         ("h", "key", "payload"),
         lambda b, prior: merge_bottom_k(
             prior, batch_bottom_k(b, key_col, payload_col, k), k

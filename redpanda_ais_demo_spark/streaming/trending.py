@@ -12,7 +12,7 @@ Per micro-batch, on the state-partition loop of ``streaming/tracker.py``
    (MG counters are mergeable: errors add), then the MG batch
    decrement — subtract the (capacity+1)-th largest count from every
    counter and drop the non-positives — so state never exceeds
-   ``capacity`` rows and its storage is O(capacity · retain),
+   ``capacity`` rows and its storage is O(2 · capacity),
 3. snapshot the ranked top-k.
 
 Guarantee carried by every snapshot row: ``est <= true count`` and
@@ -101,7 +101,6 @@ def start_trending_tokens(
     capacity: int = 256,
     k: int = 20,
     text_col: str = "text",
-    retain: int = 2,
 ) -> StreamingQuery:
     """Start the trending tracker. Each micro-batch appends one ranked
     top-``k`` snapshot partition under ``snapshots_dir`` (columns:
@@ -121,7 +120,7 @@ def start_trending_tokens(
         )
 
     return start_tracker(
-        docs_stream, state_dir, snapshots_dir, checkpoint_dir, retain,
+        docs_stream, state_dir, snapshots_dir, checkpoint_dir,
         ("token", "cnt"),
         lambda b, prior: trend_merge(prior, batch_token_counts(b, text_col), capacity),
         top_k,

@@ -548,53 +548,116 @@ def test_mad_anomaly_stream_matches_batch_semantics(spark, tmp_path):
     assert got == expected
 
 
-def test_rollup_mv_folds_batches_and_equals_full_aggregate(spark, tmp_path):
-    """The continuously-maintained rollup equals the one-shot aggregate
-    of everything streamed, across multiple micro-batches, and a
-    restart from the same checkpoint does not double-fold."""
-    from pyspark.sql import functions as F
+ROLLUP_SCHEMA = "g string, v double"
+ROLLUP_MEASURES = {"s": ("sum", "v"), "n": ("count", "v"), "hi": ("max", "v")}
+
+
+def _rollup_batch(spark, src, rows, mode="append"):
+    spark.createDataFrame(rows, ROLLUP_SCHEMA).coalesce(1).write.mode(mode).parquet(src)
+
+
+def _start_rollup(spark, src, mv, ckpt):
+    stream = spark.readStream.schema(ROLLUP_SCHEMA).parquet(src)
+    return materialize.start_rollup_mv(stream, mv, ckpt, "rollup1", ["g"], ROLLUP_MEASURES)
+
+
+def _assert_rollup_is_full_aggregate(spark, src, mv, tag):
+    """The rollup's newest state partition equals the one-shot
+    aggregate of everything in ``src``."""
+    import sys
 
     from redpanda_ais_demo_spark.operators.ivm import agg_state
-    from redpanda_ais_demo_spark.streaming.materialize import start_rollup_mv
+    from redpanda_ais_demo_spark.streaming.tracker import latest_state_below
 
+    got = {r.g: r for r in latest_state_below(spark, mv, sys.maxsize).collect()}
+    want = {
+        r.g: r
+        for r in agg_state(spark.read.parquet(src), ["g"], ROLLUP_MEASURES).collect()
+    }
+    assert set(got) == set(want), tag
+    for g in want:
+        for f in ROLLUP_MEASURES:
+            assert getattr(got[g], f) == getattr(want[g], f), (tag, g, f)
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_rollup_mv_folds_batches_and_equals_full_aggregate(spark, tmp_path, scheme):
+    """The continuously-maintained rollup equals the one-shot aggregate
+    of everything streamed, across multiple micro-batches, and a
+    restart from the same checkpoint does not double-fold. A file://
+    state dir (the shape of any hdfs:// or s3a:// one) folds too."""
     src = str(tmp_path / "src")
-    mv = str(tmp_path / "mv")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "g string, v double"
-    measures = {"s": ("sum", "v"), "n": ("count", "v"), "hi": ("max", "v")}
+    mv = scheme + str(tmp_path / "mv")
+    ckpt = scheme + str(tmp_path / "ckpt")
 
-    def write_batch(rows, mode="append"):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(mode).parquet(src)
-
-    write_batch([("a", 1.0), ("b", 2.0)], mode="overwrite")
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = start_rollup_mv(stream, mv, ckpt, "rollup1", ["g"], measures)
+    _rollup_batch(spark, src, [("a", 1.0), ("b", 2.0)], mode="overwrite")
+    q = _start_rollup(spark, src, mv, ckpt)
     q.processAllAvailable()
-    write_batch([("a", 3.0), ("c", 5.0)])
+    _rollup_batch(spark, src, [("a", 3.0), ("c", 5.0)])
     q.processAllAvailable()
     q.stop()
-
-    got = {r.g: r for r in spark.read.parquet(mv).collect()}
-    want = {
-        r.g: r for r in agg_state(spark.read.parquet(src), ["g"], measures).collect()
-    }
-    assert set(got) == set(want) == {"a", "b", "c"}
-    for g in want:
-        for f in ("s", "n", "hi"):
-            assert getattr(got[g], f) == getattr(want[g], f), (g, f)
+    _assert_rollup_is_full_aggregate(spark, src, mv, "two batches")
 
     # restart from the same checkpoint: no new data -> no double-fold
-    q2 = start_rollup_mv(
-        spark.readStream.schema(schema).parquet(src), mv, ckpt, "rollup1", ["g"], measures
-    )
+    q2 = _start_rollup(spark, src, mv, ckpt)
     q2.processAllAvailable()
-    write_batch([("a", 4.0)])
+    _rollup_batch(spark, src, [("a", 4.0)])
     q2.processAllAvailable()
     q2.stop()
-    got2 = {r.g: r for r in spark.read.parquet(mv).collect()}
-    want2 = {
-        r.g: r for r in agg_state(spark.read.parquet(src), ["g"], measures).collect()
-    }
-    for g in want2:
-        for f in ("s", "n", "hi"):
-            assert getattr(got2[g], f) == getattr(want2[g], f), ("restart", g, f)
+    _assert_rollup_is_full_aggregate(spark, src, mv, "restart")
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_rollup_mv_replays_a_batch_that_crashed_after_its_prune(
+    spark, tmp_path, monkeypatch, scheme
+):
+    """Batch 1 writes its state partition, prunes, then crashes before
+    its commit. The restart replays batch 1 onto batch 0's state, so
+    the rollup still equals the one-shot aggregate: `a` is 4.0 / 2, not
+    the double fold 7.0 / 3."""
+    from pyspark.errors import StreamingQueryException
+
+    from .test_streaming_trackers import INJECTED, crash_after_prune
+
+    src = str(tmp_path / "src")
+    mv = scheme + str(tmp_path / "mv")
+    ckpt = scheme + str(tmp_path / "ckpt")
+    crashed = crash_after_prune(monkeypatch, 1)
+    _rollup_batch(spark, src, [("a", 1.0), ("b", 2.0)], mode="overwrite")
+    q = _start_rollup(spark, src, mv, ckpt)
+    try:
+        q.processAllAvailable()
+        _rollup_batch(spark, src, [("a", 3.0), ("c", 5.0)])
+        with pytest.raises(StreamingQueryException, match=INJECTED):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert crashed
+
+    q2 = _start_rollup(spark, src, mv, ckpt)
+    q2.processAllAvailable()
+    q2.stop()
+    _assert_rollup_is_full_aggregate(spark, src, mv, "after replay")
+
+
+def test_streaming_modules_keep_no_local_disk_state():
+    """Every streaming state, index and output path goes through Spark
+    or the Hadoop FileSystem API (``streaming/tracker.py``), so an
+    hdfs:// or s3a:// dir behaves like a local one: no module under
+    ``streaming/`` touches the driver's local disk directly."""
+    import pathlib
+    import re
+
+    import redpanda_ais_demo_spark.streaming as streaming
+
+    local_disk = re.compile(
+        r"os\.path\.exists|os\.path\.isdir|os\.listdir|os\.rename|shutil\.|(?<![\w.])open\("
+    )
+    root = pathlib.Path(streaming.__file__).parent
+    hits = [
+        f"{p.name}:{n}: {line.strip()}"
+        for p in sorted(root.glob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if local_disk.search(line)
+    ]
+    assert not hits, hits

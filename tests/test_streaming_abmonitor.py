@@ -146,9 +146,7 @@ def test_monitor_trajectory_batch_matches_streaming_snapshots(spark, tmp_path):
     for ts, rows in batches:  # one file per batch_ts -> one micro-batch each
         spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-    q = abmonitor.start_ab_monitor(
-        stream, "variant", "converted", state, snaps, ckpt, retain=10
-    )
+    q = abmonitor.start_ab_monitor(stream, "variant", "converted", state, snaps, ckpt)
     q.processAllAvailable()
     q.stop()
     live = _snaps(spark, snaps)

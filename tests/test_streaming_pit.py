@@ -4,6 +4,8 @@ streaming path, and mid-stream dim version arrival semantics."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from redpanda_ais_demo_spark.operators.joins import pit_join
@@ -85,6 +87,20 @@ def test_streaming_pit_batch_ids_and_validation(spark, tmp_path):
             stream, lambda s: None, "k", "ts", "valid_from", "tier",
             [], "o", "c",
         )
+
+
+def test_streaming_pit_replayed_batch_adds_no_rows(spark, tmp_path):
+    # batch 1's commit is lost (a crash after its write): the restart
+    # replays it, and it replaces its own partition instead of adding
+    _run_stream(spark, tmp_path, [PROBE_ROWS[:4], PROBE_ROWS[4:]])
+    commits = tmp_path / "ckpt" / "commits"
+    for name in ("1", ".1.crc"):
+        if (commits / name).exists():
+            os.remove(commits / name)
+    out_df = _run_stream(spark, tmp_path, [])
+    assert out_df.count() == len(PROBE_ROWS)
+    assert out_df.columns == ["pid", "k", "ts", "tier", "batch_id"]
+    assert {r.batch_id for r in out_df.select("batch_id").distinct().collect()} == {0, 1}
 
 
 def test_streaming_pit_new_version_applies_from_next_batch(spark, tmp_path):

@@ -79,8 +79,6 @@ def test_quantile_tracker_validates_args(spark, tmp_path):
     src = tmp_path / "x"
     src.mkdir()
     stream = spark.readStream.schema(SCHEMA).parquet(str(src))
-    with pytest.raises(ValueError, match="retain"):
-        quantiles.start_quantile_tracker(stream, "value", "s", "n", "c", retain=0)
     with pytest.raises(ValueError, match="quantiles"):
         quantiles.start_quantile_tracker(
             stream, "value", "s", "n", "c", quantiles=(1.5,)

@@ -85,7 +85,3 @@ def test_sample_tracker_guards(spark):
     stream = spark.readStream.format("rate").load()
     with pytest.raises(ValueError):
         sample.start_sample_tracker(stream, "value", "value", "a", "b", "c", k=1)
-    with pytest.raises(ValueError):
-        sample.start_sample_tracker(
-            stream, "value", "value", "a", "b", "c", retain=0
-        )

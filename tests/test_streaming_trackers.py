@@ -6,8 +6,9 @@ so state discovery and pruning must go through the Hadoop FileSystem
 API — with the exact state and snapshot rows pinned. KLL compaction is
 randomized, so the quantile tracker pins its schema, row counts and
 the sketch's rank-error envelope instead of values. A stop and restart
-from the checkpoint must land on the same snapshots as an
-uninterrupted run."""
+from the checkpoint, and a replay after a crash between a batch's
+prune and its commit, must land on the same rows as an uninterrupted
+run."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ import shutil
 import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from redpanda_ais_demo_spark.streaming import (
     abmonitor,
@@ -25,8 +27,11 @@ from redpanda_ais_demo_spark.streaming import (
     drift,
     quantiles,
     sample,
+    tracker,
     trending,
 )
+
+INJECTED = "injected crash after the prune"
 
 
 def _wiggle(mean, n):
@@ -213,7 +218,8 @@ def _partitions(spark, local_dir):
 def _run(spark, tmp_path, name, stop_after=None):
     """Run tracker ``name`` over its three files; with ``stop_after``
     the query stops once that many files are processed and a new query
-    resumes from the same checkpoint."""
+    resumes from the same checkpoint. A query that dies of an
+    ``INJECTED`` crash is resumed the same way."""
     schema, files, start = TRACKERS[name]
     src = tmp_path / "src"
     src.mkdir()
@@ -231,6 +237,9 @@ def _run(spark, tmp_path, name, stop_after=None):
         q = start(stream, dirs["state"], dirs["snaps"], dirs["ckpt"])
         try:
             q.processAllAvailable()
+        except StreamingQueryException as e:
+            if INJECTED not in str(e):
+                raise
         finally:
             q.stop()
     return (
@@ -270,3 +279,34 @@ def test_drift_tracker_restart_from_checkpoint(spark, tmp_path):
     """Stop after two micro-batches and resume from the checkpoint:
     the snapshots and surviving state equal the uninterrupted run."""
     assert _run(spark, tmp_path, "drift", stop_after=2) == GOLDEN["drift"]
+
+
+def crash_after_prune(monkeypatch, batch_id):
+    """Make micro-batch ``batch_id`` (known by its prune bound,
+    ``batch_id - 1``) raise an ``INJECTED`` crash once, after its state
+    prune and before its commit. Returns the list that records the
+    crash."""
+    prune = tracker.prune_state_partitions
+    crashed = []
+
+    def prune_then_crash(spark, state_dir, keep_from):
+        prune(spark, state_dir, keep_from)
+        if keep_from == batch_id - 1 and not crashed:
+            crashed.append(batch_id)
+            raise RuntimeError(INJECTED)
+
+    monkeypatch.setattr(tracker, "prune_state_partitions", prune_then_crash)
+    return crashed
+
+
+def test_drift_tracker_replays_a_batch_that_crashed_after_its_prune(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 2 writes its state and snapshot, prunes, then crashes
+    before its commit; the resumed query replays batch 2, which must
+    still find batch 1's state. This is why the rule keeps two state
+    partitions: keeping one deletes the replay's predecessor and resets
+    the state."""
+    crashed = crash_after_prune(monkeypatch, 2)
+    assert _run(spark, tmp_path, "drift", stop_after=3) == GOLDEN["drift"]
+    assert crashed
