@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph import _maybe_bcast
+
 
 def item_cooccurrence_topk(
     df: DataFrame,
@@ -252,7 +254,7 @@ def bradley_terry(
         F.sum("wij").cast("long").alias("wins"),
         F.sum("gij").cast("long").alias("games"),
     ).localCheckpoint(eager=False)
-    k = wi.count()  # 1-row driver scalar parameterizing the renorm literal
+    k = wi.count()  # row bound of every vector side; also the renorm literal
     if k == 0:
         raise ValueError("bradley_terry needs at least one valid comparison")
     p = wi.select("i", F.lit(1_000_000).cast("long").alias("pi"))
@@ -261,14 +263,15 @@ def bradley_terry(
     # table — but the pinned frames are ExistingRDD scans with no size
     # stats, so auto-broadcast never fires and each round paid 2 full
     # shuffle joins + sorts (AQE only rewrites them to broadcast AFTER
-    # materializing both exchanges). Explicit broadcasts leave the agg
-    # shuffle as each round's only exchange (guide §3.1); join strategy
-    # never changes rows, so the fixed point is bit-identical.
+    # materializing both exchanges). Broadcasts through the counted
+    # vector gate (``graph._maybe_bcast`` on k rows) leave the agg shuffle
+    # as each round's only exchange (guide §3.1); join strategy never
+    # changes rows, so the fixed point is bit-identical.
     for _ in range(rounds):
         t = (
-            e.join(F.broadcast(p.select(F.col("i"), F.col("pi").alias("p_i"))), "i")
+            e.join(_maybe_bcast(p.select(F.col("i"), F.col("pi").alias("p_i")), k), "i")
             .join(
-                F.broadcast(p.select(F.col("i").alias("j"), F.col("pi").alias("p_j"))),
+                _maybe_bcast(p.select(F.col("i").alias("j"), F.col("pi").alias("p_j")), k),
                 "j",
             )
             .select(
@@ -283,7 +286,7 @@ def bradley_terry(
             .agg(F.sum("t").cast("long").alias("d"))
         )
         praw = (
-            wi.join(F.broadcast(t), "i", "left")
+            wi.join(_maybe_bcast(t, k), "i", "left")
             .select(
                 "i",
                 F.when(
@@ -306,7 +309,7 @@ def bradley_terry(
             .localCheckpoint(eager=False)
         )
     return (
-        p.join(F.broadcast(wi), "i")
+        p.join(_maybe_bcast(wi, k), "i")
         .select(
             F.col("i").alias("item"),
             F.col("pi").alias("rating"),

@@ -2567,16 +2567,12 @@ def markov_absorption(
             ns = out_n[s]
             nv[s] = (2 * num + ns) // (2 * ns)  # half-up, all ints >= 0
         v = nv
-    spark = df.sparkSession
-    data = [
-        (s, out_n[s], float(v[s]) / 1_000_000_000.0) for s in sorted(srcs)
-    ]
-    # display-round the way both engines do (half away from zero)
-    import math
+    from .glm import _round6
 
+    spark = df.sparkSession
+    # display-round the way both engines do (half away from zero)
     data = [
-        (s, n, math.copysign(math.floor(abs(p) * 1e6 + 0.5), p) / 1e6)
-        for s, n, p in data
+        (s, out_n[s], _round6(float(v[s]) / 1_000_000_000.0)) for s in sorted(srcs)
     ]
     return spark.createDataFrame(
         data, "state string, n_out long, p_convert double"

@@ -21,9 +21,11 @@ AIVDM/AIVDO protocol notes):
 - 6-bit text decode for shipname/callsign/destination ('@' padding and
   trailing spaces stripped).
 
-An ENCODER for the same layouts ships alongside: round-trip property
-tests pin encoder/decoder consistency bit-for-bit, and the encoder
-generates realistic NMEA fixtures for the transport/streaming tests.
+One bit-layout table (``_LAYOUTS``) holds each message's field offsets,
+widths, readers and not-available sentinels: ``decode_payload`` and the
+ENCODER both walk it. Round-trip property tests pin encoder/decoder
+consistency bit-for-bit, and the encoder generates realistic NMEA
+fixtures for the transport/streaming tests.
 Decoded field names and enum spellings match the ``AIS_DECODED`` schema
 contract (schemas.py), the fields the reference reads off pyais
 messages. Everything here is pure stdlib Python — it runs in
@@ -35,6 +37,7 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 from functools import reduce
 from operator import xor
+from typing import Callable, NamedTuple
 
 # ITU-R M.1371 Table 45 navigation status (spellings per the enum names
 # the pipeline's fixtures/oracles use; index = wire value).
@@ -139,8 +142,8 @@ def _u(bits: int, n_bits: int, start: int, width: int) -> int:
 
 def _s(bits: int, n_bits: int, start: int, width: int) -> int:
     """Two's-complement signed field."""
-    v = _u(bits, n_bits, start, width)
-    return v - (1 << width) if v & (1 << (width - 1)) else v
+    v = (bits >> (n_bits - start - width)) & ((1 << width) - 1)
+    return v - (1 << width) if v >> (width - 1) else v
 
 
 _SIXBIT_CHARS = "@ABCDEFGHIJKLMNOPQRSTUVWXYZ[\\]^_ !\"#$%&'()*+,-./0123456789:;<=>?"
@@ -148,10 +151,9 @@ _SIXBIT_CHARS = "@ABCDEFGHIJKLMNOPQRSTUVWXYZ[\\]^_ !\"#$%&'()*+,-./0123456789:;<
 
 def sixbit_text(bits: int, n_bits: int, start: int, width: int) -> str | None:
     """6-bit ASCII text field; '@' padding and trailing spaces stripped."""
-    chars = []
-    for off in range(start, start + width, 6):
-        chars.append(_SIXBIT_CHARS[_u(bits, n_bits, off, 6)])
-    s = "".join(chars).split("@", 1)[0].rstrip()
+    v = _u(bits, n_bits, start, width)
+    s = "".join([_SIXBIT_CHARS[(v >> k) & 63] for k in range(width - 6, -1, -6)])
+    s = s.split("@", 1)[0].rstrip()
     return s or None
 
 
@@ -164,87 +166,121 @@ def text_to_sixbits(s: str, n_chars: int) -> int:
     return v
 
 
-# --- payload decode ---------------------------------------------------------
+# --- the bit-layout table ---------------------------------------------------
+# Every layout the codec knows, written once: decode_payload and _encode
+# both walk it. A kind is a field's (raw -> value, value -> raw) pair:
+# the value is what AIS_DECODED carries on decode and the encoder's
+# argument on encode (the wire code, for ship type).
 
-_LON_NA = 181 * 600_000
-_LAT_NA = 91 * 600_000
+
+class _Field(NamedTuple):
+    name: str  # AIS_DECODED key, and the encoder's keyword for it
+    start: int  # MSB-first bit offset
+    width: int
+    read: Callable  # _u, _s or sixbit_text
+    kind: tuple[Callable, Callable]
+
+
+class _Layout(NamedTuple):
+    min_bits: int  # a shorter payload decodes to the (msg_type, mmsi) envelope only
+    n_bits: int  # the encoded message length
+    head: tuple[_Field, ...]  # the fields that select the layout
+    fields: tuple[_Field, ...]  # the fields decode_payload fills in
+
+
+def _same(v):
+    return v
+
+
+def _degrees(na_deg: int) -> tuple[Callable, Callable]:
+    """Coordinate in 1/10000 minute; ``na_deg`` degrees = not available."""
+    na = na_deg * 600_000
+    return (
+        lambda r: None if r == na else r / 600_000.0,
+        lambda v: na if v is None else int(round(v * 600_000)),
+    )
+
+
+def _text(n_chars: int) -> tuple[Callable, Callable]:
+    return _same, lambda s: text_to_sixbits(s, n_chars)
+
+
+_RAW = (_same, _same)
+_SOG = (lambda r: None if r == 1023 else r // 10), (lambda v: 1023 if v is None else v * 10)
+_HEADING = (lambda r: None if r == 511 else r), (lambda v: 511 if v is None else v)
+_SHIP_TYPE = (ship_type_name, _same)
+_LON, _LAT = _degrees(181), _degrees(91)
+
+_MSG_TYPE = _Field("msg_type", 0, 6, _u, _RAW)
+_MMSI = _Field("mmsi", 8, 30, _u, _RAW)
+_ENVELOPE = (_MSG_TYPE, _MMSI)
+_PART = _Field("part", 38, 2, _u, _RAW)  # type 24: part A (0) or B (1)
+_POSITION_A = _Layout(144, 168, _ENVELOPE, (
+    _Field("status", 38, 4, _u, (NAV_STATUS.__getitem__, _same)),
+    _Field("speed", 50, 10, _u, _SOG),
+    _Field("lon", 61, 28, _s, _LON),
+    _Field("lat", 89, 27, _s, _LAT),
+    _Field("heading", 128, 9, _u, _HEADING),
+))
+_LAYOUTS = {
+    1: _POSITION_A,
+    2: _POSITION_A,
+    3: _POSITION_A,
+    18: _Layout(140, 168, _ENVELOPE, (
+        _Field("speed", 46, 10, _u, _SOG),
+        _Field("lon", 57, 28, _s, _LON),
+        _Field("lat", 85, 27, _s, _LAT),
+        _Field("heading", 124, 9, _u, _HEADING),
+    )),
+    # destination ends at bit 422: a 421-bit payload would read past its end
+    5: _Layout(422, 424, _ENVELOPE, (
+        _Field("callsign", 70, 42, sixbit_text, _text(7)),
+        _Field("shipname", 112, 120, sixbit_text, _text(20)),
+        _Field("ship_type", 232, 8, _u, _SHIP_TYPE),
+        _Field("destination", 302, 120, sixbit_text, _text(20)),
+    )),
+    (24, 0): _Layout(160, 160, (*_ENVELOPE, _PART), (
+        _Field("shipname", 40, 120, sixbit_text, _text(20)),
+    )),
+    (24, 1): _Layout(132, 168, (*_ENVELOPE, _PART), (
+        _Field("ship_type", 40, 8, _u, _SHIP_TYPE),
+        _Field("callsign", 90, 42, sixbit_text, _text(7)),
+    )),
+}
+# decode_payload's starting point: the AIS_DECODED keys it fills, all unset
+_UNSET = dict.fromkeys(
+    ("msg_type", "mmsi", "status", "lat", "lon", "speed", "heading", "shipname", "callsign", "ship_type", "destination")
+)
+
+
+# --- payload decode ---------------------------------------------------------
 
 
 def decode_payload(payload: str, fill_bits: int = 0) -> dict | None:
     """Decode one assembled payload. Returns an AIS_DECODED-shaped dict
     (without receiver_timestamp — that rides the tag block), or None for
     message types outside the pipeline's router (P1 drops them anyway).
-    """
+    A valid type (1-27) without a layout, or a payload shorter than its
+    layout's ``min_bits``, yields the (msg_type, mmsi) envelope like
+    pyais would — the P1 router drops it, so the decoded-stage stream
+    matches the reference producer's."""
     bits, n = payload_to_bits(payload, fill_bits)
-    if n < 38:
+    if n < _MMSI.start + _MMSI.width:
         return None
-    msg_type = _u(bits, n, 0, 6)
-    mmsi = _u(bits, n, 8, 30)
-    base = {
-        "msg_type": msg_type,
-        "mmsi": mmsi,
-        "status": None,
-        "lat": None,
-        "lon": None,
-        "speed": None,
-        "heading": None,
-        "shipname": None,
-        "callsign": None,
-        "ship_type": None,
-        "destination": None,
-    }
-    if msg_type in (1, 2, 3) and n >= 144:
-        status = _u(bits, n, 38, 4)
-        sog = _u(bits, n, 50, 10)
-        lon_raw = _s(bits, n, 61, 28)
-        lat_raw = _s(bits, n, 89, 27)
-        hdg = _u(bits, n, 128, 9)
-        base.update(
-            status=NAV_STATUS[status],
-            speed=None if sog == 1023 else sog // 10,
-            lon=None if lon_raw == _LON_NA else lon_raw / 600_000.0,
-            lat=None if lat_raw == _LAT_NA else lat_raw / 600_000.0,
-            heading=None if hdg == 511 else hdg,
-        )
-        return base
-    if msg_type == 18 and n >= 140:
-        sog = _u(bits, n, 46, 10)
-        lon_raw = _s(bits, n, 57, 28)
-        lat_raw = _s(bits, n, 85, 27)
-        hdg = _u(bits, n, 124, 9)
-        base.update(
-            speed=None if sog == 1023 else sog // 10,
-            lon=None if lon_raw == _LON_NA else lon_raw / 600_000.0,
-            lat=None if lat_raw == _LAT_NA else lat_raw / 600_000.0,
-            heading=None if hdg == 511 else hdg,
-        )
-        return base
-    # destination occupies bits 302-421, so the last 6-bit read needs
-    # n >= 422 (421 would shift by -1 and raise, not decode)
-    if msg_type == 5 and n >= 422:
-        base.update(
-            callsign=sixbit_text(bits, n, 70, 42),
-            shipname=sixbit_text(bits, n, 112, 120),
-            ship_type=ship_type_name(_u(bits, n, 232, 8)),
-            destination=sixbit_text(bits, n, 302, 120),
-        )
-        return base
-    if msg_type == 24 and n >= 40:
-        part = _u(bits, n, 38, 2)
-        if part == 0 and n >= 160:  # Part A: shipname only
-            base.update(shipname=sixbit_text(bits, n, 40, 120))
-        elif part == 1 and n >= 132:  # Part B: ship type + callsign
-            base.update(
-                ship_type=ship_type_name(_u(bits, n, 40, 8)),
-                callsign=sixbit_text(bits, n, 90, 42),
-            )
-        return base
-    if 1 <= msg_type <= 27:
-        # valid envelope of a type this codec doesn't field-decode: emit
-        # (msg_type, mmsi) like pyais would — the P1 router drops it, so
-        # the decoded-stage stream matches the reference producer's
-        return base
-    return None
+    msg_type = _u(bits, n, _MSG_TYPE.start, _MSG_TYPE.width)
+    if not 1 <= msg_type <= 27:
+        return None
+    msg = _UNSET.copy()
+    msg["msg_type"] = msg_type
+    msg["mmsi"] = _u(bits, n, _MMSI.start, _MMSI.width)
+    key = msg_type
+    if msg_type == 24:
+        key = (24, _u(bits, n, _PART.start, _PART.width)) if n >= _PART.start + _PART.width else None
+    layout = _LAYOUTS.get(key)
+    if layout is not None and n >= layout.min_bits:
+        for name, start, width, read, (to_value, _) in layout.fields:
+            msg[name] = to_value(read(bits, n, start, width))
+    return msg
 
 
 # --- sentence layer ---------------------------------------------------------
@@ -359,16 +395,28 @@ def decode_lines(lines: Iterable[str]) -> Iterator[dict]:
 # --- encoder (round-trip tests + fixture generation) ------------------------
 
 
-def _frame(payload: str, fill: int, frag_count: int, frag_num: int, seq_id: str, channel: str) -> str:
-    body = f"AIVDM,{frag_count},{frag_num},{seq_id},{channel},{payload},{fill}"
-    return f"!{body}*{nmea_checksum(body)}"
-
-
-def _with_tag_block(sentence: str, receiver_ts: int | None) -> str:
-    if receiver_ts is None:
-        return sentence
-    block = f"c:{receiver_ts}"
-    return f"\\{block}*{nmea_checksum(block)}\\{sentence}"
+def _encode(
+    layout: _Layout, msg_type: int, mmsi: int, receiver_ts: int | None, channel: str, seq_id: str = "", **values
+) -> list[str]:
+    """``layout``'s head and fields, each from ``values`` by name (a
+    missing one encodes as None), as NMEA sentences of at most 42 armor
+    chars (the 82-char line limit); the tag block rides the first."""
+    values.update(msg_type=msg_type, mmsi=mmsi)
+    n = layout.n_bits
+    bits = 0
+    for name, start, width, _, (_, to_raw) in (*layout.head, *layout.fields):
+        bits |= (to_raw(values.get(name)) & ((1 << width) - 1)) << (n - start - width)
+    payload, fill = bits_to_payload(bits, n)
+    chunks = [payload[i : i + 42] for i in range(0, len(payload), 42)]
+    count = len(chunks)
+    sentences = []
+    for num, chunk in enumerate(chunks, 1):
+        body = f"AIVDM,{count},{num},{seq_id if count > 1 else ''},{channel},{chunk},{fill if num == count else 0}"
+        sentences.append(f"!{body}*{nmea_checksum(body)}")
+    if receiver_ts is not None:
+        block = f"c:{receiver_ts}"
+        sentences[0] = f"\\{block}*{nmea_checksum(block)}\\{sentences[0]}"
+    return sentences
 
 
 def encode_position(
@@ -384,22 +432,10 @@ def encode_position(
 ) -> str:
     """One type-1/2/3 position sentence (168 bits)."""
     assert msg_type in (1, 2, 3)
-    n = 168
-    bits = 0
-
-    def put(start, width, value):
-        nonlocal bits
-        bits |= (value & ((1 << width) - 1)) << (n - start - width)
-
-    put(0, 6, msg_type)
-    put(8, 30, mmsi)
-    put(38, 4, status)
-    put(50, 10, 1023 if speed is None else speed * 10)
-    put(61, 28, _LON_NA if lon is None else int(round(lon * 600_000)))
-    put(89, 27, _LAT_NA if lat is None else int(round(lat * 600_000)))
-    put(128, 9, 511 if heading is None else heading)
-    payload, fill = bits_to_payload(bits, n)
-    return _with_tag_block(_frame(payload, fill, 1, 1, "", channel), receiver_ts)
+    return _encode(
+        _LAYOUTS[msg_type], msg_type, mmsi, receiver_ts, channel,
+        status=status, speed=speed, lon=lon, lat=lat, heading=heading,
+    )[0]
 
 
 def encode_class_b_position(
@@ -412,21 +448,7 @@ def encode_class_b_position(
     channel: str = "B",
 ) -> str:
     """One type-18 Class B position sentence (168 bits)."""
-    n = 168
-    bits = 0
-
-    def put(start, width, value):
-        nonlocal bits
-        bits |= (value & ((1 << width) - 1)) << (n - start - width)
-
-    put(0, 6, 18)
-    put(8, 30, mmsi)
-    put(46, 10, 1023 if speed is None else speed * 10)
-    put(57, 28, _LON_NA if lon is None else int(round(lon * 600_000)))
-    put(85, 27, _LAT_NA if lat is None else int(round(lat * 600_000)))
-    put(124, 9, 511 if heading is None else heading)
-    payload, fill = bits_to_payload(bits, n)
-    return _with_tag_block(_frame(payload, fill, 1, 1, "", channel), receiver_ts)
+    return _encode(_LAYOUTS[18], 18, mmsi, receiver_ts, channel, speed=speed, lon=lon, lat=lat, heading=heading)[0]
 
 
 def encode_class_b_static(
@@ -441,23 +463,10 @@ def encode_class_b_static(
     """Type-24 Class B static data report: part 0 = shipname (160 bits),
     part 1 = ship type + callsign (168 bits)."""
     assert part in (0, 1)
-    n = 160 if part == 0 else 168
-    bits = 0
-
-    def put(start, width, value):
-        nonlocal bits
-        bits |= (value & ((1 << width) - 1)) << (n - start - width)
-
-    put(0, 6, 24)
-    put(8, 30, mmsi)
-    put(38, 2, part)
-    if part == 0:
-        put(40, 120, text_to_sixbits(shipname or "", 20))
-    else:
-        put(40, 8, ship_type_code)
-        put(90, 42, text_to_sixbits(callsign or "", 7))
-    payload, fill = bits_to_payload(bits, n)
-    return _with_tag_block(_frame(payload, fill, 1, 1, "", channel), receiver_ts)
+    return _encode(
+        _LAYOUTS[24, part], 24, mmsi, receiver_ts, channel,
+        part=part, shipname=shipname, callsign=callsign, ship_type=ship_type_code,
+    )[0]
 
 
 def encode_static(
@@ -472,21 +481,7 @@ def encode_static(
 ) -> list[str]:
     """Type-5 static/voyage message as its two-fragment sentence pair
     (424 bits → 71 armor chars, over the 82-char NMEA line limit)."""
-    n = 424
-    bits = 0
-
-    def put(start, width, value):
-        nonlocal bits
-        bits |= (value & ((1 << width) - 1)) << (n - start - width)
-
-    put(0, 6, 5)
-    put(8, 30, mmsi)
-    put(70, 42, text_to_sixbits(callsign or "", 7))
-    put(112, 120, text_to_sixbits(shipname or "", 20))
-    put(232, 8, ship_type_code)
-    put(302, 120, text_to_sixbits(destination or "", 20))
-    payload, fill = bits_to_payload(bits, n)
-    split = 42  # chars in fragment 1 (within the NMEA length budget)
-    first = _frame(payload[:split], 0, 2, 1, seq_id, channel)
-    second = _frame(payload[split:], fill, 2, 2, seq_id, channel)
-    return [_with_tag_block(first, receiver_ts), second]
+    return _encode(
+        _LAYOUTS[5], 5, mmsi, receiver_ts, channel, seq_id,
+        callsign=callsign, shipname=shipname, ship_type=ship_type_code, destination=destination,
+    )

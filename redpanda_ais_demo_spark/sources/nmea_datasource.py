@@ -93,11 +93,20 @@ def _split(path: str, start: int, end: int, n: int) -> list[_LineRange]:
     return parts or [_LineRange(path, start, start)]
 
 
-class NMEAReplayStreamReader(DataSourceStreamReader):
+class _NMEAReplayReader:
+    """What the batch and stream readers share: the log path, the
+    partition count and reading one line range."""
+
     def __init__(self, options):
         self.path = options["path"]
         self.num_partitions = int(options.get("numpartitions", "4"))
 
+    def read(self, partition: _LineRange):
+        _guard_zip_imports()
+        yield from _read_range(partition.path, partition.start, partition.end)
+
+
+class NMEAReplayStreamReader(_NMEAReplayReader, DataSourceStreamReader):
     def initialOffset(self):
         return {"line": 0}
 
@@ -109,25 +118,13 @@ class NMEAReplayStreamReader(DataSourceStreamReader):
     def partitions(self, start, end):
         return _split(self.path, start["line"], end["line"], self.num_partitions)
 
-    def read(self, partition: _LineRange):
-        _guard_zip_imports()
-        yield from _read_range(partition.path, partition.start, partition.end)
-
     def commit(self, end):
         pass
 
 
-class NMEAReplayBatchReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.num_partitions = int(options.get("numpartitions", "4"))
-
+class NMEAReplayBatchReader(_NMEAReplayReader, DataSourceReader):
     def partitions(self):
         return _split(self.path, 0, _count_lines(self.path), self.num_partitions)
-
-    def read(self, partition: _LineRange):
-        _guard_zip_imports()
-        yield from _read_range(partition.path, partition.start, partition.end)
 
 
 class NMEAReplaySource(DataSource):

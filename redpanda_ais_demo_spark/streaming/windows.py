@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .join import interval_join_streams
+
 
 def with_event_time(df: DataFrame, epoch_col: str = "timestamp") -> DataFrame:
     return df.withColumn("event_time", F.timestamp_seconds(F.col(epoch_col)))
@@ -119,48 +121,36 @@ def dedup_stream(
 def positions_with_info_stream(
     positions: DataFrame,
     info: DataFrame,
-    watermark: str = "30 minutes",
-    max_info_age: str = "1 hour",
+    watermark_s: int = 1800,
+    max_info_age_s: int = 3600,
 ) -> DataFrame:
     """Stream-stream interval join: each live position picks up the ship
-    info published within ``max_info_age`` before it.
+    info published within ``max_info_age_s`` seconds before it.
 
     The reference can only join at query time over fully materialized
     tables (SURVEY.md §2.4 — "no stream-stream join"); Structured
-    Streaming joins the two live streams directly. Both sides carry
-    watermarks and the join condition bounds info_time to
-    [event_time - max_info_age, event_time], so each side's buffered
+    Streaming joins the two live streams directly (``interval_join_streams``).
+    Both sides carry watermarks and the join condition bounds info_time to
+    [event_time - max_info_age_s, event_time], so each side's buffered
     state is evictable once the other side's watermark passes — state is
     O(keys x age window), never O(stream). A position matching several
     info events in the window emits one row per match (the downstream
     latest-per-key dedup W1 applies if one-row-per-position is wanted).
     """
-    p = with_event_time(positions).withWatermark("event_time", watermark)
-    i = (
-        with_event_time(info)
-        .withWatermark("event_time", watermark)
-        .select(
-            F.col("mmsi").alias("i_mmsi"),
-            F.col("event_time").alias("info_time"),
-            "shipname",
-            "shiptype",
-            "destination",
-        )
+    i = with_event_time(info).select("mmsi", "event_time", "shipname", "shiptype", "destination")
+    joined = interval_join_streams(
+        with_event_time(positions), i, "mmsi", "event_time", "event_time",
+        before_s=max_info_age_s, after_s=0, watermark_s=watermark_s,
     )
-    cond = (
-        (p["mmsi"] == i["i_mmsi"])
-        & (F.col("info_time") <= F.col("event_time"))
-        & (F.col("info_time") >= F.col("event_time") - F.expr(f"INTERVAL {max_info_age}"))
-    )
-    return p.join(i, cond, "inner").select(
+    return joined.select(
         "mmsi",
         "timestamp",
         "status",
         "location",
         "speed",
         "heading",
-        "shipname",
-        "shiptype",
-        "destination",
-        "info_time",
+        F.col("r_shipname").alias("shipname"),
+        F.col("r_shiptype").alias("shiptype"),
+        F.col("r_destination").alias("destination"),
+        F.col("r_event_time").alias("info_time"),
     )

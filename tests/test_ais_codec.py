@@ -170,6 +170,61 @@ def test_sog_rule_cross_path_parity():
         assert native == reference == raw // 10, (raw, native, reference)
 
 
+# Exact sentences recorded from the per-encoder implementation that the
+# layout table replaced: sentinels, negative coordinates, all three
+# Class A types, both type-24 parts, text at and past the 7/20-char limit.
+_GOLDEN = [
+    (C.encode_position, (257000001, 60.1, 5.1, 12, 90), {},
+     "!AIVDM,1,1,,A,13m62@@01p0GF90RHsH002l00000,0*4B"),
+    (C.encode_position, (477553000, -47.58283, -122.34583, 0, 359),
+     {"status": 5, "msg_type": 2, "receiver_ts": 1_700_000_000},
+     "\\c:1700000000*5F\\!AIVDM,1,1,,A,277KQJ5000G?tOeTiMgP0;>00000,0*25"),
+    (C.encode_position, (1073741823, -90.0, -180.0, 102, 0), {"status": 14, "msg_type": 3, "channel": "B"},
+     "!AIVDM,1,1,,B,3?wwwwv0?tC81`1<P6P000000000,0*05"),
+    (C.encode_position, (123, None, None, None, None), {"status": 15},
+     "!AIVDM,1,1,,A,10000Nw0?w<tSF0l4Q@00?v00000,0*0B"),
+    (C.encode_class_b_position, (257000009, -33.9, 151.2, 7, 45), {"receiver_ts": 1_700_000_001},
+     "\\c:1700000001*5E\\!AIVDM,1,1,,B,B3m62B@0ARe2>0K9`f000FP00000,0*27"),
+    (C.encode_class_b_position, (1, None, None, None, None), {"channel": "A"},
+     "!AIVDM,1,1,,A,B00000@3wk?8mP=18D003wP00000,0*55"),
+    (C.encode_class_b_static, (257000009, 0), {"shipname": "ABCDEFGHIJKLMNOPQRST", "receiver_ts": 1_700_000_002},
+     "\\c:1700000002*5D\\!AIVDM,1,1,,A,H3m62B@48<@DHLPT`dhlpu159=@,2*45"),
+    (C.encode_class_b_static, (257000009, 0), {"shipname": "fjord queen overlong name"},
+     "!AIVDM,1,1,,A,H3m62B@H`u8B15DDDr0uHE8htpL,2*71"),
+    (C.encode_class_b_static, (257000009, 1), {"callsign": "LBXQ123", "ship_type_code": 60},
+     "!AIVDM,1,1,,A,H3m62BDt0000000<2HAijk000000,0*19"),
+    (C.encode_class_b_static, (257000009, 1), {"callsign": None, "ship_type_code": 0, "channel": "B"},
+     "!AIVDM,1,1,,B,H3m62BD000000000000000000000,0*01"),
+    (C.encode_static, (257000001, "NORDIC STAR", "LAXA", 84, "KIRKENES"), {"receiver_ts": 1_700_000_200},
+     ["\\c:1700000200*5D\\!AIVDM,2,1,1,A,53m62@@00000h5P4000pu8@T>1=@58000000001D00,0*61",
+      "!AIVDM,2,2,1,A,000000002jDRiCQDh000000000000,2*0C"]),
+    (C.encode_static, (999999999, "ABCDEFGHIJKLMNOPQRST", "ABCDEFG", 99, "0123456789:;<=>?/-. "),
+     {"seq_id": "7", "channel": "B"},
+     ["!AIVDM,2,1,7,B,5>qc9wh0000048<@DHL48<@DHLPT`dhlpu159=AS00,0*0D",
+      "!AIVDM,2,2,7,B,00000000<<Ldu=Mev>Nfw?OgssK`0,2*43"]),
+    (C.encode_static, (0, None, None, 0, None), {"seq_id": "9"},
+     ["!AIVDM,2,1,9,A,500000000000000000000000000000000000000000,0*19",
+      "!AIVDM,2,2,9,A,00000000000000000000000000000,2*2D"]),
+]
+
+
+def test_encoders_emit_golden_sentences():
+    for encode, args, kwargs, want in _GOLDEN:
+        assert encode(*args, **kwargs) == want, (encode.__name__, args, kwargs)
+
+
+def test_layout_table_is_consistent():
+    """Every layout's fields (head included) are disjoint and inside its
+    encoded length, and its decode guard is no longer than that length."""
+    for key, layout in C._LAYOUTS.items():
+        assert layout.min_bits <= layout.n_bits, key
+        spans = sorted((f.start, f.start + f.width, f.name) for f in (*layout.head, *layout.fields))
+        for (_, end, a), (start, _, b) in zip(spans, spans[1:]):
+            assert end <= start, (key, a, b)
+        assert spans[-1][1] <= layout.n_bits, key
+        assert max(f.start + f.width for f in layout.fields) <= layout.min_bits, key
+
+
 def test_reference_sentence_matches_published_decode():
     """External layout cross-check: a sentence published with its decode
     in the GPSd AIVDM/AIVDO protocol documentation (type 1, MMSI

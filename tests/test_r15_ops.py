@@ -149,6 +149,32 @@ def test_cc_vector_broadcast_gate_is_output_neutral(spark, monkeypatch):
     assert shuffled[0] == shuffled[1]  # both closures agree
 
 
+def test_bradley_terry_vector_broadcast_gate_is_output_neutral(spark, monkeypatch):
+    """bradley_terry broadcasts its rating vector, denominator table and
+    per-item wins under the same counted gate (k = item count) as the
+    graph loops; above the cap the joins shuffle and every rating is
+    unchanged. Exercised with a loser-only item, a self-comparison and
+    a lopsided pair."""
+    from redpanda_ais_demo_spark.operators import graph
+    from redpanda_ais_demo_spark.operators.recommend import bradley_terry
+
+    games = [("a", "b")] * 5 + [("b", "a")] * 2 + [("b", "c")] * 3 + [("c", "a")] * 2
+    games += [("a", "d"), ("c", "d"), ("e", "e"), ("a", "c")]
+    df = spark.createDataFrame(games, "w string, l string")
+
+    def run():
+        out = bradley_terry(df, "w", "l", rounds=4)
+        hinted = "strategy=broadcast" in out._jdf.queryExecution().analyzed().toString()
+        return sorted(map(tuple, out.collect())), hinted
+
+    broadcast, hinted = run()
+    monkeypatch.setattr(graph, "_VEC_BROADCAST_ROWS", 0)
+    shuffled, hinted_above_cap = run()
+    assert shuffled == broadcast
+    assert hinted and not hinted_above_cap
+    assert [r[0] for r in broadcast] == ["a", "b", "c", "d"]
+
+
 def test_pagerank_is_personalized_pagerank_seeded_everywhere(spark):
     """pagerank is the personalized walk with every node a seed: with
     k = n and is_seed = 1 both integer recurrences give the same rank

@@ -94,7 +94,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
     joined = windows.positions_with_info_stream(
         ingest.route_positions(stream),
         ingest.route_ship_info(stream),
-        max_info_age="5 minutes",
+        max_info_age_s=300,
     )
     _run_to_memory(joined, "ss_join", "append")
     rows = spark.table("ss_join").collect()
