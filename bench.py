@@ -64,6 +64,26 @@ def prepare_split_fixture(sf_dir: str) -> str:
         pq.write_table(table, dst, row_group_size=rows_per_group, version="2.6")
     return dest_dir
 
+
+def release_pins(spark) -> None:
+    """Free every still-persisted RDD (the iterative operators pin
+    lineage with LAZY localCheckpoint; their blocks otherwise free
+    only when the async ContextCleaner gets around to the handles).
+    Run UNTIMED after each query: measured r11 drift (pagerank
+    5.03s committed vs 4.46s under SCALING's 38-query interleave,
+    1.46x vs a 1.12x recorded spread, zero code change) tracked the
+    registry growing 283->342 — more queries per round = more
+    not-yet-cleaned blocks squatting on executor storage when a
+    heavy query's turn comes. Deterministic cleanup decouples a
+    query's sample from how many OTHER queries ran before it."""
+    try:
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+        while it.hasNext():
+            it.next()._2().unpersist(False)
+    except Exception:
+        pass  # py4j internals moved — the caller still runs, cleanup lost
+
+
 # Headline set: one per workload class (scan-agg, join, window, distinct,
 # sessionize, dedup-exact, dedup-LSH, similarity, text, pandas-UDF).
 # CORE_QUERIES is the round-6 28-query set — keep it stable so totals stay
@@ -436,24 +456,6 @@ def main() -> None:
     for name in run_queries:
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    def drop_persistent_rdds() -> None:
-        """Free every still-persisted RDD (the iterative operators pin
-        lineage with LAZY localCheckpoint; their blocks otherwise free
-        only when the async ContextCleaner gets around to the handles).
-        Run UNTIMED after each query: measured r11 drift (pagerank
-        5.03s committed vs 4.46s under SCALING's 38-query interleave,
-        1.46x vs a 1.12x recorded spread, zero code change) tracked the
-        registry growing 283->342 — more queries per round = more
-        not-yet-cleaned blocks squatting on executor storage when a
-        heavy query's turn comes. Deterministic cleanup decouples a
-        query's sample from how many OTHER queries ran before it."""
-        try:
-            it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-            while it.hasNext():
-                it.next()._2().unpersist(False)
-        except Exception:
-            pass  # py4j internals moved — bench still runs, cleanup lost
-
     samples: dict[str, list[float]] = {name: [] for name in run_queries}
     for _ in range(N_ROUNDS):
         for name in run_queries:
@@ -461,7 +463,7 @@ def main() -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples[name].append(round(time.perf_counter() - t0, 3))
-            drop_persistent_rdds()
+            release_pins(spark)
         # Round-boundary driver GC (untimed): the iterative operators pin
         # lineage with lazy localCheckpoint, and those cached blocks only
         # free when the async ContextCleaner collects the RDD handles —

@@ -33,11 +33,6 @@ def iso_utc(ts: Column) -> Column:
     return F.date_format(ts, ISO_UTC_FMT)
 
 
-def epoch_to_timestamp(epoch_seconds: Column) -> Column:
-    """F5 — epoch seconds → TimestampType (sql/clickhouse-ddl.sql:7,48)."""
-    return F.timestamp_seconds(epoch_seconds)
-
-
 def hemisphere(coord: Column, positive: str, negative: str) -> Column:
     """F7 — conditional hemisphere label (lib/console.py:89-90)."""
     return F.when(coord > 0, F.lit(positive)).otherwise(F.lit(negative))

@@ -201,22 +201,6 @@ def jaccard_pairs_prefix(shingles: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 64) -> DataFrame:
-    """MinHash signature per doc: h_i = min over shingles of
-    xxhash64(seed_i || shingle-hash). One aggregation, num_hashes min()
-    columns — all map-side partial, shuffle carries one row per doc. X2.
-
-    (An affine a*x+b mod 2^64 permutation family would be cheaper per
-    function, but wrapping long arithmetic is unexpressible under ANSI
-    mode — Spark 4 default — so the per-function mix stays xxhash64 over
-    the pre-hashed 8-byte value, never the string.)
-    """
-    hashed = shingles.select("id", F.xxhash64("shingle").alias("sh"))
-    # expr-string aggregates: one py4j call per column instead of three
-    aggs = [F.expr(f"min(xxhash64({i}L, sh)) AS h{i}") for i in range(num_hashes)]
-    return hashed.groupBy("id").agg(*aggs)
-
-
 def band_buckets(signatures: DataFrame, num_hashes: int = 64, bands: int = 16) -> DataFrame:
     """(id, band, bucket) rows from a MinHash signature: the signature is
     cut into ``bands`` row-groups, each hashed to one bucket id. Shared by

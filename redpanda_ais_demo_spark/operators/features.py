@@ -129,7 +129,6 @@ def dict_encode(
     df: DataFrame,
     col: str,
     id_offset: int = 0,
-    bounded_vocab: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Dictionary / label encoding: map a categorical column to dense
     integer ids, most-frequent-first — the vocabulary-building step for
@@ -141,8 +140,9 @@ def dict_encode(
     upstream if OOV handling is wanted).
 
     Scale plan: the corpus pass is ONE partial-aggregable
-    groupBy(term); the rank window runs over the VOCABULARY (distinct
-    terms), not the corpus; the encode side joins the vocab back —
+    groupBy(term); the rank runs over the VOCABULARY (distinct terms),
+    not the corpus, as a distributed rank (a token-scale vocabulary is
+    data-sized); the encode side joins the vocab back —
     vocabulary-sized, so Spark broadcasts it and the corpus never
     shuffles for the join.
     """
@@ -151,24 +151,13 @@ def dict_encode(
         .groupBy(F.col(col).alias("term"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    if bounded_vocab:
-        # caller declares the category domain constant-bounded (the
-        # common dict-encode case): the tiny window beats the
-        # distributed machinery's fixed cost
-        ranked = counts.withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.orderBy(F.col("n").desc(), F.col("term").asc())
-            ).cast("long"),
-        )
-    else:
-        # distributed rank (operators/ordered.py): a token-scale
-        # vocabulary is data-sized — no single-partition window over it
-        from .ordered import rank_cumsum
+    # distributed rank (operators/ordered.py): a token-scale
+    # vocabulary is data-sized — no single-partition window over it
+    from .ordered import rank_cumsum
 
-        ranked = rank_cumsum(
-            counts, [F.col("n").desc(), F.col("term").asc()], rank_col="__rk"
-        )
+    ranked = rank_cumsum(
+        counts, [F.col("n").desc(), F.col("term").asc()], rank_col="__rk"
+    )
     vocab = (
         ranked.withColumn("term_id", F.col("__rk") + F.lit(int(id_offset) - 1))
         .select("term", F.col("term_id").cast("long"), F.col("n").cast("long"))
@@ -197,7 +186,6 @@ def rfm_segments(
     ts_col: str,
     amount_cents,
     n_bins: int = 5,
-    bounded: bool = False,
 ) -> DataFrame:
     """RFM segmentation — the classic commerce customer taxonomy:
     score every key 1..``n_bins`` on Recency (days since last
@@ -212,18 +200,13 @@ def rfm_segments(
     are exact cents; per-segment mean is one division.
 
     Scale plan: all three tiles ride ``ntile_distributed`` (parallel
-    range sorts, never a single-partition window) — the MEASURED
-    default. ``bounded=True`` instead routes recency and frequency
-    (constant-bounded distinct domains) through
-    ``ntile_bounded_domain``'s per-value offsets; that shape skips two
-    range sorts of the per-key frame, but head-to-head at sf0.1 AND at
-    the 10x sf1 fixture the distributed form wins 2-4x (SCALING.md
-    "ntile strategy"): the bounded machinery's extra stages (count
-    table, span broadcast, straddler ranks, union) cost more than the
-    sorts it saves at every locally measurable scale. The escape stays
-    available for inputs where the sort genuinely dominates (petabyte
-    frames, spilling sorts) — pick it from evidence, not theory; its
-    r10 stint as the default was a theory-driven regression.
+    range sorts, never a single-partition window). A per-value-offset
+    ntile for the constant-bounded recency/frequency domains skips two
+    of those sorts, but head-to-head at sf0.1 AND at the 10x sf1
+    fixture the distributed form won 2-4x (SCALING.md "ntile
+    strategy"): the offset machinery's extra stages (count table, span
+    broadcast, straddler ranks, union) cost more than the sorts they
+    save.
 
     Output: (segment, n_keys, avg_monetary) — at most n_bins³ rows.
     """
@@ -239,43 +222,20 @@ def rfm_segments(
         "recency_days",
         F.floor((F.col("anchor") - F.col("last_ts")) / F.lit(86400)).cast("long"),
     )
-    from .ordered import ntile_bounded_domain, ntile_distributed
+    from .ordered import ntile_distributed
 
-    # Monetary FIRST: its ntile_distributed range-sorts the per-key
-    # frame and pins it (the one lazy localCheckpoint in this plan) —
-    # the two bounded tiles stacked on top then run pin-free (their
-    # count subtrees rebuild from that pin, never from the raw scan),
-    # so the whole segmentation pays ONE synchronous-planning pin
-    # instead of five (the r10 shape's five pins dominated sf0.1 wall
-    # time while the data cost was trivial).
     scored = ntile_distributed(
         t, [F.col("cents").asc(), F.col("k").asc()], n_bins, out_col="m"
     )
-    if bounded:
-        scored = ntile_bounded_domain(
-            scored,
-            F.col("recency_days"),
-            [F.col("k").asc()],
-            n_bins,
-            out_col="r",
-            descending=True,
-            pin=False,
-        )
-        scored = ntile_bounded_domain(
-            scored, F.col("freq"), [F.col("k").asc()], n_bins, out_col="f", pin=False
-        )
-    else:
-        # all-distributed variant (the r9 shape, minus recency/freq's
-        # bounded-domain escape): three full range sorts
-        scored = ntile_distributed(
-            scored,
-            [F.col("recency_days").desc(), F.col("k").asc()],
-            n_bins,
-            out_col="r",
-        )
-        scored = ntile_distributed(
-            scored, [F.col("freq").asc(), F.col("k").asc()], n_bins, out_col="f"
-        )
+    scored = ntile_distributed(
+        scored,
+        [F.col("recency_days").desc(), F.col("k").asc()],
+        n_bins,
+        out_col="r",
+    )
+    scored = ntile_distributed(
+        scored, [F.col("freq").asc(), F.col("k").asc()], n_bins, out_col="f"
+    )
     seg = F.concat_ws("", F.col("r"), F.col("f"), F.col("m"))
     return (
         scored.groupBy(seg.alias("segment"))

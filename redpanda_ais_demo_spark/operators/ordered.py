@@ -167,148 +167,6 @@ def ntile_distributed(
     )
 
 
-def ntile_bounded_domain(
-    df: DataFrame,
-    value_expr: Column,
-    tiebreak_exprs: Sequence[Column],
-    n_tiles: int,
-    out_col: str = "tile",
-    descending: bool = False,
-    max_domain: int = 10_000,
-    pin: bool = True,
-) -> DataFrame:
-    """ANSI ``ntile`` over ``(value_expr [DESC], *tiebreak_exprs)`` for
-    a value whose DISTINCT DOMAIN is constant-bounded (days-since-event,
-    small-int counts, quantized scores) — identical output to
-    ``ntile_distributed`` under the same order, without its full-data
-    range sort + checkpoint.
-
-    The trick: a value run spanning global ranks ``off+1..off+cnt``
-    either falls entirely inside one tile — every row's tile is decided
-    by the VALUE ALONE — or straddles a boundary, and at most
-    ``n_tiles − 1`` values straddle. Because the domain is bounded BY
-    CONTRACT, the per-value count table is tiny: ONE partial-aggregable
-    groupBy builds it, the offsets / ANSI tile spans compute as ONE
-    ordered window over that ≤ ``max_domain``-row table (the one
-    single-partition window this module permits — its frame is capped
-    by the enforced contract, never data-sized), and the spans
-    broadcast back. Only the straddling values' rows get a per-row
-    tiebreak rank, and that rank runs through the distributed
-    ``rank_cumsum``, so even a single tied run of a billion rows
-    (freq = 1 at 100 TB) never funnels through one task. Cost: one
-    groupBy + one broadcast join over the input + one range sort over
-    only the straddling rows, vs a range sort + checkpoint of
-    EVERYTHING in ``ntile_distributed``.
-
-    The whole plan is LAZY — no driver action at construction (the r10
-    version collected the count table eagerly, which executed the
-    caller's upstream plan once per ntile call and dominated rfm /
-    gains-lift wall time at sf0.1); everything now runs inside the
-    caller's own job.
-
-    ``value_expr`` must be an orderable primitive; ``tiebreak_exprs``
-    must totally order rows WITHIN a value. NULL values sort by Spark's
-    defaults (ASC → first, DESC → last) in both paths.
-
-    The "bounded domain" contract is ENFORCED, not trusted: the span
-    table carries an in-plan distinct-value count, and a caller passing
-    a data-scale column fails at execution with a raise_error naming
-    ``max_domain`` (before any oversized broadcast), pointing at
-    ``ntile_distributed`` instead.
-
-    ``pin`` lazy-localCheckpoints the valued frame, which feeds both
-    the count-table subtree and the probe side. Pass ``pin=False`` when
-    the input is a cheap scan projection or already sits on a pinned
-    frame — recomputing it twice inside one job then beats paying the
-    checkpoint's synchronous physical-planning cost per call (the
-    planning fixed cost, not the data, dominated rfm/gains-lift at
-    sf0.1).
-    """
-    if n_tiles < 1:
-        raise ValueError("n_tiles must be positive")
-    if not tiebreak_exprs:
-        raise ValueError("tiebreak_exprs must be non-empty")
-    order = F.col("__bd_v").desc() if descending else F.col("__bd_v").asc()
-    tmp = df.withColumn("__bd_v", value_expr)
-    if pin:
-        tmp = tmp.localCheckpoint(eager=False)
-    counts = tmp.groupBy(F.col("__bd_v").alias("__bd_vr")).agg(
-        F.count(F.lit(1)).alias("__bd_cnt")
-    )
-    # Span table: one ordered window over the ≤ max_domain-row count
-    # table. Spark null ordering (ASC → first, DESC → last) matches the
-    # value path's semantics by construction.
-    worder = F.col("__bd_vr").desc() if descending else F.col("__bd_vr").asc()
-    w_prior = Window.orderBy(worder).rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy(worder).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    n_col = F.sum("__bd_cnt").over(w_all)
-    nvals = F.count(F.lit(1)).over(w_all)
-    off = F.coalesce(F.sum("__bd_cnt").over(w_prior), F.lit(0).cast("long"))
-    with_tiles = counts.select(
-        "__bd_vr",
-        "__bd_cnt",
-        off.alias("__bd_off"),
-        n_col.alias("__bd_n"),
-        # contract enforcement rides the span computation: a data-scale
-        # domain fails fast here, before anything broadcasts
-        F.when(
-            nvals > max_domain,
-            F.raise_error(
-                F.lit(
-                    f"ntile_bounded_domain: value domain exceeds max_domain="
-                    f"{max_domain} distinct values — the column is data-"
-                    f"scale, not constant-bounded; use ntile_distributed"
-                )
-            ).cast("int"),
-        )
-        .otherwise(_tile_expr(off + 1, n_col, n_tiles).cast("int"))
-        .alias("__bd_tlo"),
-        _tile_expr(off + F.col("__bd_cnt"), n_col, n_tiles)
-        .cast("int")
-        .alias("__bd_thi"),
-    )
-    straddle = F.col("__bd_tlo") != F.col("__bd_thi")
-    span_df = with_tiles.select(
-        "__bd_vr",
-        "__bd_off",
-        "__bd_n",
-        F.coalesce(
-            F.sum(F.when(straddle, F.col("__bd_cnt"))).over(w_prior),
-            F.lit(0).cast("long"),
-        ).alias("__bd_soff"),
-        "__bd_tlo",
-        "__bd_thi",
-    )
-    # NULL-safe join: a NULL value is a legitimate domain member
-    joined = tmp.join(
-        F.broadcast(span_df), F.col("__bd_v").eqNullSafe(F.col("__bd_vr"))
-    ).drop("__bd_vr")
-    whole = joined.filter(F.col("__bd_tlo") == F.col("__bd_thi")).withColumn(
-        out_col, F.col("__bd_tlo")
-    )
-    split = joined.filter(F.col("__bd_tlo") != F.col("__bd_thi"))
-    keep = [*df.columns, out_col]
-    # straddlers: rank within the straddling subset; rank − soff is the
-    # row's position inside its value's tied run (empty when no value
-    # straddles — the branch costs nothing at runtime then). The rank's
-    # own pin follows the caller's: the split subset rebuilds cheaply
-    # from whatever the caller pinned.
-    ranked = rank_cumsum(
-        split, [order, *tiebreak_exprs], rank_col="__bd_sr", pin=pin
-    )
-    split_tiled = ranked.withColumn(
-        out_col,
-        _tile_expr(
-            F.col("__bd_off") + (F.col("__bd_sr") - F.col("__bd_soff")),
-            F.col("__bd_n"),
-            n_tiles,
-        ).cast("int"),
-    )
-    return whole.select(*keep).unionAll(split_tiled.select(*keep))
-
-
 def quantiles_disc(
     df: DataFrame,
     value_col: str,

@@ -252,7 +252,6 @@ def kaplan_meier(
     duration_col: str,
     event_col: str,
     group_col: str | None = None,
-    bounded_times: bool = False,
 ) -> DataFrame:
     """Kaplan-Meier survival estimator — churn/retention curves over
     censored durations: ``S(t) = Π_{t_i <= t} (1 − d_i / n_i)`` where
@@ -273,6 +272,8 @@ def kaplan_meier(
     Plan: one groupBy to per-time (d_i, leave_i) counts, then windows
     over the TIME table (rows = distinct durations, never subjects) per
     group — n_i is total-at-risk minus a running sum of prior leavers.
+    Pass durations at day/week granularity: ungrouped, that table sits
+    in one partition.
     Output: (group?, t, n_risk, n_events, survival) — survival rounded
     6 dp, monotone non-increasing per group.
     """
@@ -295,59 +296,30 @@ def kaplan_meier(
         F.round(F.log(F.lit(1.0) - F.col("d") / F.col("n_risk")) * 1e6).cast("long"),
     ).otherwise(F.lit(0).cast("long"))
     extinct = F.when(F.col("d") >= F.col("n_risk"), 1).otherwise(0)
-    if gcols or bounded_times:
-        # grouped: the window partitions per group (parallel).
-        # bounded_times declares the distinct-duration table constant-
-        # bounded (day/week granularity — hundreds of rows at any
-        # corpus size): the tiny single-partition window beats the
-        # distributed machinery's fixed cost there.
-        if gcols:
-            times = times.join(F.broadcast(totals), gcols)
-            w = Window.partitionBy(*gcols).orderBy("t")
-        else:
-            times = times.crossJoin(F.broadcast(totals))
-            w = Window.orderBy("t")
-        prior_left = F.coalesce(
-            F.sum("leave").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        )
-        stepped = times.withColumn("n_risk", F.col("n_total") - prior_left)
-        wrun = w.rowsBetween(Window.unboundedPreceding, 0)
-        cum = F.sum(term).over(wrun)
-        any_extinct = F.max(extinct).over(wrun)
-        out = stepped.withColumn(
-            "survival",
-            F.when(any_extinct == 1, F.lit(0.0)).otherwise(
-                F.round(F.exp(cum / F.lit(1e6)), 6)
-            ),
-        )
+    # grouped: the window partitions per group (parallel); ungrouped,
+    # the distinct-duration table is constant-bounded (day/week
+    # granularity — hundreds of rows at any corpus size), so a tiny
+    # single-partition window beats distributed prefix passes' fixed cost
+    if gcols:
+        times = times.join(F.broadcast(totals), gcols)
+        w = Window.partitionBy(*gcols).orderBy("t")
     else:
-        # ungrouped: the time table can be data-sized for fine-grained
-        # durations — two distributed prefix passes (operators/ordered.py)
-        # instead of single-partition windows; running max of a 0/1 flag
-        # == running sum >= 1
-        from .ordered import rank_cumsum
-
         times = times.crossJoin(F.broadcast(totals))
-        s1 = rank_cumsum(
-            times, [F.col("t").asc()], rank_col=None, cumsums={"__cl": F.col("leave")}
-        )
-        stepped = s1.withColumn(
-            "n_risk", F.col("n_total") - (F.col("__cl") - F.col("leave"))
-        )
-        staged = stepped.withColumn("__term", term).withColumn("__ext", extinct)
-        s2 = rank_cumsum(
-            staged,
-            [F.col("t").asc()],
-            rank_col=None,
-            cumsums={"__cum": F.col("__term"), "__cex": F.col("__ext")},
-        )
-        out = s2.withColumn(
-            "survival",
-            F.when(F.col("__cex") >= 1, F.lit(0.0)).otherwise(
-                F.round(F.exp(F.col("__cum") / F.lit(1e6)), 6)
-            ),
-        )
+        w = Window.orderBy("t")
+    prior_left = F.coalesce(
+        F.sum("leave").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        F.lit(0),
+    )
+    stepped = times.withColumn("n_risk", F.col("n_total") - prior_left)
+    wrun = w.rowsBetween(Window.unboundedPreceding, 0)
+    cum = F.sum(term).over(wrun)
+    any_extinct = F.max(extinct).over(wrun)
+    out = stepped.withColumn(
+        "survival",
+        F.when(any_extinct == 1, F.lit(0.0)).otherwise(
+            F.round(F.exp(cum / F.lit(1e6)), 6)
+        ),
+    )
     return out.select(
         *gcols,
         F.col("t"),
@@ -516,7 +488,6 @@ def roc_auc(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    bounded_scores: bool = False,
 ) -> DataFrame:
     """Exact ROC AUC of an integer score against a binary label — the
     Mann-Whitney U formulation with mid-rank tie handling (the value
@@ -530,15 +501,11 @@ def roc_auc(
     so the oracle hash-matches without rounding tricks.
 
     Scale plan: the corpus-sized pass is a single partial-aggregable
-    groupBy(score) → (n, n_pos); the cumulative-rank window then runs
-    over DISTINCT SCORES ONLY (cardinality of the score domain, not the
-    corpus). ``bounded_scores=True`` declares the score domain
-    constant-bounded (a quantized quality score: thousands of distinct
-    values at any corpus size) and keeps the cheap single-partition
-    window over that tiny table; the default routes the prefix count
-    through the distributed machinery for continuous/unbounded score
-    domains. NULL scores/labels are excluded up front (score them or
-    quarantine upstream).
+    groupBy(score) → (n, n_pos); the cumulative rank then runs over
+    DISTINCT SCORES ONLY (cardinality of the score domain, not the
+    corpus), as a distributed prefix count so a continuous score domain
+    never lands on one partition. NULL scores/labels are excluded up
+    front (score them or quarantine upstream).
 
     Output: one row (n_pos, n_neg, auc). Degenerate inputs (no
     positives or no negatives) yield auc = NULL rather than a division
@@ -551,20 +518,14 @@ def roc_auc(
         .groupBy("s")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("n_pos"))
     )
-    if bounded_scores:
-        w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
-        ranked = counts.withColumn(
-            "cum_less", F.coalesce(F.sum("n").over(w), F.lit(0))
-        )
-    else:
-        # distributed exclusive prefix count (operators/ordered.py): the
-        # distinct-score table can be data-sized for continuous scores,
-        # so no single-partition window — inclusive sum minus own n
-        from .ordered import rank_cumsum
+    # distributed exclusive prefix count (operators/ordered.py): the
+    # distinct-score table can be data-sized for continuous scores,
+    # so no single-partition window — inclusive sum minus own n
+    from .ordered import rank_cumsum
 
-        ranked = rank_cumsum(
-            counts, [F.col("s").asc()], rank_col=None, cumsums={"__ci": F.col("n")}
-        ).withColumn("cum_less", F.col("__ci") - F.col("n"))
+    ranked = rank_cumsum(
+        counts, [F.col("s").asc()], rank_col=None, cumsums={"__ci": F.col("n")}
+    ).withColumn("cum_less", F.col("__ci") - F.col("n"))
     agg = ranked.agg(
         F.sum("n_pos").alias("p"),
         (F.sum("n") - F.sum("n_pos")).alias("q"),
@@ -703,7 +664,6 @@ def gains_lift(
     label_col: str,
     tiebreak_col: str,
     n_deciles: int = 10,
-    bounded_scores: bool = False,
 ) -> DataFrame:
     """Gains/lift table — the campaign-targeting readout of a binary
     scorer ("mail the top decile, capture X% of responders"): rows rank
@@ -725,36 +685,17 @@ def gains_lift(
         raise ValueError(f"n_deciles must be >= 2, got {n_deciles}")
     # ANSI ntile without the single-partition window: distributed rank
     # + total-count bucket formula (operators/ordered.py) — identical
-    # tiling, parallel sort at any corpus size. ``bounded_scores``
-    # declares a constant-bounded distinct score domain (quantized
-    # lengths, day buckets): tiles then come from per-value offsets
-    # (one partial-aggregable groupBy) with only the <= n_deciles-1
-    # tile-straddling values paying a per-row rank — same output,
-    # no full-data range sort.
-    from .ordered import ntile_bounded_domain, ntile_distributed
+    # tiling, parallel sort at any corpus size
+    from .ordered import ntile_distributed
 
     base = df.select(
         F.col(score_col).alias("s"),
         F.col(label_col).cast("long").alias("y"),
         F.col(tiebreak_col).alias("tb"),
     ).filter(F.col("s").isNotNull() & F.col("y").isNotNull())
-    if bounded_scores:
-        # pin=False: the input is a 3-column scan projection — a second
-        # scan (count subtree + probe) is cheaper than the checkpoint's
-        # synchronous planning + materialization at every scale
-        t = ntile_bounded_domain(
-            base,
-            F.col("s"),
-            [F.col("tb").asc()],
-            n_deciles,
-            out_col="decile",
-            descending=True,
-            pin=False,
-        )
-    else:
-        t = ntile_distributed(
-            base, [F.col("s").desc(), F.col("tb").asc()], n_deciles, out_col="decile"
-        )
+    t = ntile_distributed(
+        base, [F.col("s").desc(), F.col("tb").asc()], n_deciles, out_col="decile"
+    )
     per = t.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("n_pos")
     )
@@ -1255,7 +1196,6 @@ def mann_whitney_u(
     value_col: str,
     control: str,
     treatment: str,
-    bounded_values: bool = False,
 ) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) test — the nonparametric
     sibling of ``welch_ttest`` for metrics too skewed for a means test
@@ -1277,12 +1217,9 @@ def mann_whitney_u(
     per-subject window. The single double chain at the end (variance,
     z, rank-biserial) is fixed-order and IEEE-identical cross-engine.
 
-    Plan: one partial-aggregable groupBy(value), then either the
-    distributed prefix-sum (operators/ordered.py — the default; scales
-    to an unbounded value domain) or, with ``bounded_values=True``, a
-    tiny single-partition window for quantized domains (scores 0..100,
-    day buckets) where the distributed machinery's fixed cost dominates.
-    Output: one row — n/U/z/rank-biserial.
+    Plan: one partial-aggregable groupBy(value), then the distributed
+    prefix-sum (operators/ordered.py — scales to an unbounded value
+    domain). Output: one row — n/U/z/rank-biserial.
     """
     two = subjects.filter(F.col(group_col).isin(control, treatment))
     vals = (
@@ -1297,18 +1234,12 @@ def mann_whitney_u(
         )
         .withColumn("cnt", F.col("cc") + F.col("ct"))
     )
-    if bounded_values:
-        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        ranked = vals.withColumn(
-            "cum", F.coalesce(F.sum("cnt").over(w), F.lit(0))
-        )
-    else:
-        from .ordered import rank_cumsum
+    from .ordered import rank_cumsum
 
-        ranked = rank_cumsum(
-            vals, [F.col("v").asc()], rank_col=None,
-            cumsums={"__ci": F.col("cnt")},
-        ).withColumn("cum", F.col("__ci") - F.col("cnt"))
+    ranked = rank_cumsum(
+        vals, [F.col("v").asc()], rank_col=None,
+        cumsums={"__ci": F.col("cnt")},
+    ).withColumn("cum", F.col("__ci") - F.col("cnt"))
     two_mid = F.lit(2) * F.col("cum") + F.col("cnt") + 1  # 2 × midrank
     cnt_d = F.col("cnt").cast(_DEC)
     agg = ranked.agg(
@@ -1541,8 +1472,8 @@ def nearest_match_att(
     x). All counts/sums exact BIGINT; ATT is one division.
 
     Scale shape: controls collapse to one row per DISTINCT x (a
-    partial-agg groupBy) — the bounded-domain contract of
-    ``ntile_bounded_domain``; consecutive distinct xs become
+    partial-agg groupBy — the covariate's domain is bounded by
+    contract); consecutive distinct xs become
     half-open intervals via a window over that bounded table ONLY,
     and treated rows BROADCAST-range-join into the interval that
     contains them, so each treated row meets exactly one (prev, next)
@@ -1759,7 +1690,6 @@ def kruskal_wallis(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    bounded_values: bool = False,
 ) -> DataFrame:
     """Kruskal-Wallis H — the k-group generalisation of Mann-Whitney
     (one-way ANOVA on ranks): H = 12/(n(n+1))·Σ_g R_g²/n_g − 3(n+1),
@@ -1776,27 +1706,20 @@ def kruskal_wallis(
     micro-unit rounding of each group's (2R_g)²/n_g term (a single
     IEEE double op on exact inputs — identical cross-engine) so the
     cross-group sum stays an integer. Two partial-aggregable shuffles
-    (value×group, then value), prefix via operators/ordered.py unless
-    ``bounded_values`` declares a quantized domain. Output: one row —
-    n, k, H, tie-corrected H.
+    (value×group, then value), prefix via operators/ordered.py.
+    Output: one row — n, k, H, tie-corrected H.
     """
     base = df.select(
         F.col(group_col).alias("g"), F.col(value_col).cast("long").alias("v")
     )
     per = base.groupBy("v", "g").agg(F.count(F.lit(1)).alias("cg"))
     tot = per.groupBy("v").agg(F.sum("cg").alias("cnt"))
-    if bounded_values:
-        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        ranked = tot.withColumn(
-            "cum", F.coalesce(F.sum("cnt").over(w), F.lit(0))
-        )
-    else:
-        from .ordered import rank_cumsum
+    from .ordered import rank_cumsum
 
-        ranked = rank_cumsum(
-            tot, [F.col("v").asc()], rank_col=None,
-            cumsums={"__ci": F.col("cnt")},
-        ).withColumn("cum", F.col("__ci") - F.col("cnt"))
+    ranked = rank_cumsum(
+        tot, [F.col("v").asc()], rank_col=None,
+        cumsums={"__ci": F.col("cnt")},
+    ).withColumn("cum", F.col("__ci") - F.col("cnt"))
     joined = per.join(ranked.select("v", "cnt", "cum"), "v")
     two_mid = F.lit(2) * F.col("cum") + F.col("cnt") + 1
     grp = joined.groupBy("g").agg(
@@ -1844,7 +1767,6 @@ def logrank_test(
     group_col: str,
     g1: str,
     g2: str,
-    bounded_times: bool = False,
 ) -> DataFrame:
     """Two-sample log-rank test — the hypothesis-test companion of
     ``kaplan_meier``: are two survival curves (churn by cohort, variant
@@ -1857,8 +1779,8 @@ def logrank_test(
     BIGINT BEFORE the cross-time sum (the kaplan_meier ln-term
     pattern) — no float accumulation. Plan: one groupBy to the
     distinct-time table (d1, d2, leavers per group), risk sets via an
-    exclusive prefix over that table — distributed prefix by default,
-    plain window when ``bounded_times`` declares day/week granularity.
+    exclusive prefix window over that table (constant-bounded at
+    day/week granularity, so one partition holds it).
     Output: one row — per-group n, O1, E1, chi², z.
     """
     two = subjects.filter(F.col(group_col).isin(g1, g2))
@@ -1878,22 +1800,10 @@ def logrank_test(
         F.sum(1 - F.col("is1")).alias("n2_tot"),
     )
     times = times.crossJoin(F.broadcast(totals))
-    if bounded_times:
-        w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-        stepped = times.withColumn(
-            "cl1", F.coalesce(F.sum("l1").over(w), F.lit(0))
-        ).withColumn("cl2", F.coalesce(F.sum("l2").over(w), F.lit(0)))
-    else:
-        from .ordered import rank_cumsum
-
-        stepped = (
-            rank_cumsum(
-                times, [F.col("t").asc()], rank_col=None,
-                cumsums={"__c1": F.col("l1"), "__c2": F.col("l2")},
-            )
-            .withColumn("cl1", F.col("__c1") - F.col("l1"))
-            .withColumn("cl2", F.col("__c2") - F.col("l2"))
-        )
+    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    stepped = times.withColumn(
+        "cl1", F.coalesce(F.sum("l1").over(w), F.lit(0))
+    ).withColumn("cl2", F.coalesce(F.sum("l2").over(w), F.lit(0)))
     n1 = F.col("n1_tot") - F.col("cl1")
     n2 = F.col("n2_tot") - F.col("cl2")
     dd = F.col("d1") + F.col("d2")
@@ -2269,7 +2179,6 @@ def average_precision(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    bounded_scores: bool = False,
 ) -> DataFrame:
     """Average precision (area under the precision-recall curve, step
     form) — the ranking-eval metric that matters when positives are
@@ -2284,10 +2193,9 @@ def average_precision(
     inclusive prefix DESCENDING the score gives (cum_pos, cum_all),
     and each level's ΔR·P = (pos_s·cum_pos)/(n_pos·cum_all) is one
     IEEE division of DECIMAL-exact products, nano-quantized before
-    the exact cross-level sum. ``bounded_scores`` keeps the tiny
-    single-partition window for quantized score domains; the default
-    rides the distributed prefix (operators/ordered.py). Output: one
-    row — n_pos, n_neg, prevalence, pr_auc.
+    the exact cross-level sum. The prefix rides the distributed
+    machinery (operators/ordered.py). Output: one row — n_pos, n_neg,
+    prevalence, pr_auc.
     """
     base = df.select(
         F.col(score_col).cast("long").alias("s"),
@@ -2297,22 +2205,14 @@ def average_precision(
         F.count(F.lit(1)).alias("n_s"),
         F.sum("y").alias("pos_s"),
     )
-    if bounded_scores:
-        w = Window.orderBy(F.col("s").desc()).rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        ranked = levels.withColumn(
-            "cum_all", F.sum("n_s").over(w)
-        ).withColumn("cum_pos", F.sum("pos_s").over(w))
-    else:
-        from .ordered import rank_cumsum
+    from .ordered import rank_cumsum
 
-        ranked = rank_cumsum(
-            levels,
-            [F.col("s").desc()],
-            rank_col=None,
-            cumsums={"cum_all": F.col("n_s"), "cum_pos": F.col("pos_s")},
-        )
+    ranked = rank_cumsum(
+        levels,
+        [F.col("s").desc()],
+        rank_col=None,
+        cumsums={"cum_all": F.col("n_s"), "cum_pos": F.col("pos_s")},
+    )
     tot = levels.agg(F.sum("pos_s").alias("n_pos"), F.sum("n_s").alias("n"))
     t = ranked.crossJoin(F.broadcast(tot))
     dec = lambda c: c.cast(_DEC)  # noqa: E731
@@ -3337,7 +3237,6 @@ def ks_two_sample(
     value_col: str,
     control: str,
     treatment: str,
-    bounded_values: bool = False,
 ) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov test — the distribution-shape
     complement of the rank tests (Mann-Whitney asks "is one shifted",
@@ -3350,7 +3249,7 @@ def ks_two_sample(
     Contract: exact-integer values (cents — the ``mann_whitney_u``
     discipline). Exactness: the pooled frame collapses to one row per
     DISTINCT value; inclusive prefix counts ride the distributed
-    prefix-sum (or a tiny window under ``bounded_values``); the max gap
+    prefix-sum; the max gap
     is found on the EXACT INTEGER |cum_c·n_t − cum_t·n_c| — D's
     numerator never touches a float, ONE division at the end.
 
@@ -3367,20 +3266,14 @@ def ks_two_sample(
             F.sum(F.when(F.col(group_col) == treatment, 1).otherwise(0)).alias("cb"),
         )
     )
-    if bounded_values:
-        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-        ranked = vals.select(
-            "*", F.sum("ca").over(w).alias("cum_a"), F.sum("cb").over(w).alias("cum_b")
-        )
-    else:
-        from .ordered import rank_cumsum
+    from .ordered import rank_cumsum
 
-        ranked = rank_cumsum(
-            vals,
-            [F.col("v").asc()],
-            rank_col=None,
-            cumsums={"cum_a": F.col("ca"), "cum_b": F.col("cb")},
-        )
+    ranked = rank_cumsum(
+        vals,
+        [F.col("v").asc()],
+        rank_col=None,
+        cumsums={"cum_a": F.col("ca"), "cum_b": F.col("cb")},
+    )
     # the distinct-value frame feeds both the totals lookup and the max
     # scan — pin it so the upstream collapses run once
     ranked = ranked.localCheckpoint(eager=False)
@@ -3474,7 +3367,6 @@ def nelson_aalen(
     duration_col: str,
     event_col: str,
     group_col: str | None = None,
-    bounded_times: bool = False,
 ) -> DataFrame:
     """Nelson-Aalen cumulative-hazard estimator — Kaplan-Meier's
     additive sibling (H(t) = Σ_{t_i≤t} d_i/n_i with the standard
@@ -3486,8 +3378,8 @@ def nelson_aalen(
 
     Determinism/plan: identical skeleton to ``kaplan_meier`` — one
     groupBy to per-time (d, leave) counts, windows over the TIME table
-    (distinct durations, never subjects; single-partition only under
-    ``bounded_times``/grouping, else the distributed prefix-sum); the
+    (distinct durations, never subjects; per group, or one partition
+    for the constant-bounded ungrouped table); the
     per-step ratios quantize to micro (hazard) / pico (variance) units
     before the exact cumulative sums.
     """
@@ -3512,39 +3404,21 @@ def nelson_aalen(
             (F.col("d") / (F.col("n_risk") * F.col("n_risk"))) * 1e12
         ).cast("long"),
     ).otherwise(F.lit(0).cast("long"))
-    if gcols or bounded_times:
-        if gcols:
-            times = times.join(F.broadcast(totals), gcols)
-            w = Window.partitionBy(*gcols).orderBy("t")
-        else:
-            times = times.crossJoin(F.broadcast(totals))
-            w = Window.orderBy("t")
-        prior_left = F.coalesce(
-            F.sum("leave").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        )
-        stepped = times.withColumn("n_risk", F.col("n_total") - prior_left)
-        wrun = w.rowsBetween(Window.unboundedPreceding, 0)
-        out = stepped.withColumn("__ch", F.sum(term_h).over(wrun)).withColumn(
-            "__cv", F.sum(term_v).over(wrun)
-        )
+    if gcols:
+        times = times.join(F.broadcast(totals), gcols)
+        w = Window.partitionBy(*gcols).orderBy("t")
     else:
-        from .ordered import rank_cumsum
-
         times = times.crossJoin(F.broadcast(totals))
-        s1 = rank_cumsum(
-            times, [F.col("t").asc()], rank_col=None, cumsums={"__cl": F.col("leave")}
-        )
-        stepped = s1.withColumn(
-            "n_risk", F.col("n_total") - (F.col("__cl") - F.col("leave"))
-        )
-        staged = stepped.withColumn("__th", term_h).withColumn("__tv", term_v)
-        out = rank_cumsum(
-            staged,
-            [F.col("t").asc()],
-            rank_col=None,
-            cumsums={"__ch": F.col("__th"), "__cv": F.col("__tv")},
-        )
+        w = Window.orderBy("t")
+    prior_left = F.coalesce(
+        F.sum("leave").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        F.lit(0),
+    )
+    stepped = times.withColumn("n_risk", F.col("n_total") - prior_left)
+    wrun = w.rowsBetween(Window.unboundedPreceding, 0)
+    out = stepped.withColumn("__ch", F.sum(term_h).over(wrun)).withColumn(
+        "__cv", F.sum(term_v).over(wrun)
+    )
     return out.select(
         *gcols,
         F.col("t"),
@@ -3601,7 +3475,6 @@ def spearman_corr(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    bounded_values: bool = False,
 ) -> DataFrame:
     """Exact Spearman rank correlation between two integer columns —
     Pearson on midranks, the monotone-association screen that ignores
@@ -3615,9 +3488,8 @@ def spearman_corr(
     accumulate doubled ranks in DECIMAL(38,0)/HUGEINT, fixed-order
     polynomials, one division. Doubling cancels in the correlation.
 
-    Plan: two per-axis groupBys + prefix sums over DISTINCT values
-    (distributed rank by default; tiny windows under
-    ``bounded_values``), two hash joins back to the pair frame, one
+    Plan: two per-axis groupBys + distributed prefix sums over
+    DISTINCT values, two hash joins back to the pair frame, one
     partial-aggregable five-sum pass. No data-sized sort, no
     per-row window.
     """
@@ -3633,18 +3505,12 @@ def spearman_corr(
         vals = pairs.groupBy(F.col(col).alias("v")).agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        if bounded_values:
-            w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-            ranked = vals.withColumn(
-                "cum", F.coalesce(F.sum("cnt").over(w), F.lit(0))
-            )
-        else:
-            from .ordered import rank_cumsum
+        from .ordered import rank_cumsum
 
-            ranked = rank_cumsum(
-                vals, [F.col("v").asc()], rank_col=None,
-                cumsums={"__ci": F.col("cnt")},
-            ).withColumn("cum", F.col("__ci") - F.col("cnt"))
+        ranked = rank_cumsum(
+            vals, [F.col("v").asc()], rank_col=None,
+            cumsums={"__ci": F.col("cnt")},
+        ).withColumn("cum", F.col("__ci") - F.col("cnt"))
         return ranked.select(
             F.col("v").alias(col),
             (F.lit(2) * F.col("cum") + F.col("cnt") + 1).alias(f"r{col}"),
@@ -4202,7 +4068,7 @@ def km_rmst(
     if tau <= 0:
         raise ValueError("tau must be > 0")
     km = kaplan_meier(
-        df, duration_col, event_col, group_col, bounded_times=True
+        df, duration_col, event_col, group_col
     )
     w = Window.partitionBy(group_col).orderBy("t")
     nxt = F.coalesce(F.lead("t").over(w), F.lit(tau).cast("long"))
@@ -4485,7 +4351,6 @@ def wilcoxon_signed_rank(
     df: DataFrame,
     pre_col: str,
     post_col: str,
-    bounded_values: bool = False,
 ) -> DataFrame:
     """Wilcoxon signed-rank test for PAIRED measurements — the
     within-subject sibling of ``mann_whitney_u`` (that one compares
@@ -4502,9 +4367,7 @@ def wilcoxon_signed_rank(
     |diff| with (n_pos, n_neg) counts; the exclusive prefix count
     gives every tied run its doubled midrank 2·cum + cnt + 1, so the
     doubled W+ and the tie term accumulate as exact DECIMAL(38,0).
-    ``bounded_values`` keeps the tiny single-partition window for
-    quantized domains; the default rides the distributed prefix
-    (operators/ordered.py) — structural bound.
+    The prefix rides the distributed machinery (operators/ordered.py).
 
     Output: one row — n_pairs (nonzero), w_plus, z_score, p_value.
     """
@@ -4519,18 +4382,12 @@ def wilcoxon_signed_rank(
         )
         .withColumn("cnt", F.col("np") + F.col("nn"))
     )
-    if bounded_values:
-        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        ranked = vals.withColumn(
-            "cum", F.coalesce(F.sum("cnt").over(w), F.lit(0))
-        )
-    else:
-        from .ordered import rank_cumsum
+    from .ordered import rank_cumsum
 
-        ranked = rank_cumsum(
-            vals, [F.col("v").asc()], rank_col=None,
-            cumsums={"__ci": F.col("cnt")},
-        ).withColumn("cum", F.col("__ci") - F.col("cnt"))
+    ranked = rank_cumsum(
+        vals, [F.col("v").asc()], rank_col=None,
+        cumsums={"__ci": F.col("cnt")},
+    ).withColumn("cum", F.col("__ci") - F.col("cnt"))
     two_mid = F.lit(2) * F.col("cum") + F.col("cnt") + 1  # 2 x midrank
     cnt_d = F.col("cnt").cast(_DEC)
     agg = ranked.agg(
@@ -4756,8 +4613,8 @@ def kendall_tau_b(
     operator exists to avoid). All pair counts are exact
     DECIMAL(38,0); one final fixed double chain.
 
-    The bounded-domain contract is ENFORCED, not trusted (the
-    ``ntile_bounded_domain`` / ``removal_effect_attribution`` pattern):
+    The bounded-domain contract is ENFORCED, not trusted, by an
+    in-plan ``raise_error`` on a domain-size bound:
     an in-plan cell count rides a broadcast onto the self-join's build
     side, and a caller passing a continuous column fails at execution
     with a raise_error naming ``max_cells`` on the FIRST probe row —

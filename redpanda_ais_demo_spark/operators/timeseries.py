@@ -2507,8 +2507,8 @@ def markov_absorption(
     the iteration runs on the driver like the GLM 2×2 solves (a 10×10
     matrix recurrence is driver math; scheduling ``iters`` Spark jobs
     for it would be pure overhead at any scale). ``max_states`` guards
-    the contract the way ntile_bounded_domain does: a data-scale state
-    column fails fast instead of collecting.
+    the contract with a size bound on the collected edge table: a
+    data-scale state column fails fast instead of collecting.
 
     Exactness: v carries nano-units; each round computes
     v'_s = (2·(Σ_j n_sj·v_j + n_s→conv·1e9) + n_s) // (2·n_s) — all

@@ -1269,7 +1269,7 @@ def survival_user_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # day-granularity durations: the distinct-time table is bounded
     # by the observation span in days, not the subject count
-    return kaplan_meier(subjects, "dur_days", "churned", bounded_times=True)
+    return kaplan_meier(subjects, "dur_days", "churned")
 
 
 @query(
@@ -2111,7 +2111,7 @@ def auc_quality_vs_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: routed through the distributed prefix (operators/ordered.py)
     # so the bound is STRUCTURAL — a real-valued/unbounded score column
     # no longer rides a single-partition window (r11 verdict item 6)
-    return roc_auc(scored, "s", "y", bounded_scores=False)
+    return roc_auc(scored, "s", "y")
 
 
 @query(
@@ -3285,9 +3285,9 @@ def gains_lift_length_vs_en(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("tb"),
     )
     # distributed tiling: head-to-head at sf0.1 AND sf1 the parallel
-    # range sort beats the bounded-domain escape 2x (SCALING.md "ntile
-    # strategy") — the escape stays available for sort-dominated inputs
-    return gains_lift(d, "s", "y", "tb", n_deciles=10, bounded_scores=False)
+    # range sort beat a per-value-offset ntile 2x (SCALING.md "ntile
+    # strategy")
+    return gains_lift(d, "s", "y", "tb", n_deciles=10)
 
 
 @query(
@@ -5270,7 +5270,7 @@ def kruskal_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whether the split's curves differ. Per-time hypergeometric "
     "expectation/variance micro-quantized from exact DECIMAL products "
     "before the cross-time sum; windows over the day-granularity "
-    "distinct-duration table (bounded_times) "
+    "distinct-duration table "
     "(operators/stats.py:logrank_test).",
 )
 def logrank_churn_by_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5290,9 +5290,7 @@ def logrank_churn_by_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             split_bucket_col(F.col("user_id"), "exp-r8"), (("A", 5000), ("B", 5000))
         ).alias("grp"),
     )
-    return logrank_test(
-        subjects, "dur_days", "churned", "grp", "A", "B", bounded_times=True
-    )
+    return logrank_test(subjects, "dur_days", "churned", "grp", "A", "B")
 
 
 @query(
@@ -5923,7 +5921,7 @@ def ap_length_vs_en(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("lang") == "en").cast("long").alias("y"),
     )
     # r12: distributed prefix — structural bound (r11 verdict item 6)
-    return average_precision(scored, "s", "y", bounded_scores=False)
+    return average_precision(scored, "s", "y")
 
 
 @query(
@@ -7353,7 +7351,7 @@ def nelson_aalen_user_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("t1") - F.col("t0")) / 86400).cast("long").alias("dur_days"),
         (F.col("t1") < F.col("cut")).cast("int").alias("churned"),
     )
-    return nelson_aalen(subjects, "dur_days", "churned", bounded_times=True)
+    return nelson_aalen(subjects, "dur_days", "churned")
 
 
 @query(

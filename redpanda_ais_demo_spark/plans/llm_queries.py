@@ -3303,7 +3303,7 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Dictionary / label encoding of the source column: dense ids "
     "assigned most-frequent-first (ties by term — deterministic under "
     "any partitioning). One partial-agg groupBy builds the vocabulary; "
-    "the rank window runs over DISTINCT TERMS only; the encode join "
+    "the distributed rank runs over DISTINCT TERMS only; the encode join "
     "broadcasts the vocab so the corpus never shuffles "
     "(operators/features.py:dict_encode).",
 )
@@ -3313,7 +3313,7 @@ def dict_encode_doc_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # the source domain is a bounded category set, not a token vocab
     # r12: distributed vocab rank — structural bound (r11 verdict item 6)
-    _vocab, encoded = dict_encode(docs, "source", bounded_vocab=False)
+    _vocab, encoded = dict_encode(docs, "source")
     return encoded.select("doc_id", F.col("source_id"))
 
 

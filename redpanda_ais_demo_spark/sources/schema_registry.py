@@ -106,7 +106,3 @@ class SchemaRegistryClient:
 
 def value_subject(topic: str) -> str:
     return f"{topic}-value"
-
-
-def key_subject(topic: str) -> str:
-    return f"{topic}-key"

@@ -125,7 +125,7 @@ def monitor_trajectory_batch(
     a cumulative window over the batch_ts axis only — the frame is
     calendar-bounded (days/hours), never data-scale, so the
     single-partition window holds a constant-bounded row count at any
-    input volume (same argument as the bounded-domain ntile).
+    input volume.
     """
     readout = _readout(z_threshold)
     from pyspark.sql import Window

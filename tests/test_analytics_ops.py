@@ -1351,33 +1351,6 @@ def test_rfm_segments_scores_and_means(spark):
         rfm_segments(df, "k", "ts", F.col("cents"), n_bins=1)
 
 
-def test_rfm_bounded_and_distributed_paths_agree(spark):
-    # The bounded-domain escape (opt-in since the r11 measurement — see
-    # SCALING.md "Ntile strategy") must stay result-identical to the
-    # distributed default, ties and all.
-    from redpanda_ais_demo_spark.operators.features import rfm_segments
-
-    D = 86400
-    rows = [
-        (k, (k % 7 + 1) * D + o * D, (k % 5 + 1) * 100 + o)
-        for k in range(1, 24)
-        for o in range(k % 4 + 1)
-    ]
-    df = spark.createDataFrame(rows, "k long, ts long, cents long")
-    a = sorted(
-        map(tuple, rfm_segments(df, "k", "ts", F.col("cents"), n_bins=4).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            rfm_segments(
-                df, "k", "ts", F.col("cents"), n_bins=4, bounded=True
-            ).collect(),
-        )
-    )
-    assert a == b
-
-
 def test_reconcile_totals_profiles_discrepancies(spark):
     from redpanda_ais_demo_spark.operators.validate import reconcile_totals
 
@@ -1907,12 +1880,6 @@ def test_mann_whitney_known_samples(spark):
     assert abs(r.z_score - round(z, 6)) < 1e-9
     assert abs(r.rank_biserial - round(2 * u_a / (na * nb) - 1, 6)) < 1e-9
 
-    # bounded-values window path is bit-identical to the distributed path
-    rb = mann_whitney_u(
-        df, "variant", "cents", "A", "B", bounded_values=True
-    ).collect()[0]
-    assert rb == r
-
     # one-armed input -> NULL statistics, no crash
     solo = spark.createDataFrame([("A", 5), ("A", 7)], "variant string, cents long")
     rs = mann_whitney_u(solo, "variant", "cents", "A", "B").collect()[0]
@@ -1964,29 +1931,26 @@ def test_logrank_known_example(spark):
         ("g2", 4, 1), ("g2", 8, 1), ("g2", 9, 0),
     ]
     df = spark.createDataFrame(rows, "grp string, t long, ev int")
-    for bounded in (False, True):
-        r = logrank_test(
-            df, "t", "ev", "grp", "g1", "g2", bounded_times=bounded
-        ).collect()[0]
-        # hand walk: risk sets at each event time
-        subj = [(t, e, g) for g, t, e in rows]
-        times = sorted({t for t, e, _ in subj if e == 1})
-        o1 = e1 = v = 0.0
-        for t in times:
-            n1 = sum(1 for tt, _, g in subj if tt >= t and g == "g1")
-            n2 = sum(1 for tt, _, g in subj if tt >= t and g == "g2")
-            d1 = sum(1 for tt, e, g in subj if tt == t and e and g == "g1")
-            d = d1 + sum(1 for tt, e, g in subj if tt == t and e and g == "g2")
-            n = n1 + n2
-            o1 += d1
-            e1 += d * n1 / n
-            if n > 1:
-                v += d * n1 * n2 * (n - d) / (n * n * (n - 1))
-        z = (o1 - e1) / v**0.5
-        assert r.n_g1 == 3 and r.n_g2 == 3 and r.observed_g1 == int(o1)
-        assert abs(r.expected_g1 - round(e1, 6)) < 1e-5
-        assert abs(r.z_score - round(z, 6)) < 1e-5
-        assert abs(r.chi2 - round(z * z, 6)) < 1e-5
+    r = logrank_test(df, "t", "ev", "grp", "g1", "g2").collect()[0]
+    # hand walk: risk sets at each event time
+    subj = [(t, e, g) for g, t, e in rows]
+    times = sorted({t for t, e, _ in subj if e == 1})
+    o1 = e1 = v = 0.0
+    for t in times:
+        n1 = sum(1 for tt, _, g in subj if tt >= t and g == "g1")
+        n2 = sum(1 for tt, _, g in subj if tt >= t and g == "g2")
+        d1 = sum(1 for tt, e, g in subj if tt == t and e and g == "g1")
+        d = d1 + sum(1 for tt, e, g in subj if tt == t and e and g == "g2")
+        n = n1 + n2
+        o1 += d1
+        e1 += d * n1 / n
+        if n > 1:
+            v += d * n1 * n2 * (n - d) / (n * n * (n - 1))
+    z = (o1 - e1) / v**0.5
+    assert r.n_g1 == 3 and r.n_g2 == 3 and r.observed_g1 == int(o1)
+    assert abs(r.expected_g1 - round(e1, 6)) < 1e-5
+    assert abs(r.z_score - round(z, 6)) < 1e-5
+    assert abs(r.chi2 - round(z * z, 6)) < 1e-5
 
     # no events at all -> NULL chi2/z, zero expectation
     cens = spark.createDataFrame(
@@ -2142,27 +2106,26 @@ def test_average_precision_known_ranking(spark):
     # distinct scores, descending: y = 1,0,1,1,0  -> sklearn AP
     rows = [(50, 1), (40, 0), (30, 1), (20, 1), (10, 0)]
     df = spark.createDataFrame(rows, "s long, y long")
-    for bounded in (True, False):
-        r = average_precision(df, "s", "y", bounded_scores=bounded).collect()[0]
-        # AP = 1/3*(1/1) + 1/3*(2/3) + 1/3*(3/4)
-        exp = (1 / 1 + 2 / 3 + 3 / 4) / 3
-        assert r.n_pos == 3 and r.n_neg == 2
-        assert abs(r.pr_auc - round(exp, 6)) < 1e-6
+    r = average_precision(df, "s", "y").collect()[0]
+    # AP = 1/3*(1/1) + 1/3*(2/3) + 1/3*(3/4)
+    exp = (1 / 1 + 2 / 3 + 3 / 4) / 3
+    assert r.n_pos == 3 and r.n_neg == 2
+    assert abs(r.pr_auc - round(exp, 6)) < 1e-6
 
     # tied block: both rows of score 30 enter together
     tied = spark.createDataFrame(
         [(50, 1), (30, 1), (30, 0), (10, 1)], "s long, y long"
     )
-    rt = average_precision(tied, "s", "y", bounded_scores=True).collect()[0]
+    rt = average_precision(tied, "s", "y").collect()[0]
     # levels desc: (50: 1/1), (30: pos 1, cum_pos 2, cum_all 3), (10: 3/4)
     exp = (1 / 3) * (1 / 1) + (1 / 3) * (2 / 3) + (1 / 3) * (3 / 4)
     assert abs(rt.pr_auc - round(exp, 6)) < 1e-6
 
     # perfect ranking -> AP = 1; all-one-class -> NULL
     perfect = spark.createDataFrame([(3, 1), (2, 1), (1, 0)], "s long, y long")
-    assert average_precision(perfect, "s", "y", True).collect()[0].pr_auc == 1.0
+    assert average_precision(perfect, "s", "y").collect()[0].pr_auc == 1.0
     allpos = spark.createDataFrame([(3, 1), (2, 1)], "s long, y long")
-    assert average_precision(allpos, "s", "y", True).collect()[0].pr_auc is None
+    assert average_precision(allpos, "s", "y").collect()[0].pr_auc is None
 
 
 def test_eb_shrunken_rates_pull_to_prior(spark):
@@ -2733,26 +2696,14 @@ def test_ks_two_sample_identical_and_shifted(spark):
 
     same = [("A", v) for v in range(50)] + [("B", v) for v in range(50)]
     df = spark.createDataFrame(same, "g string, v long")
-    out = ks_two_sample(df, "g", "v", "A", "B", bounded_values=True).collect()[0]
+    out = ks_two_sample(df, "g", "v", "A", "B").collect()[0]
     assert out["d_stat"] == 0.0 and out["p_value"] == 1.0
     # disjoint supports: D = 1, p ~ 0
     far = [("A", v) for v in range(50)] + [("B", v + 1000) for v in range(50)]
     df2 = spark.createDataFrame(far, "g string, v long")
-    out2 = ks_two_sample(df2, "g", "v", "A", "B", bounded_values=True).collect()[0]
+    out2 = ks_two_sample(df2, "g", "v", "A", "B").collect()[0]
     assert out2["d_stat"] == 1.0 and out2["p_value"] < 1e-5
     assert out2["n_control"] == 50 and out2["n_treatment"] == 50
-
-
-def test_ks_distributed_matches_bounded_window_path(spark):
-    from redpanda_ais_demo_spark.operators.stats import ks_two_sample
-
-    rows = [("A", (7 * i) % 23) for i in range(40)] + [
-        ("B", (5 * i) % 29) for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "g string, v long")
-    a = ks_two_sample(df, "g", "v", "A", "B", bounded_values=True).collect()[0]
-    b = ks_two_sample(df, "g", "v", "A", "B", bounded_values=False).collect()[0]
-    assert a.asDict() == b.asDict()
 
 
 def test_dft_bin_power_pure_tone_vs_constant(spark):
@@ -2789,7 +2740,7 @@ def test_nelson_aalen_hand_curve(spark):
         [(1, 1)] * 2 + [(1, 0)] * 2 + [(2, 1)] * 1 + [(2, 0)] * 2 + [(3, 0)] * 3
     )
     df = spark.createDataFrame(rows, "t long, ev int")
-    out = {r["t"]: r for r in nelson_aalen(df, "t", "ev", bounded_times=True).collect()}
+    out = {r["t"]: r for r in nelson_aalen(df, "t", "ev").collect()}
     assert out[1]["n_risk"] == 10 and out[1]["n_events"] == 2
     assert out[1]["cum_hazard"] == 0.2  # 2/10
     assert out[2]["n_risk"] == 6
@@ -2870,18 +2821,15 @@ def test_spearman_monotone_ties_and_paths(spark):
     # perfectly monotone but nonlinear (Pearson < 1, Spearman = 1)
     mono = [(i, i * i * i) for i in range(1, 30)]
     df = spark.createDataFrame(mono, "x long, y long")
-    assert spearman_corr(df, "x", "y", bounded_values=True).collect()[0]["rho"] == 1.0
+    assert spearman_corr(df, "x", "y").collect()[0]["rho"] == 1.0
     # reversed
     rev = [(i, -i) for i in range(1, 30)]
     df2 = spark.createDataFrame(rev, "x long, y long")
-    assert spearman_corr(df2, "x", "y", bounded_values=True).collect()[0]["rho"] == -1.0
-    # ties: distributed path == bounded-window path, and matches the
-    # textbook tie-corrected value for a small hand case
+    assert spearman_corr(df2, "x", "y").collect()[0]["rho"] == -1.0
+    # ties: matches the textbook tie-corrected value for a small hand case
     rows = [(1, 2), (2, 2), (3, 1), (4, 5), (5, 5), (6, 9)]
     df3 = spark.createDataFrame(rows, "x long, y long")
-    a = spearman_corr(df3, "x", "y", bounded_values=True).collect()[0]
-    b = spearman_corr(df3, "x", "y", bounded_values=False).collect()[0]
-    assert a.asDict() == b.asDict()
+    a = spearman_corr(df3, "x", "y").collect()[0]
     # hand check via numpy on midranks
     import numpy as np
 

@@ -62,6 +62,24 @@ def test_ntile_distributed_matches_spark_ntile(spark, n, k):
     assert got == want
 
 
+@pytest.mark.parametrize("k,desc", [(4, False), (7, True), (8, False)])
+def test_ntile_distributed_heavy_ties_and_nulls(spark, k, desc):
+    # 6 distinct values over 211 rows (tied runs straddle tile edges)
+    # plus NULL values, which sort by Spark's defaults in both frames
+    rows = [((i * 7919) % 6 if i % 50 else None, i) for i in range(211)]
+    df = spark.createDataFrame(rows, "v long, id long").repartition(8)
+    order = [F.col("v").desc() if desc else F.col("v").asc(), F.col("id").asc()]
+    got = {
+        r.id: r.tile
+        for r in ntile_distributed(df, order, k, num_partitions=5).collect()
+    }
+    want = {
+        r.id: r.tile
+        for r in df.withColumn("tile", F.ntile(k).over(Window.orderBy(*order))).collect()
+    }
+    assert got == want
+
+
 def test_rank_cumsum_plan_has_no_data_sized_single_partition_window(spark):
     df = _frame(spark)
     # pin=False exposes the raw plan: the data-sized sort must be
@@ -233,83 +251,6 @@ def test_quantiles_cont_grouped_matches_spark_percentile(spark):
     ):
         for p, v in zip((0.0, 0.5, 0.9, 1.0), r.q):
             want[(r.g, p)] = round(v, 9)
-    assert got == want
-
-
-@pytest.mark.parametrize("k,desc", [(4, False), (4, True), (7, True), (12, False)])
-def test_ntile_bounded_domain_matches_spark_ntile(spark, k, desc):
-    from redpanda_ais_demo_spark.operators.ordered import ntile_bounded_domain
-
-    # heavy ties: only 6 distinct values over 211 rows — the bounded-
-    # domain contract's home turf (freq=1-style runs straddling tiles)
-    rows = [((i * 7919) % 6, i) for i in range(211)]
-    df = spark.createDataFrame(rows, "v long, id long").repartition(8)
-    got = {
-        r.id: r.tile
-        for r in ntile_bounded_domain(
-            df, F.col("v"), [F.col("id").asc()], k, descending=desc
-        ).collect()
-    }
-    order = [F.col("v").desc() if desc else F.col("v").asc(), F.col("id").asc()]
-    want = {
-        r.id: r.tile
-        for r in df.withColumn("tile", F.ntile(k).over(Window.orderBy(*order))).collect()
-    }
-    assert got == want
-
-
-def test_ntile_bounded_domain_edge_shapes(spark):
-    from redpanda_ais_demo_spark.operators.ordered import ntile_bounded_domain
-
-    # fewer rows than tiles; single distinct value; NULL values present
-    rows = [(None, 0), (5, 1), (5, 2)]
-    df = spark.createDataFrame(rows, "v long, id long")
-    got = {
-        r.id: r.tile
-        for r in ntile_bounded_domain(
-            df, F.col("v"), [F.col("id").asc()], 8
-        ).collect()
-    }
-    order = [F.col("v").asc(), F.col("id").asc()]
-    want = {
-        r.id: r.tile
-        for r in df.withColumn("tile", F.ntile(8).over(Window.orderBy(*order))).collect()
-    }
-    assert got == want
-
-    with pytest.raises(ValueError, match="n_tiles"):
-        ntile_bounded_domain(df, F.col("v"), [F.col("id").asc()], 0)
-    with pytest.raises(ValueError, match="tiebreak"):
-        ntile_bounded_domain(df, F.col("v"), [], 4)
-
-
-def test_ntile_bounded_domain_enforces_max_domain(spark):
-    # The "bounded domain BY CONTRACT" promise is enforced: a data-scale
-    # column (every value distinct) raises past max_domain instead of
-    # silently collecting the whole count table to the driver.
-    from redpanda_ais_demo_spark.operators.ordered import ntile_bounded_domain
-
-    df = spark.range(200).select(F.col("id").alias("v"), F.col("id"))
-    # enforcement is in-plan (the operator is fully lazy): the job fails
-    # at execution, before any oversized broadcast
-    with pytest.raises(Exception, match="max_domain"):
-        ntile_bounded_domain(
-            df, F.col("v"), [F.col("id").asc()], 4, max_domain=100
-        ).collect()
-    # at or under the cap, the tiling still matches Spark's ntile
-    got = {
-        r.id: r.tile
-        for r in ntile_bounded_domain(
-            df, F.col("v"), [F.col("id").asc()], 4, max_domain=200
-        ).collect()
-    }
-    want = {
-        r.id: r.tile
-        for r in df.withColumn(
-            "tile",
-            F.ntile(4).over(Window.orderBy(F.col("v").asc(), F.col("id").asc())),
-        ).collect()
-    }
     assert got == want
 
 

@@ -847,7 +847,7 @@ BOUNDED_DOMAIN_UNPART_WINDOWS = {
     # (|vocabulary|^2 rows; the data-sized pass is the upstream groupBy)
     "holm_pairwise_value_by_type": "event-type pair table",
     # matching intervals built over one row per DISTINCT control
-    # covariate value (the ntile_bounded_domain argument); treated rows
+    # covariate value (a bounded domain by contract); treated rows
     # broadcast-join in, never sort (operators/stats.py:nearest_match_att)
     "psm_att_purchase_by_engagement": "distinct control covariate domain",
 }

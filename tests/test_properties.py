@@ -626,37 +626,6 @@ def test_ntile_distributed_property_matches_spark(spark, keys, k):
 
 @_settings
 @given(
-    st.lists(st.integers(min_value=-5, max_value=5), min_size=1, max_size=60),
-    st.integers(min_value=1, max_value=9),
-    st.booleans(),
-)
-def test_ntile_bounded_domain_matches_window_ntile_property(spark, vals, k, desc):
-    """Random heavy-tied domains, every n_tiles, both directions: the
-    bounded-domain tiling is row-for-row the Window ntile."""
-    from pyspark.sql import Window
-
-    from redpanda_ais_demo_spark.operators.ordered import ntile_bounded_domain
-
-    rows = [(v, i) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "v long, id long").repartition(4)
-    got = {
-        r.id: r.tile
-        for r in ntile_bounded_domain(
-            df, F.col("v"), [F.col("id").asc()], k, descending=desc
-        ).collect()
-    }
-    order = [F.col("v").desc() if desc else F.col("v").asc(), F.col("id").asc()]
-    want = {
-        r.id: r.tile
-        for r in df.withColumn(
-            "tile", F.ntile(k).over(Window.orderBy(*order))
-        ).collect()
-    }
-    assert got == want
-
-
-@_settings
-@given(
     st.lists(
         st.tuples(
             st.integers(min_value=1, max_value=3),   # key
@@ -765,7 +734,7 @@ def test_ks_d_and_p_bounded_and_match_bruteforce(spark, xs, ys):
 
     rows = [("A", v) for v in xs] + [("B", v) for v in ys]
     df = spark.createDataFrame(rows, "g string, v long")
-    out = ks_two_sample(df, "g", "v", "A", "B", bounded_values=True).collect()[0]
+    out = ks_two_sample(df, "g", "v", "A", "B").collect()[0]
     vals = sorted(set(xs) | set(ys))
     import bisect
 
@@ -791,7 +760,7 @@ def test_spearman_bounded_and_matches_numpy_midranks(spark, pts):
     from redpanda_ais_demo_spark.operators.stats import spearman_corr
 
     df = spark.createDataFrame(pts, "x long, y long")
-    out = spearman_corr(df, "x", "y", bounded_values=True).collect()[0]
+    out = spearman_corr(df, "x", "y").collect()[0]
 
     def midranks(v):
         order = sorted(range(len(v)), key=lambda i: v[i])

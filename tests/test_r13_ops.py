@@ -1,9 +1,9 @@
 """Round-13 operator tests: contract enforcement and new classes.
 
-The kendall_tau_b guard mirrors the ntile_bounded_domain /
-removal_effect_attribution precedent: a bounded-domain contract that
-was previously docstring-only must FAIL IN-PLAN when violated, before
-the quadratic subtree materializes.
+The kendall_tau_b guard is an in-plan ``raise_error`` on a domain-size
+bound: a bounded-domain contract that was previously docstring-only
+must FAIL IN-PLAN when violated, before the quadratic subtree
+materializes.
 """
 
 from __future__ import annotations

@@ -49,18 +49,13 @@ def main() -> None:
         os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
 
-    def drop_persistent() -> None:
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-
     samples: dict[str, list[float]] = {target: [], control: []}
     for _ in range(n):
         for q in (target, control):
             t0 = time.perf_counter()
             qs[q](spark, d).write.format("noop").mode("overwrite").save()
             samples[q].append(round(time.perf_counter() - t0, 3))
-            drop_persistent()
+            bench.release_pins(spark)
     print(
         json.dumps(
             {"samples": samples, "committed_bench_local": committed, "n": n}

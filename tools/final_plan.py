@@ -76,13 +76,7 @@ def main() -> None:
             f.write(final)
             f.write("\n")
         print(f"wrote {path}")
-        # free pinned lineage blocks between queries (the bench pattern)
-        try:
-            it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-            while it.hasNext():
-                it.next()._2().unpersist(False)
-        except Exception:
-            pass
+        bench.release_pins(spark)  # free pinned lineage between queries
     spark.stop()
 
 

@@ -239,17 +239,6 @@ def main() -> None:
     for sf, d in dirs.items():  # warm-up pass, untimed
         for name in run_queries:
             qs[name](spark, d).write.format("noop").mode("overwrite").save()
-    def drop_persistent_rdds() -> None:
-        # same deterministic cleanup as bench.py: free lazy-localCheckpoint
-        # blocks untimed so one query's pinned lineage can't pressure the
-        # next sample (the r11 bench-vs-scaling 20% instrument disagreement)
-        try:
-            it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-            while it.hasNext():
-                it.next()._2().unpersist(False)
-        except Exception:
-            pass
-
     for _ in range(N_ROUNDS):
         for sf, d in dirs.items():
             for name in run_queries:
@@ -258,7 +247,7 @@ def main() -> None:
                 samples.setdefault((name, sf), []).append(
                     round(time.perf_counter() - t0, 3)
                 )
-                drop_persistent_rdds()
+                bench.release_pins(spark)
 
     mins = {k: min(v) for k, v in samples.items()}
     slopes = {}

@@ -29,6 +29,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
 from redpanda_ais_demo_spark.dist import ensure_shipped  # noqa: E402
 from redpanda_ais_demo_spark.plans import get_queries  # noqa: E402
 from redpanda_ais_demo_spark.session import get_spark  # noqa: E402
@@ -77,13 +78,7 @@ def main() -> None:
             "py_row": plan.count("BatchEvalPython") // 2,
             "py_arrow": plan.count("ArrowEvalPython") // 2,
         }
-        # free pinned lineage blocks between queries (the bench pattern)
-        try:
-            it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-            while it.hasNext():
-                it.next()._2().unpersist(False)
-        except Exception:
-            pass
+        bench.release_pins(spark)  # free pinned lineage between queries
     with open(out_path, "w") as f:
         json.dump(rows, f, indent=1, sort_keys=True)
     flagged = {
